@@ -10,6 +10,10 @@ field names mirror the reference's pydantic models exactly
 api.py:162-198), so clients of the reference API can switch hosts without
 changing payload handling.
 
+/clean and /clean/batch requests of up to ``service.LOCAL_MAX_TEXTS``
+texts are answered in the driver with no Spark job; larger batches run as
+one distributed DataFrame pass (see the service module).
+
 What is deliberately NOT mirrored: the queue-based logging middleware
 (api.py:58-98, 228-247) — log transport belongs to the deployment (log4j /
 uvicorn config), not the engine (COVERAGE.md §K8) — and the reference's
@@ -67,7 +71,8 @@ def clean_batch_endpoint(
     """POST /clean/batch (api.py:284-311): BatchCleanResponse shape —
     {results, total, processing_ms}. Unlike the reference (a sequential
     list comprehension behind a 'vectorised' docstring, api.py:12,
-    301-304), the batch is ONE DataFrame pass."""
+    301-304), the batch is one pass: in the driver up to
+    ``service.LOCAL_MAX_TEXTS`` texts, one DataFrame pass above."""
     out = svc.clean_batch(texts, fuzzy=fuzzy)
     return {
         "results": out["results"],
@@ -128,10 +133,11 @@ def create_app(svc: CleaningService, fetch_page=None, landing_dir: str | None = 
     )
 
     # plain `def` handlers: FastAPI dispatches sync handlers to its
-    # threadpool, so a multi-second Spark job never parks the event loop
-    # (an `async def` handler would run the collect() ON the loop and
-    # stall /health and every concurrent request — the reference paid the
-    # same cost with run_in_executor, api.py:277-278)
+    # threadpool, so a Spark job or a driver-local pass never parks the
+    # event loop (an `async def` handler would run the collect() ON the
+    # loop and stall /health and every concurrent request — the reference
+    # paid the same cost with run_in_executor, api.py:277-278); one
+    # CleaningService serves concurrent requests (tests/test_service.py)
 
     @app.get("/health")
     def health() -> dict:

@@ -13,6 +13,11 @@ Two implementations of the location scan:
 - ``with_all_locations_fuzzy``: adds tier-3 fuzzy via posexplode →
   distinct-resolve-join (operators.lookup) → ordered re-aggregation.
   Costs one groupBy shuffle; used when fuzzy recall is worth it.
+
+``LocalLocationScan`` runs the fuzzy scan's literal path for a few texts
+already in the driver with no Spark job (the service's small requests);
+it shares the tokenization (``trip_tokens_expr``) and hit assembly
+(``literal_hits_expr``) with ``with_all_locations_fuzzy``.
 """
 
 from __future__ import annotations
@@ -184,6 +189,71 @@ def with_nlp_enrichment(
     ).drop("__txt")
 
 
+def trip_tokens_expr(text: Column) -> Column:
+    """The tokens F2 resolves: round-trip scrub → tokenize of the trimmed
+    text; empty for null/''."""
+    raw = F.trim(text.cast("string"))
+    return F.when(
+        text.isNull() | (raw == ""), F.array().cast("array<string>")
+    ).otherwise(tokenize_trip(scrub_round_trip(raw)))
+
+
+def literal_hits_expr(text: Column, m: Column | None) -> Column:
+    """F2's location list from a resolved (token → canonical) map (None =
+    empty mapping): each token looked up in text order, misses dropped,
+    order-preserving distinct; empty for null/''."""
+    raw = F.trim(text.cast("string"))
+    if m is None:
+        hits = F.array().cast("array<string>")
+    else:
+        dtoks = tokenize_trip(scrub_round_trip(raw))
+        hits = F.array_distinct(
+            F.filter(
+                F.transform(dtoks, lambda t: F.element_at(m, t)),
+                lambda x: x.isNotNull(),
+            )
+        )
+    return F.when(
+        text.isNull() | (raw == ""), F.array().cast("array<string>")
+    ).otherwise(hits)
+
+
+class LocalLocationScan:
+    """F2 with tier-3 fuzzy for texts already in the driver: the steps of
+    :func:`with_all_locations_fuzzy`'s literal path over driver-local
+    relations (``sources.local``), with no Spark job. The texts' tokens
+    are collected and deduplicated in the driver (a local relation takes
+    no distinct), the distinct tokens resolve through
+    ``lookup.LocalTokenResolver``, and :func:`literal_hits_expr` assembles
+    the hits from a map that each text carries for its own tokens (so the
+    expressions stay constant and are built once, here). Unlike the
+    distributed path this never switches to a join: callers bound the
+    input instead (``service.LOCAL_MAX_TEXTS``)."""
+
+    def __init__(self, index: dict[str, str], cutoff: float) -> None:
+        from .lookup import LocalTokenResolver
+
+        self.resolver = LocalTokenResolver(index, cutoff)
+        self.tokens = trip_tokens_expr(F.col("text")).alias("__toks")
+        self.hits = literal_hits_expr(
+            F.col("text"), F.map_from_arrays(F.col("__mk"), F.col("__mv"))
+        ).alias("all_locations")
+
+    def frame(self, spark, texts: list[str | None]) -> DataFrame:
+        """A driver-local (text, all_locations) frame, in input order."""
+        from ..sources.local import local_frame
+
+        df = local_frame(spark, [{"text": t} for t in texts], "text string")
+        toks = [r["__toks"] for r in df.select(self.tokens).collect()]
+        mapping = self.resolver.resolve(spark, list(dict.fromkeys(t for ts in toks for t in ts)))
+        rows = []
+        for text, ts in zip(texts, toks):
+            own = {t: mapping[t] for t in ts if t in mapping}
+            rows.append({"text": text, "__mk": list(own), "__mv": list(own.values())})
+        schema = "text string, __mk array<string>, __mv array<string>"
+        return local_frame(spark, rows, schema).select("text", self.hits)
+
+
 def with_all_locations_fuzzy(
     df: DataFrame,
     text_col: str,
@@ -223,35 +293,15 @@ def with_all_locations_fuzzy(
     index = index if index is not None else build_variant_index()
     cutoff = cutoff if cutoff is not None else FUZZY_SCORE_CUTOFF
     texts = df.select(F.col(text_col).alias("__ftxt")).distinct()
-    raw = F.trim(F.col("__ftxt").cast("string"))
-    tokens = F.when(
-        F.col("__ftxt").isNull() | (raw == ""), F.array().cast("array<string>")
-    ).otherwise(tokenize_trip(scrub_round_trip(raw)))
-
-    exploded = texts.select(F.col("__ftxt"), F.posexplode_outer(tokens).alias("__pos", "__tok"))
+    exploded = texts.select(
+        F.col("__ftxt"), F.posexplode_outer(trip_tokens_expr(F.col("__ftxt"))).alias("__pos", "__tok")
+    )
     mapping, caches = _distinct_token_mapping(exploded, "__tok", index, cutoff)
     m, is_literal = mapping_literal_probe(mapping)
     if is_literal:
         for c in caches:
             c.unpersist()
-        draw = F.trim(F.col(text_col).cast("string"))
-        if m is None:
-            hits = F.array().cast("array<string>")
-        else:
-            dtoks = tokenize_trip(scrub_round_trip(draw))
-            hits = F.array_distinct(
-                F.filter(
-                    F.transform(dtoks, lambda t: F.element_at(m, t)),
-                    lambda x: x.isNotNull(),
-                )
-            )
-        return df.withColumn(
-            out_col,
-            F.when(
-                F.col(text_col).isNull() | (draw == ""),
-                F.array().cast("array<string>"),
-            ).otherwise(hits),
-        )
+        return df.withColumn(out_col, literal_hits_expr(F.col(text_col), m))
 
     # join path: the plan references the cached cut points — hand them to
     # the caller for post-action unpersist (see lookup.resolve_tokens_fuzzy)

@@ -15,7 +15,11 @@ only Python hot path: an Arrow-batched pandas UDF applied via the
 distinct-resolve-join pattern (E4) — the Spark idiom for the reference's
 ``lru_cache`` insight: each *distinct* string is resolved exactly once, then
 joined back. At 100 TB the distinct token set is orders of magnitude smaller
-than the row count, and the resolved map is broadcast.
+than the row count, and the resolved map is broadcast. For a handful of
+tokens already in the driver (a small service request),
+:class:`LocalTokenResolver` runs the same cascade over a driver-local
+relation and scores the misses in the driver — no Spark job, no Python
+worker.
 
 Fuzzy scoring mirrors rapidfuzz ``token_sort_ratio`` (public algorithm):
 sort whitespace tokens, then Indel similarity = 2*LCS/(len_a+len_b) * 100.
@@ -225,14 +229,25 @@ def fuzzy_lookup_udf(index: dict[str, str] | None = None, cutoff: float = FUZZY_
     def _fuzzy(norms: pd.Series) -> pd.Series:
         @lru_cache(maxsize=8192)
         def one(norm: str | None) -> str | None:
-            if not norm or len(norm) < FUZZY_MIN_LEN:
-                return None
-            m = fuzzy_best_match(norm, variants, cutoff)
-            return index[m] if m is not None else None
+            return fuzzy_resolve(norm, index, variants, cutoff)
 
         return norms.map(one)
 
     return _fuzzy
+
+
+def fuzzy_resolve(
+    norm: str | None, index: dict[str, str], variants: list[str], cutoff: float
+) -> str | None:
+    """THE per-string tier-3 rule, shared by the pandas UDF and the
+    driver-local cascade (:class:`LocalTokenResolver`): a normalized string
+    shorter than FUZZY_MIN_LEN never fuzzy-matches; otherwise the best
+    variant's canonical, or None. ``variants`` is ``list(index)``, passed in
+    so callers build it once."""
+    if not norm or len(norm) < FUZZY_MIN_LEN:
+        return None
+    m = fuzzy_best_match(norm, variants, cutoff)
+    return index[m] if m is not None else None
 
 
 # ── E4: distinct-resolve-join over a tokens DataFrame ───────────────────────
@@ -255,6 +270,58 @@ def fuzzy_lookup_udf(index: dict[str, str] | None = None, cutoff: float = FUZZY_
 MAPPING_LITERAL_MAX = 512
 
 
+# ── The cascade, defined once for the distributed and the driver-local path ─
+#
+# Both paths resolve a frame of distinct raw tokens ``__t`` in three steps:
+# the cascade inputs (:func:`cascade_inputs`), tier-3 scoring of the
+# normalized forms the miss predicates select (:func:`fuzzy_misses`; the
+# pandas UDF or :func:`fuzzy_resolve` in the driver), then the cascade order
+# over the fuzzy results ``__fzn``/``__fzs`` (:func:`cascade_expr`).
+
+def cascade_inputs(index: dict[str, str]) -> list[tuple[str, Column]]:
+    """The cascade's inputs for a frame of raw tokens ``__t``, as (column,
+    expression) pairs in dependency order: the normalized token, the
+    op-prefix-stripped raw token and its normalized form, and the tier-1/2
+    result of each normalized form."""
+    stripped = strip_op_prefix(F.col("__t"))
+    return [
+        ("__norm", normalize_arabic(F.col("__t"))),
+        ("__sraw", stripped),
+        ("__snorm", normalize_arabic(stripped)),
+        ("__r12", tier12_expr(F.col("__norm"), index)),
+        ("__r12s", tier12_expr(F.col("__snorm"), index)),
+    ]
+
+
+def with_cascade_inputs(tokens: DataFrame, inputs: list[tuple[str, Column]]) -> DataFrame:
+    for name, c in inputs:
+        tokens = tokens.withColumn(name, c)
+    return tokens
+
+
+def fuzzy_misses() -> tuple[Column, Column]:
+    """The rows whose fuzzy result the cascade can reach: ``__norm`` is
+    scored when tiers 1-2 miss it, ``__snorm`` when they miss both forms
+    and the stripped raw token is non-empty."""
+    r12_miss = F.col("__r12").isNull()
+    return r12_miss, r12_miss & F.col("__r12s").isNull() & (F.col("__sraw") != "")
+
+
+def cascade_expr() -> Column:
+    """The cascade order (cleaner_v6.py:180-208, 236-243): t1/t2 of the
+    token, t3 of the token, then — only if the raw op-prefix-stripped token
+    is non-empty — t1/t2 and t3 of the stripped form. ``__fzn``/``__fzs``
+    are the fuzzy results for ``__norm``/``__snorm`` (null on a miss)."""
+    return F.coalesce(
+        F.col("__r12"),
+        F.col("__fzn"),
+        F.when(
+            F.col("__sraw") != "",
+            F.coalesce(F.col("__r12s"), F.col("__fzs")),
+        ),
+    )
+
+
 def _distinct_token_mapping(
     tokens_df: DataFrame,
     token_col: str,
@@ -272,8 +339,6 @@ def _distinct_token_mapping(
     then — only if the raw op-prefix-stripped token is non-empty — t1, t2,
     t3 of the stripped form (cleaner_v6.py:180-208, 236-243)."""
     fuzzy = fuzzy_lookup_udf(index, cutoff)
-    tok = F.col("__t")
-    stripped = strip_op_prefix(tok)
 
     # Distinct first, sized second: the distinct shuffle output is tiny in
     # bytes, so AQE coalesces it to ~1 partition — which would run the
@@ -292,12 +357,7 @@ def _distinct_token_mapping(
     n_distinct = distinct_toks.count()
     cascade_parts = max(1, min(target, n_distinct // 64 + 1))
     d = (
-        distinct_toks.repartition(cascade_parts)
-        .withColumn("__norm", normalize_arabic(tok))
-        .withColumn("__sraw", stripped)
-        .withColumn("__snorm", normalize_arabic(stripped))
-        .withColumn("__r12", tier12_expr(F.col("__norm"), index))
-        .withColumn("__r12s", tier12_expr(F.col("__snorm"), index))
+        with_cascade_inputs(distinct_toks.repartition(cascade_parts), cascade_inputs(index))
         # Materialize once: this frame feeds THREE consumers (the two miss
         # branches and the final mapping), and two of them are broadcast
         # builds — each broadcast executes its subtree independently, so
@@ -320,12 +380,9 @@ def _distinct_token_mapping(
     # worker dispatch, not scoring, dominates. ≥64 tokens per worker before
     # adding another.
     fuzzy_parts = cascade_parts
-    miss_n = d.filter(F.col("__r12").isNull()).select(F.col("__norm").alias("__k"))
-    miss_s = d.filter(
-        F.col("__r12").isNull()
-        & F.col("__r12s").isNull()
-        & (F.col("__sraw") != "")
-    ).select(F.col("__snorm").alias("__k"))
+    norm_miss, snorm_miss = fuzzy_misses()
+    miss_n = d.filter(norm_miss).select(F.col("__norm").alias("__k"))
+    miss_s = d.filter(snorm_miss).select(F.col("__snorm").alias("__k"))
     fz = (
         miss_n.union(miss_s)
         .distinct()
@@ -371,15 +428,7 @@ def _distinct_token_mapping(
         )
         .drop("__k2")
     )
-    cascade = F.coalesce(
-        F.col("__r12"),
-        F.col("__fzn"),
-        F.when(
-            F.col("__sraw") != "",
-            F.coalesce(F.col("__r12s"), F.col("__fzs")),
-        ),
-    )
-    mapping = d.select("__t", cascade.alias("__canonical")).filter(
+    mapping = d.select("__t", cascade_expr().alias("__canonical")).filter(
         F.col("__canonical").isNotNull()
     )
     # hand the cut-point frames back so the caller can unpersist them the
@@ -410,6 +459,59 @@ def canonical_map_literal(mapping_rows: list) -> Column | None:
     keys = [r["__t"] for r in mapping_rows]
     vals = [r["__canonical"] for r in mapping_rows]
     return F.map_from_arrays(F.lit(keys), F.lit(vals))
+
+
+class LocalTokenResolver:
+    """The driver-side twin of :func:`_distinct_token_mapping`, for a
+    handful of distinct tokens already in the driver: the same cascade
+    inputs, miss predicates and cascade order, over driver-local relations
+    (``sources.local``), with the fuzzy misses scored in the driver by
+    :func:`fuzzy_resolve` instead of the pandas UDF. Only Project and
+    Filter steps run over the relations, which Catalyst folds into the
+    local data, so no Spark job runs and no Python worker starts.
+
+    Per-call data travels in the relations, never in the expressions, so
+    the expressions are built once here (each build is dozens of py4j
+    calls) and reused by every call, from any thread."""
+
+    def __init__(self, index: dict[str, str], cutoff: float) -> None:
+        self.index, self.cutoff = index, cutoff
+        self.variants = list(index)
+        self.inputs = cascade_inputs(index)
+        norm_miss, snorm_miss = fuzzy_misses()
+        self.probe = [
+            "__t", "__norm", "__sraw", "__snorm", "__r12", "__r12s",
+            F.when(norm_miss, F.col("__norm")).alias("__kn"),
+            F.when(snorm_miss, F.col("__snorm")).alias("__ks"),
+        ]
+        self.canonical = cascade_expr().alias("__canonical")
+        self.resolved = F.col("__canonical").isNotNull()
+
+    def resolve(self, spark, tokens: list[str]) -> dict[str, str]:
+        """(token → canonical) for the resolved ones of distinct ``tokens``."""
+        from ..sources.local import local_frame
+
+        d = local_frame(spark, [{"__t": t} for t in tokens], "__t string")
+        rows = with_cascade_inputs(d, self.inputs).select(*self.probe).collect()
+        keys = {k for r in rows for k in (r["__kn"], r["__ks"]) if k is not None}
+        fz = {k: fuzzy_resolve(k, self.index, self.variants, self.cutoff) for k in keys}
+        # the fuzzy results meet the tokens by normalized form, as the
+        # distributed path's broadcast joins on __norm/__snorm do
+        scored = local_frame(
+            spark,
+            [
+                {
+                    "__t": r["__t"], "__sraw": r["__sraw"], "__r12": r["__r12"],
+                    "__r12s": r["__r12s"], "__fzn": fz.get(r["__norm"]),
+                    "__fzs": fz.get(r["__snorm"]),
+                }
+                for r in rows
+            ],
+            "__t string, __sraw string, __r12 string, __r12s string, "
+            "__fzn string, __fzs string",
+        )
+        out = scored.select("__t", self.canonical).filter(self.resolved).collect()
+        return {r["__t"]: r["__canonical"] for r in out}
 
 
 def resolve_tokens_fuzzy(

@@ -1,7 +1,11 @@
 """SparkSession factory.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config choice is made for a real multi-executor cluster at ~100 TB:
+Local runs use ``local[$SPARK_GRAFT_CPUS]`` and a driver heap of
+``$SPARK_GRAFT_DRIVER_MEM``; unset, they default to the CPUs this process
+may run on and half the host's memory. Python workers get the package root
+prepended to the ``PYTHONPATH`` they inherit, so callers need not set it.
+Every other config choice is made for a real multi-executor cluster at
+~100 TB:
 
 - AQE on: runtime shuffle-partition coalescing, broadcast-join conversion and
   skew-join splitting replace hand-tuned partition counts at scale.
@@ -18,13 +22,35 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the package: Python workers import it from here
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_cpus() -> int:
+    """The CPUs this process may run on (its affinity mask, which a
+    container's cpuset narrows), not the host's count."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_mem() -> str:
+    """Half of the host's ``MemTotal``, at least 1 GiB, as a JVM size."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "2g"
+    return f"{max(1024, kb // 2048)}m"
+
 
 def get_spark(
     app_name: str = "aldean-spark",
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
+    worker_path = os.pathsep.join(
+        [PACKAGE_ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    )
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus)))
     # Shuffle/spill scratch: prefer tmpfs when present — the default /tmp
     # sits on a virtual disk whose latency varies with host neighbors, and
@@ -56,7 +82,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
+        # SparkContext hands spark.executorEnv.* to every Python worker it
+        # starts
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

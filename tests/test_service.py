@@ -3,7 +3,22 @@ over the landing source, stats."""
 
 from __future__ import annotations
 
-from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.service import CleaningService
+import random
+import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
+
+from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.plans.trips import GOLDEN_TEXTS
+from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.service import (
+    LOCAL_MAX_TEXTS,
+    CleaningService,
+    clean_texts_df,
+)
+from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
+    LOCATIONS,
+)
 
 
 def test_clean_one_readme_golden(spark):
@@ -138,7 +153,7 @@ def test_api_endpoint_functions_reference_shapes(spark, tmp_path):
             api.create_app(svc)
 
 
-def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch):
+def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_path):
     """ADVICE r4: on the broadcast-join path the cascade's cut-point caches
     used to outlive the request in a long-lived service. clean_batch's
     terminal collect must now unpersist them — zero persisted RDDs after
@@ -157,6 +172,23 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch):
     svc = CleaningService(spark)
     out = svc.clean_batch(["من الهرم الى المطار", "مطارر", None])
     assert len(out["results"]) == 3
+    assert storage_ids() <= before
+
+    # a small batch is now cleaned in the driver and never reaches the join
+    # path; a batch above the local size limit and run_cycle still thread
+    # caches_out through it
+    big = [f"من الهرم الى المطار {i}" for i in range(LOCAL_MAX_TEXTS)] + ["مطارر", None]
+    out = svc.clean_batch(big)
+    assert len(out["results"]) == len(big)
+    assert out["results"][-2]["main_location"] == "Cairo Airport"
+    assert storage_ids() <= before
+
+    def fetch(page: int):
+        rows = [{"serialId": 1, "confirm_status": True, "end_location": "مطارر القاهره"}]
+        return rows if page == 0 else []
+
+    cyc = svc.run_cycle(fetch, str(tmp_path / "cycle"))
+    assert cyc["records"] == 1
     assert storage_ids() <= before
 
     # literal path too (resolve_tokens_fuzzy unpersists internally — that
@@ -193,3 +225,175 @@ def test_api_fuzzy_default_defers_to_service_config(spark):
     assert svc.seen == [None, None]
     api.clean_endpoint(svc, "x", fuzzy=False)
     assert svc.seen[-1] is False
+
+
+# ── driver-local evaluation of small requests ───────────────────────────────
+
+def _near_misses(seed: int, n: int) -> list[str]:
+    """Seeded misspelt trip texts: a dictionary variant with one typist's
+    edit (doubled, dropped or swapped letter, alef/ta-marbuta/tatweel
+    forms), an optional operational prefix and filler words around it."""
+    rng = random.Random(seed)
+    variants = [v for vs in LOCATIONS.values() for v in vs]
+    out = []
+    for _ in range(n):
+        w = rng.choice(variants)
+        if len(w) >= 3:
+            i = rng.randrange(1, len(w) - 1)
+            w = rng.choice([
+                w[:i] + w[i] + w[i:],
+                w[:i] + w[i + 1:],
+                w[: i - 1] + w[i] + w[i - 1] + w[i + 1:],
+                w.replace("ا", "أ", 1),
+                w[:i] + "ـ" + w[i:],
+                w[:-1] + "ه" if w.endswith("ة") else w + "ه",
+            ])
+        parts = [rng.choice(["", "تشغيل", "توصيل", "رايح", "near"]), w]
+        if rng.random() < 0.4:
+            parts += [rng.choice(["و", "+", "،"]), rng.choice(variants)]
+        if rng.random() < 0.3:
+            parts.append(rng.choice(["وعوده", "ذهاب وعودة", "12 ساعه"]))
+        out.append(" ".join(p for p in parts if p))
+    return out
+
+
+def _answers(out: dict) -> list[tuple]:
+    return [
+        (r["original"], r["main_location"], r["all_locations"], r["trip_type"])
+        for r in out["results"]
+    ]
+
+
+def _reference(spark, svc: CleaningService, texts, fuzzy: bool) -> dict:
+    """clean_texts_df over a createDataFrame of ``texts`` (the distributed
+    path), keyed by text."""
+    caches: list = []
+    df = spark.createDataFrame([(t,) for t in dict.fromkeys(texts)], "text string")
+    rows = clean_texts_df(
+        df, "text", fuzzy, svc.index, cutoff=svc.fuzzy_cutoff, caches_out=caches
+    ).collect()
+    for c in caches:
+        c.unpersist(blocking=True)
+    return {
+        r["text"]: (r["text"], r["main_location"], list(r["all_locations"]), r["trip_type"])
+        for r in rows
+    }
+
+
+def _jobs(spark, fn, tag: str):
+    """(fn's result, the Spark jobs it ran). A control job in a second
+    group follows it: status events arrive in order, so once the control
+    job is listed every job ``fn`` ran is listed too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"test-service-{tag}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(group + "-control", "control")
+        sc.parallelize([1], 1).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(group + "-control") and time.monotonic() < deadline:
+            time.sleep(0.02)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_local_path_matches_clean_texts_df(spark):
+    """Requests up to LOCAL_MAX_TEXTS are cleaned in the driver; every
+    answer must equal the distributed clean_texts_df over createDataFrame:
+    the golden corpus, seeded near-miss spellings, None/''/digits-only,
+    the empty batch, a batch of exactly the limit (local) and one of the
+    limit plus one (distributed)."""
+    svc = CleaningService(spark)
+    edge = [None, "", "   ", "12345", "٠١٢٣", "x"]
+    messy = _near_misses(7, 120)
+    at_limit = (list(GOLDEN_TEXTS) + edge + messy + _near_misses(11, LOCAL_MAX_TEXTS))[
+        :LOCAL_MAX_TEXTS
+    ]
+    over = at_limit + ["رايح مطاار القاهره"]
+    ref = _reference(spark, svc, over, fuzzy=True)
+
+    assert svc.clean_batch([])["results"] == []
+    with pytest.raises(TypeError):
+        svc.clean_batch(["الهرم", 5])
+    for batch in (list(GOLDEN_TEXTS), edge, messy, at_limit, over):
+        got = _answers(svc.clean_batch(batch))
+        assert got == [ref[t] for t in batch]
+    for t in list(GOLDEN_TEXTS[:4]) + edge[:4] + messy[:4]:
+        one = svc.clean_one(t)
+        assert (one["original"], one["main_location"], one["all_locations"], one["trip_type"]) == ref[t]
+
+    # tiers 1-2 only (fuzzy off) take the same local path
+    ref12 = _reference(spark, svc, list(GOLDEN_TEXTS) + messy, fuzzy=False)
+    got = _answers(svc.clean_batch(list(GOLDEN_TEXTS) + messy, fuzzy=False))
+    assert got == [ref12[t] for t in list(GOLDEN_TEXTS) + messy]
+
+
+def test_small_requests_run_no_spark_job(spark):
+    """/clean and a small /clean/batch run no Spark job at all (fuzzy on:
+    the tier-3 misses are scored in the driver); a batch above the limit
+    takes the distributed path and does."""
+    svc = CleaningService(spark)
+    out, jobs = _jobs(spark, lambda: svc.clean_one("تشغيل 12 ساعه مطارررر القاهره وعوده"), "one")
+    assert out["main_location"] == "Cairo Airport"
+    assert jobs == 0
+    out, jobs = _jobs(spark, lambda: svc.clean_batch(list(GOLDEN_TEXTS[:8]) + [None, ""]), "batch")
+    assert len(out["results"]) == 10
+    assert jobs == 0
+    _, jobs = _jobs(spark, lambda: svc.clean_batch(["الهرم"] * (LOCAL_MAX_TEXTS + 1)), "big")
+    assert jobs > 0
+
+
+def test_concurrent_requests_match_serial_answers(spark):
+    """8 threads issuing mixed /clean and /clean/batch calls on one
+    CleaningService get exactly the serial answers and leave no persisted
+    RDDs behind."""
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark import api
+
+    def storage_ids():
+        return {x.id() for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = storage_ids()
+    svc = CleaningService(spark)
+    pool = list(GOLDEN_TEXTS) + _near_misses(5, 40) + [None, "", "12345"]
+    rng = random.Random(13)
+    reqs = [
+        ("clean", [rng.choice(pool)]) if rng.random() < 0.5
+        else ("batch", rng.sample(pool, rng.randint(2, 8)))
+        for _ in range(32)
+    ]
+
+    def call(req):
+        kind, texts = req
+        if kind == "clean":
+            r = api.clean_endpoint(svc, texts[0])
+            return [(r["original"], r["main_location"], r["all_locations"], r["trip_type"])]
+        return _answers({"results": api.clean_batch_endpoint(svc, texts)["results"]})
+
+    serial = [call(r) for r in reqs]
+    # more threads than cores, switching often, to widen any race window
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            concurrent = list(ex.map(call, reqs, timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    assert concurrent == serial
+    assert storage_ids() <= before
+
+
+@pytest.mark.parametrize("fuzzy_enabled", [True, False])
+def test_local_path_follows_swapped_settings(spark, fuzzy_enabled):
+    """The driver-local expressions are built once per service; swapping
+    its dictionary or cutoff afterwards must still take effect."""
+    svc = CleaningService(spark, fuzzy_enabled=fuzzy_enabled)
+    assert svc.clean_one("مكان الاختبار")["main_location"] == "مكان الاختبار"
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
+        build_variant_index,
+    )
+
+    svc.index = build_variant_index({"TestPlace": ["مكان الاختبار"]})
+    assert svc.clean_one("مكان الاختبار")["main_location"] == "TestPlace"
