@@ -10,9 +10,10 @@ field names mirror the reference's pydantic models exactly
 api.py:162-198), so clients of the reference API can switch hosts without
 changing payload handling.
 
-/clean and /clean/batch requests of up to ``service.LOCAL_MAX_TEXTS``
-texts are answered in the driver with no Spark job; larger batches run as
-one distributed DataFrame pass (see the service module).
+/clean and /clean/batch requests of up to
+``operators.extract.LOCAL_MAX_TEXTS`` texts are answered in the driver
+with no Spark job; larger batches run as one distributed DataFrame pass
+(see the service module).
 
 What is deliberately NOT mirrored: the queue-based logging middleware
 (api.py:58-98, 228-247) — log transport belongs to the deployment (log4j /
@@ -72,7 +73,8 @@ def clean_batch_endpoint(
     {results, total, processing_ms}. Unlike the reference (a sequential
     list comprehension behind a 'vectorised' docstring, api.py:12,
     301-304), the batch is one pass: in the driver up to
-    ``service.LOCAL_MAX_TEXTS`` texts, one DataFrame pass above."""
+    ``operators.extract.LOCAL_MAX_TEXTS`` texts, one DataFrame pass
+    above."""
     out = svc.clean_batch(texts, fuzzy=fuzzy)
     return {
         "results": out["results"],

@@ -14,9 +14,13 @@ Two implementations of the location scan:
   distinct-resolve-join (operators.lookup) → ordered re-aggregation.
   Costs one groupBy shuffle; used when fuzzy recall is worth it.
 
-``LocalLocationScan`` runs the fuzzy scan's literal path for a few texts
-already in the driver with no Spark job (the service's small requests);
-it shares the tokenization (``trip_tokens_expr``) and hit assembly
+``LocalCleaner`` is the driver-local NLP block (locs + clean location +
+trip type) for up to ``LOCAL_MAX_TEXTS`` texts already in the driver,
+with no Spark job: the service's small requests and
+``with_nlp_enrichment``'s distinct texts (up to
+``ENRICH_LOCAL_MAX_TEXTS``). Its fuzzy scan,
+``LocalLocationScan``, runs the fuzzy scan's literal path and shares the
+tokenization (``trip_tokens_expr``) and hit assembly
 (``literal_hits_expr``) with ``with_all_locations_fuzzy``.
 """
 
@@ -26,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arabic import (
+    _GEN_KEYED_MEMOS,
+    _gateway_generation,
     is_admin,
     is_airport,
     is_nile,
@@ -36,8 +42,22 @@ from ..functions.arabic import (
     title_first_two_words,
     tokenize_trip,
 )
+from ..sources.local import local_frame
 
 _DIGITS_ONLY = "^[0-9٠-٩]+$"
+
+# The most texts one :class:`LocalCleaner` call takes: a /clean or
+# /clean/batch request of up to this many texts runs in the driver with no
+# Spark job. Set at half the crossover with the service's distributed path
+# (service module docstring).
+LOCAL_MAX_TEXTS = 4096
+
+# with_nlp_enrichment enriches in the driver up to this many distinct texts,
+# by fuzzy setting; above, its distributed path wins. Set at about half the
+# crossover measured against that path (with_nlp_enrichment docstring):
+# without the fuzzy tier the distributed path starts no Python worker, so it
+# overtakes the driver sooner.
+ENRICH_LOCAL_MAX_TEXTS = {True: 2048, False: 1024}
 
 
 def extract_all_locations_expr(text: Column, index: dict[str, str] | None = None) -> Column:
@@ -136,12 +156,71 @@ def with_nlp_enrichment(
     not just the dictionary lookup. Every output is a pure function of the
     text, so per-distinct resolution is semantics-preserving.
 
-    Scale: trip texts are short human-entered strings with heavy repetition,
-    so the distinct side is orders of magnitude smaller than the fact side
-    and AQE broadcast-converts the join-back; the regex-heavy NLP chain runs
-    |distinct| times instead of |rows| times. If a workload ever has
-    near-unique texts, inline ``extract_all_locations_expr`` instead (the
-    expression path needs no shuffle at all)."""
+    Local path: a probe, ``distinct().limit(limit + 1).collect()`` with
+    ``limit = ENRICH_LOCAL_MAX_TEXTS[fuzzy]`` (2,048 fuzzy, 1,024 not),
+    fetches the distinct texts (cast to string, the type every expression
+    below reads them as). When there are at most ``limit`` of them,
+    :class:`LocalCleaner` enriches them in the driver — no Python worker,
+    no cached cut point, no further Spark job — and the
+    (text, locs, clean location, trip type) rows join back as a broadcast
+    driver-local relation, null-safe on the text. The plan this returns
+    then holds no enrichment work at all.
+
+    The probe is a Spark job run when this function is called, not when
+    the returned plan runs: every caller (all of ``plans.trips``) pays it
+    to build a plan, even one that is only explained. On the local path
+    the result is a snapshot of the source at that moment; a text that
+    appears in the source later joins to null locs.
+
+    Crossover, 4 vCPUs, build + noop write, best of 3 interleaved runs,
+    local against distributed, each over N distinct texts: fuzzy on,
+    golden texts with a unique number appended 4,096: 2.0 vs 3.6 s,
+    8,192: 3.4 vs 4.4 s, 16,384: 6.6 vs 4.1 s; random 3-word texts (every
+    token unique) 2,000: 1.3 vs 2.5 s, 4,096: 2.3 vs 2.8 s, 8,192: 4.2 vs
+    3.3 s. Fuzzy off, golden + number 1,000: 0.80 vs 1.15 s, 2,000: 0.91
+    vs 0.96 s, 4,096: 1.24 vs 1.05 s; random texts 1,000: 0.44 vs 0.61 s,
+    2,000: 0.81 vs 0.75 s. The probe took 0.10-0.20 s at every size.
+
+    Above the limit the distributed path below runs, paying the probe as
+    one extra distinct pass: 0.26-0.36 s of a 9-13 s ``trips_fuzzy_stress``
+    at sf0.1 (100,000 distinct texts) on the same host, measured by hand;
+    no benchmark workload reaches this path. Trip texts are short human-entered strings
+    with heavy repetition, so the distinct side is orders of magnitude
+    smaller than the fact side and AQE broadcast-converts the join-back;
+    the regex-heavy NLP chain runs |distinct| times instead of |rows|
+    times. If a workload ever has near-unique texts, inline
+    ``extract_all_locations_expr`` instead (the expression path needs no
+    shuffle at all). ``caches_out`` receives the fuzzy cascade's cut-point
+    caches on that path only."""
+    from ..sources.dictionary import _default_index
+    from .lookup import FUZZY_SCORE_CUTOFF
+
+    spark = df.sparkSession
+    key = df[text_col].cast("string")
+    limit = ENRICH_LOCAL_MAX_TEXTS[bool(fuzzy)]
+    distinct = [
+        r["__txt"] for r in df.select(key.alias("__txt")).distinct().limit(limit + 1).collect()
+    ]
+    if len(distinct) <= limit:
+        cleaner = local_cleaner(
+            index if index is not None else _default_index(), FUZZY_SCORE_CUTOFF
+        )
+        rows = [
+            {
+                "__txt": r["text"], locs_col: list(r["all_locations"]),
+                clean_col: r["main_location"], type_col: r["trip_type"],
+            }
+            for r in cleaner.clean(spark, distinct, fuzzy)
+        ]
+        texts = local_frame(
+            spark, rows,
+            f"__txt string, `{locs_col}` array<string>, `{clean_col}` string, "
+            f"`{type_col}` string",
+        )
+        return df.join(
+            F.broadcast(texts), key.eqNullSafe(texts["__txt"]), how="left"
+        ).drop("__txt")
+
     # Rebalance after the distinct: its output is small in bytes, so AQE
     # coalesces to ~1 partition, which would run the regex-heavy NLP chain
     # below single-threaded when the distinct side is large (the all-unique
@@ -228,7 +307,7 @@ class LocalLocationScan:
     the hits from a map that each text carries for its own tokens (so the
     expressions stay constant and are built once, here). Unlike the
     distributed path this never switches to a join: callers bound the
-    input instead (``service.LOCAL_MAX_TEXTS``)."""
+    input instead (``LOCAL_MAX_TEXTS``)."""
 
     def __init__(self, index: dict[str, str], cutoff: float) -> None:
         from .lookup import LocalTokenResolver
@@ -241,8 +320,6 @@ class LocalLocationScan:
 
     def frame(self, spark, texts: list[str | None]) -> DataFrame:
         """A driver-local (text, all_locations) frame, in input order."""
-        from ..sources.local import local_frame
-
         df = local_frame(spark, [{"text": t} for t in texts], "text string")
         toks = [r["__toks"] for r in df.select(self.tokens).collect()]
         mapping = self.resolver.resolve(spark, list(dict.fromkeys(t for ts in toks for t in ts)))
@@ -252,6 +329,51 @@ class LocalLocationScan:
             rows.append({"text": text, "__mk": list(own), "__mv": list(own.values())})
         schema = "text string, __mk array<string>, __mv array<string>"
         return local_frame(spark, rows, schema).select("text", self.hits)
+
+
+class LocalCleaner:
+    """The NLP block (all_locations, main_location, trip_type) for texts
+    already in the driver, with no Spark job: the texts become a
+    driver-local relation, tiers 1-2 run as the same Column expressions,
+    tier-3 misses are scored in the driver (:class:`LocalLocationScan`),
+    and only Project steps run over the relation, so Catalyst evaluates
+    all of it in the driver. Holds no per-call state: get one from
+    :func:`local_cleaner` and share it across threads."""
+
+    def __init__(self, index: dict[str, str], cutoff: float) -> None:
+        self.scan = LocalLocationScan(index, cutoff)
+        self.tier12 = extract_all_locations_expr(F.col("text"), index).alias("all_locations")
+        t, locs = F.col("text"), F.col("all_locations")
+        self.outputs = [
+            "text", "all_locations",
+            end_location_clean_expr(t, locs).alias("main_location"),
+            categorize_trip_type_expr(t, locs).alias("trip_type"),
+        ]
+
+    def clean(self, spark, texts: list[str | None], fuzzy: bool) -> list:
+        """Result rows in input order; at most ``LOCAL_MAX_TEXTS`` texts."""
+        if fuzzy:
+            df = self.scan.frame(spark, texts)
+        else:
+            df = local_frame(spark, [{"text": t} for t in texts], "text string")
+            df = df.select("text", self.tier12)
+        return df.select(*self.outputs).collect()
+
+
+# (gateway generation, dictionary contents, cutoff) → LocalCleaner: its
+# expressions are hundreds of py4j calls (~70 ms a build), and every
+# trips report and every service shares the same few settings
+_CLEANERS: dict[tuple, LocalCleaner] = {}
+_GEN_KEYED_MEMOS.append(_CLEANERS)
+
+
+def local_cleaner(index: dict[str, str], cutoff: float) -> LocalCleaner:
+    """The shared :class:`LocalCleaner` for ``index`` and ``cutoff``."""
+    key = (_gateway_generation(), tuple(index.items()), cutoff)
+    cleaner = _CLEANERS.get(key)
+    if cleaner is None:
+        cleaner = _CLEANERS[key] = LocalCleaner(index, cutoff)
+    return cleaner
 
 
 def with_all_locations_fuzzy(

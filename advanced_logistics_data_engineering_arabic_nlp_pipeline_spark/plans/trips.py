@@ -11,16 +11,27 @@ the entire pipeline — coercions, scalar derivations, NLP extraction,
 classification, array ops, aggregations — is value-hash-checked end to end.
 
 Scale design:
-- The NLP enrichment is pure column expressions → narrow transformations,
-  zero shuffles until the analytics aggregations.
+- The NLP enrichment runs once per distinct text
+  (``extract.with_nlp_enrichment``). Up to
+  ``extract.ENRICH_LOCAL_MAX_TEXTS`` distinct texts (2,048 fuzzy, 1,024
+  not; the golden corpus has 32) are enriched in the driver after one
+  distinct probe and broadcast-joined back as a local relation, so a
+  report's plan holds no NLP work, no Python UDF and no cached cut point;
+  more distinct texts take the distributed cascade. No builder here
+  persists anything or asks its caller to ``clearCache()``.
+- Building is eager: the probe is a Spark job that every builder here
+  runs when called, so code that only builds a plan (registry
+  enumeration, explain capture) pays one job per builder. On the local
+  path the built plan carries the enrichment as a snapshot of the source
+  at build time.
 - ``location_pairs`` generates pair structs with array expressions
   (flatten/transform) instead of the reference's iterrows loop
   (Main.py:244-255) — the explode is the only wide step, and the
   pairs-per-row bound (≤ C(5,2)=10) caps blowup.
 - Percentage denominators are single-row aggregates broadcast-joined back
   (reference recomputes len(df) driver-side, Main.py:262-263).
-- The fuzzy variant adds one groupBy shuffle keyed by trip id (bounded by
-  row count) and the E4 distinct-fuzzy map join (bounded by distinct tokens).
+- Above the local limit, the fuzzy variant adds the E4 distinct-fuzzy
+  token mapping (bounded by distinct tokens) to the distinct-text pass.
 """
 
 from __future__ import annotations
@@ -183,10 +194,13 @@ def trips_fuzzy_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents the risk): every end_location is made unique with a per-row
     suffix, so |distinct texts| == |rows| and the distinct-resolve
     optimization buys nothing — the full 3-tier NLP (fuzzy included) runs
-    once per row. Benched at sf0.1 so the claimed fallback behavior has a
-    recorded number instead of an assertion. Rows-only by design (fuzzy tier
-    has no SQL mirror); the aggregate output keeps the bench noop sink from
-    skipping any of the per-row work."""
+    once per row. Up to ``extract.ENRICH_LOCAL_MAX_TEXTS[True]`` rows it
+    runs in the driver; benched at sf0.1 (100,000 rows) it takes the
+    distributed path after the extra distinct probe, so the claimed
+    fallback behavior has a recorded number instead of an assertion.
+    Rows-only by design (fuzzy tier has no SQL mirror); the aggregate
+    output keeps the bench noop sink from skipping any of the per-row
+    work."""
     df = trips_raw(spark, sf_dir).withColumn(
         "end_location",
         F.concat_ws(" ", F.col("end_location"), F.col("#").cast("string")),
@@ -209,30 +223,14 @@ _VALID_LOC = lambda x: x.isNotNull() & (F.trim(x) != "") & (x != "Undefined")  #
 def location_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H1/H2 pair analysis (Main.py:234-263): unordered sorted pairs from the
     per-trip location set, frequency/revenue/percentage-of-multi-trips."""
-    # NOTE: no persist here — the denominator branch gets column-pruned to
-    # just the locs expression, which is cheaper than materializing the full
-    # 25-column stage (measured: persist was ~2× slower at sf0.1)
-    # Slim 3-column cut point (r14): the frequency/revenue branch AND the
-    # percentage denominator both need the NLP-enriched multi-trip slice;
-    # unpinned, the two subtrees each ran the full enrichment join (the
-    # r1-era note above rejected persisting the 25-COLUMN master — 2×
-    # slower; pinning only (#, sale_price, locs) measured 2.25 → 1.88 s
-    # interleaved same-session at sf0.1, output identical). At scale: one
-    # enrichment pass instead of two. Released by the registered-query
-    # cache contract (bench/driver clearCache between queries).
+    # both the pairs branch and the percentage denominator read the
+    # enriched multi-trip slice; the enrichment is a broadcast join against
+    # a driver-local relation, so reading it twice costs two cheap scans
     m = (
         _master_stage(spark, sf_dir)
         .filter(F.col("num_locations") >= 2)
         .select("#", "sale_price", "locs")
-        .persist()
     )
-    # Eager fill (r15, ADVICE r14): one consumer of this cut point is an
-    # ASYNC broadcast build (crossJoin(F.broadcast(total)) below) — left
-    # lazy, the broadcast-build job and the main scan race to fill the
-    # cache and can each run the full NLP-enrichment pass (the
-    # unfilled-lazy-cache race lookup.py documents). Filling synchronously
-    # makes the single-enrichment-pass win deterministic for one cheap job.
-    m.count()
     total = m.select(F.count("*").alias("__tm"))
     # bind `valid` as a LAMBDA VARIABLE (transform-over-singleton, the
     # shingles_expr pattern) so the sort+filter evaluates once per row: a
@@ -281,11 +279,9 @@ def location_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H3/H4 location statistics (Main.py:266-290): melt Location_1..5,
     visits/revenue/primary-count + derived ratios. Visit_Percentage's
     denominator is ALL trips, not melted rows (Main.py:290)."""
-    # Same slim cut point as location_pairs (r14): the melt branch and the
-    # all-trips denominator share the enrichment join — pin 3 columns, run
-    # the NLP pass once.
-    m = _master_stage(spark, sf_dir).select("#", "sale_price", "locs").persist()
-    m.count()  # eager fill — same broadcast-race rationale as location_pairs
+    # the melt branch and the all-trips denominator both read the enriched
+    # stage, uncached for the same reason as in location_pairs
+    m = _master_stage(spark, sf_dir).select("#", "sale_price", "locs")
     total = m.select(F.count("*").alias("__tt"))
     melted = m.select(
         F.col("#").alias("id"),

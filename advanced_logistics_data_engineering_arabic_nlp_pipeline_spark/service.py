@@ -8,15 +8,18 @@ framing is out of engine scope, but every endpoint's computation is here,
 with /clean/batch actually one pass over the batch and /run-cycle actually
 working (landing source + enrichment instead of the broken import).
 
-/clean and /clean/batch requests of up to ``LOCAL_MAX_TEXTS`` (4,096) texts
-run in the driver with no Spark job, like the reference's in-process
-cleaner (cleaner_v6.py:37,180): the texts become a driver-local relation,
-tiers 1-2 run as the engine's Column expressions (Catalyst's
-``ConvertToLocalRelation`` folds them into the local data), and the few
-tier-3 misses are scored in the driver by the same function the fuzzy
-pandas UDF calls. No Python worker starts. The cascade order, the per-string
-fuzzy rule and the hit assembly are shared with the distributed path, so
-both give the same answers (pinned by tests/test_service.py). A larger
+/clean and /clean/batch requests of up to
+``operators.extract.LOCAL_MAX_TEXTS`` (4,096) texts run in the driver with
+no Spark job, like the reference's in-process cleaner
+(cleaner_v6.py:37,180), through the same shared ``extract.local_cleaner``
+that enriches each trips report's distinct texts: the texts become a
+driver-local relation, tiers 1-2 run as the engine's Column expressions
+(Catalyst's ``ConvertToLocalRelation`` folds them into the local data),
+and the few tier-3 misses are scored in the driver by the same function
+the fuzzy pandas UDF calls. No Python worker starts. The cascade order,
+the per-string fuzzy rule and the hit assembly are shared with the
+distributed path, so both give the same answers (pinned by
+tests/test_service.py and tests/test_enrichment.py). A larger
 batch is one distributed :func:`clean_texts_df` pass. The limit sits at
 half the measured crossover. Best of two warm runs, fuzzy on, 4 vCPUs,
 local against distributed: texts whose tokens are all unique (the worst
@@ -33,26 +36,20 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import __version__
 from .operators.extract import (
-    LocalLocationScan,
+    LOCAL_MAX_TEXTS,
     categorize_trip_type_expr,
     end_location_clean_expr,
     extract_all_locations_expr,
+    local_cleaner,
     with_all_locations_fuzzy,
 )
 from .sources import landing
 from .sources.dictionary import build_variant_index, load_locations_json
-from .sources.local import local_frame
-
-# Requests of up to this many texts are cleaned in the driver with no Spark
-# job (:class:`_LocalCleaner`); larger ones take the distributed
-# :func:`clean_texts_df` path. Set from the measured crossover (module
-# docstring).
-LOCAL_MAX_TEXTS = 4096
 
 
 def clean_texts_df(
@@ -80,44 +77,9 @@ def clean_texts_df(
         )
     else:
         df = df.withColumn("all_locations", extract_all_locations_expr(F.col(text_col), index))
-    for name, c in _location_outputs(text_col):
-        df = df.withColumn(name, c)
-    return df
-
-
-def _location_outputs(text_col: str) -> list[tuple[str, Column]]:
-    """main_location and trip_type from the text and its all_locations."""
     t, locs = F.col(text_col), F.col("all_locations")
-    return [
-        ("main_location", end_location_clean_expr(t, locs)),
-        ("trip_type", categorize_trip_type_expr(t, locs)),
-    ]
-
-
-class _LocalCleaner:
-    """:func:`clean_texts_df` for texts already in the driver, with no
-    Spark job: the texts become a driver-local relation, tiers 1-2 run as
-    the same Column expressions, tier-3 misses are scored in the driver
-    (``extract.LocalLocationScan``), and only Project steps run over the
-    relation, so Catalyst evaluates all of it in the driver. The
-    expressions are built once per service and shared by its threads."""
-
-    def __init__(self, index: dict[str, str], cutoff: float) -> None:
-        self.index, self.cutoff = index, cutoff
-        self.scan = LocalLocationScan(index, cutoff)
-        self.tier12 = extract_all_locations_expr(F.col("text"), index).alias("all_locations")
-        self.outputs = ["text", "all_locations"] + [
-            c.alias(name) for name, c in _location_outputs("text")
-        ]
-
-    def clean(self, spark: SparkSession, texts: list[str | None], fuzzy: bool) -> list:
-        """Result rows in input order."""
-        if fuzzy:
-            df = self.scan.frame(spark, texts)
-        else:
-            df = local_frame(spark, [{"text": t} for t in texts], "text string")
-            df = df.select("text", self.tier12)
-        return df.select(*self.outputs).collect()
+    df = df.withColumn("main_location", end_location_clean_expr(t, locs))
+    return df.withColumn("trip_type", categorize_trip_type_expr(t, locs))
 
 
 def config_from_env(env: dict[str, str] | None = None) -> dict:
@@ -153,7 +115,6 @@ class CleaningService:
         self.fuzzy_cutoff = fuzzy_cutoff
         self.index = build_variant_index(locations) if locations else build_variant_index()
         self._last_stats: dict = {"status": "idle", "records": 0}
-        self._local: _LocalCleaner | None = None
 
     @classmethod
     def from_env(
@@ -198,7 +159,8 @@ class CleaningService:
             raise TypeError(f"texts must be str or None, got {type(bad[0]).__name__}")
         use_fuzzy = self.fuzzy_enabled if fuzzy is None else fuzzy
         if len(texts) <= LOCAL_MAX_TEXTS:
-            collected = self._local_cleaner().clean(self.spark, texts, use_fuzzy)
+            cleaner = local_cleaner(self.index, self.fuzzy_cutoff)
+            collected = cleaner.clean(self.spark, texts, use_fuzzy)
         else:
             collected = self._clean_distributed(texts, use_fuzzy)
         total_ms = round((time.perf_counter() - t0) * 1000, 3)
@@ -214,13 +176,6 @@ class CleaningService:
             for r in collected
         ]
         return {"results": results, "total_ms": total_ms}
-
-    def _local_cleaner(self) -> _LocalCleaner:
-        # built on the first request, rebuilt if index or cutoff is swapped
-        cleaner = self._local
-        if cleaner is None or cleaner.index is not self.index or cleaner.cutoff != self.fuzzy_cutoff:
-            cleaner = self._local = _LocalCleaner(self.index, self.fuzzy_cutoff)
-        return cleaner
 
     def _clean_distributed(self, texts: list[str | None], fuzzy: bool) -> list:
         df = self.spark.createDataFrame(

@@ -91,3 +91,52 @@ def test_expression_builder_memos_return_same_tree(spark):
     m1 = variant_map_expr(idx)
     m2 = variant_map_expr(idx)
     assert m1 is m2
+
+
+def test_trips_master_fuzzy_build_runs_only_the_distinct_probe(spark, sf_dir):
+    """The fuzzy master's build runs no more Spark jobs than its distinct
+    probe needs (the texts are enriched in the driver), and its plan holds
+    no Python UDF and no shuffle join."""
+    from pyspark.sql import functions as F
+
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.extract import (
+        ENRICH_LOCAL_MAX_TEXTS,
+    )
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.plans import trips
+    from tests.test_service import _jobs
+
+    def probe_only():
+        raw = trips.trips_raw(spark, sf_dir).select(F.col("end_location").cast("string"))
+        return raw.distinct().limit(ENRICH_LOCAL_MAX_TEXTS[True] + 1).collect()
+
+    trips.trips_master_fuzzy(spark, sf_dir)  # warm the scan and the memos
+    _, probe = _jobs(spark, probe_only, "probe")
+    df, build = _jobs(spark, lambda: trips.trips_master_fuzzy(spark, sf_dir), "build")
+    assert 0 < build <= probe
+    p = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    for node in ("ArrowEvalPython", "BatchEvalPython", "SortMergeJoin"):
+        assert node not in p, node
+
+
+def test_report_cycle_leaves_no_persisted_rdds(spark, sf_dir, tmp_path):
+    """A whole report cycle (four builds + CSV writes) pins nothing: it adds
+    no RDD to the persisted set, and the caller does not clear the cache.
+    (RDDs that earlier tests left pinned may leave the set meanwhile: the
+    JVM's ContextCleaner unpersists them once they are garbage.)"""
+    import os
+
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.plans import trips
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.sinks import (
+        write_report_csv,
+    )
+
+    def persisted() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = persisted()
+    for name in ("trips_master_fuzzy", "location_pairs", "location_stats", "multi_location_details"):
+        write_report_csv(getattr(trips, name)(spark, sf_dir), str(tmp_path / name))
+        assert any(f.endswith(".csv") for f in os.listdir(tmp_path / name))
+    assert persisted() - before == set()

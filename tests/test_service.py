@@ -387,8 +387,9 @@ def test_concurrent_requests_match_serial_answers(spark):
 
 @pytest.mark.parametrize("fuzzy_enabled", [True, False])
 def test_local_path_follows_swapped_settings(spark, fuzzy_enabled):
-    """The driver-local expressions are built once per service; swapping
-    its dictionary or cutoff afterwards must still take effect."""
+    """The driver-local expressions are built once per dictionary and
+    cutoff; swapping a service's dictionary afterwards must still take
+    effect."""
     svc = CleaningService(spark, fuzzy_enabled=fuzzy_enabled)
     assert svc.clean_one("مكان الاختبار")["main_location"] == "مكان الاختبار"
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
@@ -397,3 +398,14 @@ def test_local_path_follows_swapped_settings(spark, fuzzy_enabled):
 
     svc.index = build_variant_index({"TestPlace": ["مكان الاختبار"]})
     assert svc.clean_one("مكان الاختبار")["main_location"] == "TestPlace"
+
+    # the driver-local cleaner is shared per (dictionary, cutoff), not per
+    # service
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.extract import (
+        local_cleaner,
+    )
+
+    other = CleaningService(spark)
+    assert local_cleaner(svc.index, svc.fuzzy_cutoff) is not local_cleaner(
+        other.index, other.fuzzy_cutoff
+    )
