@@ -10,9 +10,11 @@ Two implementations of the location scan:
 - ``extract_all_locations_expr``: pure Column expression (tiers 1-2).
   Zero-shuffle, whole-stage-codegen, SQL-mirrorable → the oracle-checked
   fast path and the default at scale.
-- ``with_all_locations_fuzzy``: adds tier-3 fuzzy via posexplode →
-  distinct-resolve-join (operators.lookup) → ordered re-aggregation.
-  Costs one groupBy shuffle; used when fuzzy recall is worth it.
+- ``with_all_locations_fuzzy``: adds tier-3 fuzzy. The distinct tokens
+  resolve in one collected pass (operators.lookup); the resulting map
+  applies back as a literal map expression, or for a large map as
+  posexplode → broadcast join → ordered re-aggregation (one groupBy
+  shuffle). Used when fuzzy recall is worth it.
 
 ``LocalCleaner`` is the driver-local NLP block (locs + clean location +
 trip type) for up to ``LOCAL_MAX_TEXTS`` texts already in the driver,
@@ -148,7 +150,6 @@ def with_nlp_enrichment(
     locs_col: str = "locs",
     clean_col: str = "End_Location_Clean",
     type_col: str = "Trip_Type",
-    caches_out: list | None = None,
 ) -> DataFrame:
     """F4's full NLP block (locs + clean location + trip type, Main.py:406-425)
     resolved once per *distinct* text, then joined back — the reference's
@@ -184,14 +185,15 @@ def with_nlp_enrichment(
     Above the limit the distributed path below runs, paying the probe as
     one extra distinct pass: 0.26-0.36 s of a 9-13 s ``trips_fuzzy_stress``
     at sf0.1 (100,000 distinct texts) on the same host, measured by hand;
-    no benchmark workload reaches this path. Trip texts are short human-entered strings
-    with heavy repetition, so the distinct side is orders of magnitude
-    smaller than the fact side and AQE broadcast-converts the join-back;
-    the regex-heavy NLP chain runs |distinct| times instead of |rows|
-    times. If a workload ever has near-unique texts, inline
-    ``extract_all_locations_expr`` instead (the expression path needs no
-    shuffle at all). ``caches_out`` receives the fuzzy cascade's cut-point
-    caches on that path only."""
+    no benchmark workload reaches this path. With fuzzy on it also runs
+    the token cascade's collect (:func:`with_all_locations_fuzzy`) when
+    called; neither path caches anything or leaves cleanup to the caller.
+    Trip texts are short human-entered strings with heavy repetition, so
+    the distinct side is orders of magnitude smaller than the fact side
+    and AQE broadcast-converts the join-back; the regex-heavy NLP chain
+    runs |distinct| times instead of |rows| times. If a workload ever has
+    near-unique texts, inline ``extract_all_locations_expr`` instead (the
+    expression path needs no shuffle at all)."""
     from ..sources.dictionary import _default_index
     from .lookup import FUZZY_SCORE_CUTOFF
 
@@ -231,13 +233,7 @@ def with_nlp_enrichment(
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
     if fuzzy:
-        # caches_out threads through to the cascade's cut-point caches so
-        # a long-lived caller (CleaningService does this) can unpersist
-        # after its terminal action — without it, the broadcast-join path
-        # (mapping > MAPPING_LITERAL_MAX) parks cached frames per request
-        texts = with_all_locations_fuzzy(
-            texts, "__txt", "__txt", locs_col, index, caches_out=caches_out
-        )
+        texts = with_all_locations_fuzzy(texts, "__txt", locs_col, index)
     else:
         texts = texts.withColumn(
             locs_col, extract_all_locations_expr(F.col("__txt"), index)
@@ -379,36 +375,33 @@ def local_cleaner(index: dict[str, str], cutoff: float) -> LocalCleaner:
 def with_all_locations_fuzzy(
     df: DataFrame,
     text_col: str,
-    id_col: str,
     out_col: str = "all_locations_list",
     index: dict[str, str] | None = None,
     cutoff: float | None = None,
-    caches_out: list | None = None,
 ) -> DataFrame:
     """F2 with tier-3 fuzzy: the full scan runs once per *distinct* text —
     the reference's lru_cache insight (cleaner_v6.py:37, 180) lifted to the
-    text level — then the (text → locations) map joins back. Per distinct
-    text: posexplode tokens → 3-tier resolve (distinct-fuzzy E4 inside) →
-    ordered, order-preserving distinct re-aggregation.
-
-    ``id_col`` is kept for API stability; resolution keys on the text
-    itself. At 100 TB the distinct-text side is the small side and AQE
-    broadcast-converts the join-back.
+    text level. The distinct texts' tokens (posexplode) resolve through the
+    3-tier cascade once per distinct token, and the (token → canonical)
+    mapping is collected to the driver when this is called
+    (``lookup._distinct_token_mapping``); the returned plan caches nothing.
 
     Adaptive application (mirrors operators.lookup.resolve_tokens_fuzzy):
-    once the distinct-token cascade has produced the (token → canonical)
-    mapping, a mapping under ``MAPPING_LITERAL_MAX`` entries is inlined as
-    a literal map and the whole scan becomes ONE zero-shuffle expression
+    a mapping of at most ``MAPPING_LITERAL_MAX`` entries is inlined as a
+    literal map and the whole scan becomes ONE zero-shuffle expression
     over ``df`` — identical in shape to the tier-1/2
     :func:`extract_all_locations_expr`, with fuzzy hits included in the
     map. (``df`` is the distinct-text frame when called from
     with_nlp_enrichment, so the per-row tokenize regex runs once per
-    distinct text.) A larger mapping falls back to the explode →
-    broadcast-join → ordered re-aggregation plan."""
+    distinct text.) A larger mapping becomes a driver-local relation, and
+    the scan falls back to explode → broadcast join → ordered
+    re-aggregation, joined back to ``df`` on the text."""
     from .lookup import (
         FUZZY_SCORE_CUTOFF,
+        MAPPING_LITERAL_MAX,
         _distinct_token_mapping,
-        mapping_literal_probe,
+        canonical_map_frame,
+        canonical_map_literal,
     )
     from ..sources.dictionary import build_variant_index
 
@@ -418,20 +411,15 @@ def with_all_locations_fuzzy(
     exploded = texts.select(
         F.col("__ftxt"), F.posexplode_outer(trip_tokens_expr(F.col("__ftxt"))).alias("__pos", "__tok")
     )
-    mapping, caches = _distinct_token_mapping(exploded, "__tok", index, cutoff)
-    m, is_literal = mapping_literal_probe(mapping)
-    if is_literal:
-        for c in caches:
-            c.unpersist()
+    mapping = _distinct_token_mapping(exploded, "__tok", index, cutoff)
+    if len(mapping) <= MAPPING_LITERAL_MAX:
+        m = canonical_map_literal(mapping)
         return df.withColumn(out_col, literal_hits_expr(F.col(text_col), m))
 
-    # join path: the plan references the cached cut points — hand them to
-    # the caller for post-action unpersist (see lookup.resolve_tokens_fuzzy)
-    if caches_out is not None:
-        caches_out.extend(caches)
+    mf = canonical_map_frame(df.sparkSession, mapping)
     resolved = exploded.join(
-        F.broadcast(mapping.withColumnRenamed("__canonical", "__canon")),
-        exploded["__tok"] == mapping["__t"],
+        F.broadcast(mf.withColumnRenamed("__canonical", "__canon")),
+        exploded["__tok"] == mf["__t"],
         "left",
     ).drop("__t")
     rebuilt = (

@@ -12,14 +12,16 @@ Per-token resolution cascade (cleaner_v6.py:180-208):
 Tiers 1-2 are pure Column expressions (map lookup + regexp_extract) — they
 run JVM-side inside codegen and vectorize for free. Tier 3 is the engine's
 only Python hot path: an Arrow-batched pandas UDF applied via the
-distinct-resolve-join pattern (E4) — the Spark idiom for the reference's
-``lru_cache`` insight: each *distinct* string is resolved exactly once, then
-joined back. At 100 TB the distinct token set is orders of magnitude smaller
-than the row count, and the resolved map is broadcast. For a handful of
-tokens already in the driver (a small service request),
-:class:`LocalTokenResolver` runs the same cascade over a driver-local
-relation and scores the misses in the driver — no Spark job, no Python
-worker.
+distinct-resolve pattern (E4) — the Spark idiom for the reference's
+``lru_cache`` insight: each *distinct* string is resolved exactly once, in
+one linear plan whose resolved (token → canonical) rows are collected to
+the driver, then applied back as a literal map or, for a large mapping,
+one broadcast join. At 100 TB the distinct token set is orders of
+magnitude smaller than the row count, and the resolved mapping smaller
+still. For a handful of tokens already in the driver (a small service
+request), :class:`LocalTokenResolver` runs the same cascade over a
+driver-local relation and scores the misses in the driver — no Spark job,
+no Python worker.
 
 Fuzzy scoring mirrors rapidfuzz ``token_sort_ratio`` (public algorithm):
 sort whitespace tokens, then Indel similarity = 2*LCS/(len_a+len_b) * 100.
@@ -39,6 +41,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions.arabic import normalize_arabic, strip_op_prefix
 from ..sources.dictionary import build_variant_index, tier2_pattern, variant_map_expr
+from ..sources.local import local_frame
 
 FUZZY_SCORE_CUTOFF = 82
 FUZZY_MIN_LEN = 3
@@ -218,22 +221,27 @@ def fuzzy_best_match(
 
 
 def fuzzy_lookup_udf(index: dict[str, str] | None = None, cutoff: float = FUZZY_SCORE_CUTOFF):
-    """pandas UDF: normalized string → canonical (or None). Inputs shorter
-    than FUZZY_MIN_LEN skip fuzzy entirely (cleaner_v6.py:36, 193-194).
-    A per-batch memo mirrors the reference's lru_cache within each Arrow
-    batch; cross-row dedupe is done by the distinct-resolve-join caller."""
+    """pandas UDF over the cascade's two miss forms (:func:`fuzzy_misses`):
+    (``__norm`` miss, ``__snorm`` miss) → ``struct(__fzn, __fzs)``, each
+    the canonical of :func:`fuzzy_resolve` (None for a null input). One
+    memo per Arrow batch serves both columns, mirroring the reference's
+    lru_cache, so a token with no op prefix is scored once; cross-row
+    dedupe is done by the distinct before it."""
     index = index if index is not None else build_variant_index()
     variants = list(index.keys())
 
-    @pandas_udf("string")
-    def _fuzzy(norms: pd.Series) -> pd.Series:
-        @lru_cache(maxsize=8192)
+    @pandas_udf("__fzn string, __fzs string")
+    def _fuzzy(norms: pd.Series, snorms: pd.Series) -> pd.DataFrame:
+        # unbounded: a batch is bounded, and a bounded LRU would evict the
+        # first column's keys before the second column reads them
+        @lru_cache(maxsize=None)
         def one(norm: str | None) -> str | None:
             return fuzzy_resolve(norm, index, variants, cutoff)
 
-        return norms.map(one)
+        return pd.DataFrame({"__fzn": norms.map(one), "__fzs": snorms.map(one)})
 
-    return _fuzzy
+    # nondeterministic, else Catalyst pushes the result filter and this UDF below the distinct
+    return _fuzzy.asNondeterministic()
 
 
 def fuzzy_resolve(
@@ -252,31 +260,33 @@ def fuzzy_resolve(
 
 # ── E4: distinct-resolve-join over a tokens DataFrame ───────────────────────
 
-# Resolved-mapping size below which the (token → canonical) map is collected
-# and inlined as a literal map expression instead of broadcast-joined back.
+# Resolved-mapping size up to which the collected (token → canonical) map
+# is inlined as a literal map expression instead of broadcast-joined back.
 # A literal map rides the serialized plan to executors exactly like a
-# broadcast variable but skips two broadcast-exchange builds, two join
-# nodes and the downstream re-aggregation shuffle — for the dominant
-# workload shape (human-entered location strings: tens-to-hundreds of
-# distinct resolvable tokens) the whole fuzzy cascade collapses into a
+# broadcast variable but skips the broadcast-exchange build, the join node
+# and, in the location scan, the explode and re-aggregation shuffle — for
+# the dominant workload shape (human-entered location strings:
+# tens-to-hundreds of distinct resolvable tokens) the mapping applies as a
 # zero-shuffle Column expression. The threshold is deliberately SMALL:
 # Spark evaluates element_at on a map literal as a LINEAR scan
 # (ArrayBasedMapData has no hash index), so per-row lookup cost is
 # O(entries) — measured: a 59k-entry literal turned the all-unique stress
 # case into minutes of string compares, where the broadcast hash join's
 # O(1) probe took seconds. 512 entries × a few string equals is well under
-# the cost of the tier-2 regex the row already paid; above that the
-# broadcast-join path takes over (same asymptotics as any small-dim join).
+# the cost of the tier-2 regex the row already paid; above that one
+# broadcast join against the mapping as a driver-local relation takes over
+# (same asymptotics as any small-dim join).
 MAPPING_LITERAL_MAX = 512
 
 
 # ── The cascade, defined once for the distributed and the driver-local path ─
 #
 # Both paths resolve a frame of distinct raw tokens ``__t`` in three steps:
-# the cascade inputs (:func:`cascade_inputs`), tier-3 scoring of the
-# normalized forms the miss predicates select (:func:`fuzzy_misses`; the
-# pandas UDF or :func:`fuzzy_resolve` in the driver), then the cascade order
-# over the fuzzy results ``__fzn``/``__fzs`` (:func:`cascade_expr`).
+# the cascade inputs (:func:`cascade_inputs`), tier-3 scoring of the two
+# miss forms (:func:`fuzzy_misses`; the pandas UDF or :func:`fuzzy_resolve`
+# in the driver), then the cascade order over the fuzzy results
+# ``__fzn``/``__fzs`` (:func:`cascade_expr`). Both return the resolved
+# tokens as a driver-side (token → canonical) dict.
 
 def cascade_inputs(index: dict[str, str]) -> list[tuple[str, Column]]:
     """The cascade's inputs for a frame of raw tokens ``__t``, as (column,
@@ -300,11 +310,12 @@ def with_cascade_inputs(tokens: DataFrame, inputs: list[tuple[str, Column]]) -> 
 
 
 def fuzzy_misses() -> tuple[Column, Column]:
-    """The rows whose fuzzy result the cascade can reach: ``__norm`` is
-    scored when tiers 1-2 miss it, ``__snorm`` when they miss both forms
-    and the stripped raw token is non-empty."""
+    """The two forms tier 3 scores, null where the cascade cannot reach
+    their fuzzy result: ``__norm`` when tiers 1-2 miss it, ``__snorm``
+    when they miss both forms and the stripped raw token is non-empty."""
     r12_miss = F.col("__r12").isNull()
-    return r12_miss, r12_miss & F.col("__r12s").isNull() & (F.col("__sraw") != "")
+    snorm_miss = r12_miss & F.col("__r12s").isNull() & (F.col("__sraw") != "")
+    return F.when(r12_miss, F.col("__norm")), F.when(snorm_miss, F.col("__snorm"))
 
 
 def cascade_expr() -> Column:
@@ -322,149 +333,70 @@ def cascade_expr() -> Column:
     )
 
 
-def _distinct_token_mapping(
+def _resolved_tokens(
     tokens_df: DataFrame,
     token_col: str,
     index: dict[str, str],
     cutoff: float,
 ) -> DataFrame:
-    """(token → canonical) mapping for every *distinct* raw token of
-    ``tokens_df``, full 3-tier cascade included; only resolved (non-null
-    canonical) rows are kept. The cascade — the tier-1/2 normalize+regex
-    expression chain, not just the fuzzy UDF — runs once per distinct raw
-    token; the mapping stays small by construction because every entry
-    fuzzy- or exact-matches a finite dictionary at cutoff ≥ 82.
+    """The resolved (``__t``, ``__canonical``) rows for every *distinct* raw
+    token of ``tokens_df``, as one linear plan: distinct → repartition →
+    cascade inputs → one fuzzy UDF over the miss forms → cascade order.
+    The whole cascade, not just the fuzzy UDF, runs once per distinct raw
+    token. The repartition matters: the distinct's output is small in
+    bytes, so AQE would coalesce it to ~1 partition and run the
+    regex-heavy tiers and the scorer single-threaded on a large distinct
+    set. The UDF still sees every distinct token, but a non-miss row
+    reaches it as two nulls and costs no scoring."""
+    fuzzy = fuzzy_lookup_udf(index, cutoff)
+    d = tokens_df.select(F.col(token_col).alias("__t")).distinct()
+    d = d.repartition(tokens_df.sparkSession.sparkContext.defaultParallelism)
+    d = with_cascade_inputs(d, cascade_inputs(index))
+    d = d.withColumn("__fz", fuzzy(*fuzzy_misses())).select("*", "__fz.*")
+    return d.select("__t", cascade_expr().alias("__canonical")).filter(
+        F.col("__canonical").isNotNull()
+    )
+
+
+def _distinct_token_mapping(
+    tokens_df: DataFrame,
+    token_col: str,
+    index: dict[str, str],
+    cutoff: float,
+) -> dict[str, str]:
+    """(token → canonical) for the resolved distinct raw tokens of
+    ``tokens_df``, collected to the driver by one Spark job — the same
+    contract as :meth:`LocalTokenResolver.resolve`. The mapping stays small
+    by construction because every entry fuzzy- or exact-matches a finite
+    dictionary at cutoff ≥ 82.
 
     Cascade order matches the reference exactly: t1(tok), t2(tok), t3(tok),
     then — only if the raw op-prefix-stripped token is non-empty — t1, t2,
     t3 of the stripped form (cleaner_v6.py:180-208, 236-243)."""
-    fuzzy = fuzzy_lookup_udf(index, cutoff)
-
-    # Distinct first, sized second: the distinct shuffle output is tiny in
-    # bytes, so AQE coalesces it to ~1 partition — which would run the
-    # regex-heavy tier-1/2 chain and the fuzzy UDF single-threaded when the
-    # distinct set is large (AQE sizes by bytes; this stage is CPU-bound
-    # per row). But blind repartition(defaultParallelism) is just as wrong
-    # at the other end: a handful of tokens spread over 32 partitions pays
-    # 32-task dispatch on every downstream stage for ~1 row of work each
-    # (measured as the dominant cost of trips_master_fuzzy — 32 distinct
-    # texts at sf0.1). Count the distinct set (one tiny job on the cached
-    # frame), then give each task ≥64 tokens.
-    target = tokens_df.sparkSession.sparkContext.defaultParallelism
-    distinct_toks = (
-        tokens_df.select(F.col(token_col).alias("__t")).distinct().cache()
-    )
-    n_distinct = distinct_toks.count()
-    cascade_parts = max(1, min(target, n_distinct // 64 + 1))
-    d = (
-        with_cascade_inputs(distinct_toks.repartition(cascade_parts), cascade_inputs(index))
-        # Materialize once: this frame feeds THREE consumers (the two miss
-        # branches and the final mapping), and two of them are broadcast
-        # builds — each broadcast executes its subtree independently, so
-        # without a cut point the distinct + regex cascade (and below, the
-        # fuzzy UDF) runs 3-4× per query (measured: the all-distinct stress
-        # case spent ~8 of its 12 s on those re-executions). The cache is
-        # filled EAGERLY below (after fz is defined): Spark submits
-        # broadcast-exchange builds asynchronously, and concurrent subtree
-        # executions do NOT share an unfilled lazy cache — event-log
-        # profiling showed three simultaneous 1.9 s builds of this exact
-        # subtree racing past the lazy cut point.
-        .cache()
-    )
-    # Fuzzy only on the distinct unresolved normalized forms (a when()-
-    # guarded UDF would still be evaluated for EVERY row — BatchEvalPython
-    # computes UDF columns unconditionally — so the misses are filtered
-    # into their own frame first). The Python stage's partition count
-    # scales with the (already-paid) distinct count: a handful of tokens on
-    # 32 partitions would spin up 32 Arrow workers to score ~1 string each —
-    # worker dispatch, not scoring, dominates. ≥64 tokens per worker before
-    # adding another.
-    fuzzy_parts = cascade_parts
-    norm_miss, snorm_miss = fuzzy_misses()
-    miss_n = d.filter(norm_miss).select(F.col("__norm").alias("__k"))
-    miss_s = d.filter(snorm_miss).select(F.col("__snorm").alias("__k"))
-    fz = (
-        miss_n.union(miss_s)
-        .distinct()
-        .repartition(fuzzy_parts)
-        .withColumn("__fz", fuzzy(F.col("__k")))
-        .filter(F.col("__fz").isNotNull())
-        # Same reasoning: consumed by two broadcast builds (__fzn / __fzs)
-        # whose subtrees would otherwise each re-run the fuzzy UDF.
-        .cache()
-    )
-    # ONE eager fill for BOTH cut points (r14 action trim — this was a
-    # d.count() then an fz.count()): the broadcast-race hazard the eager
-    # fills guard against (Spark submits broadcast-exchange builds
-    # asynchronously, and concurrent subtree executions do NOT share an
-    # unfilled lazy cache — event-log profiling showed three simultaneous
-    # 1.9 s builds of the same subtree racing past a lazy cut point) only
-    # exists once the final mapping's broadcasts are submitted. This
-    # count runs strictly BEFORE any broadcast build, is a single
-    # synchronous job, and an InMemoryTableScan inside it materializes
-    # every unfilled cache it reads — so one action fills d AND fz.
-    fz.count()
-    # distinct_toks fed only d; once d is materialized its blocks are dead
-    # weight in a long-lived session (the service calls this per request).
-    distinct_toks.unpersist()
-    # keep a handle on the CACHED frame: d is about to be reassigned to the
-    # joined plan, and unpersist() on that derived frame is a no-op — the
-    # returned cache list must hold the frame .cache() was called on
-    # (pre-r5 both paths leaked the cascade cache because of exactly this)
-    d_cached = d
-    d = (
-        d.join(
-            F.broadcast(fz.withColumnRenamed("__fz", "__fzn")),
-            d["__norm"] == fz["__k"],
-            "left",
-        )
-        .drop("__k")
-        .join(
-            F.broadcast(
-                fz.withColumnRenamed("__fz", "__fzs").withColumnRenamed("__k", "__k2")
-            ),
-            F.col("__snorm") == F.col("__k2"),
-            "left",
-        )
-        .drop("__k2")
-    )
-    mapping = d.select("__t", cascade_expr().alias("__canonical")).filter(
-        F.col("__canonical").isNotNull()
-    )
-    # hand the cut-point frames back so the caller can unpersist them the
-    # moment the mapping no longer references them (the literal path): a
-    # per-request service call must not leak cached blocks forever
-    return mapping, [d_cached, fz]
+    rows = _resolved_tokens(tokens_df, token_col, index, cutoff).collect()
+    return {r["__t"]: r["__canonical"] for r in rows}
 
 
-def mapping_literal_probe(mapping: DataFrame) -> tuple[Column | None, bool]:
-    """THE single literal-vs-join decision (both resolve_tokens_fuzzy and
-    extract.with_all_locations_fuzzy go through here, so the threshold and
-    null semantics have one source of truth): collect up to
-    ``MAPPING_LITERAL_MAX + 1`` resolved entries; return
-    ``(map literal or None-if-empty, True)`` when the literal path
-    applies, else ``(None, False)`` for the broadcast-join path."""
-    probe = mapping.limit(MAPPING_LITERAL_MAX + 1).collect()
-    if len(probe) <= MAPPING_LITERAL_MAX:
-        return canonical_map_literal(probe), True
-    return None, False
-
-
-def canonical_map_literal(mapping_rows: list) -> Column | None:
-    """A collected (token → canonical) mapping as one literal MAP column —
-    two py4j array literals total, never per-entry ``lit`` calls. None for
-    an empty mapping (``map_from_arrays`` can't infer empty-array types)."""
-    if not mapping_rows:
+def canonical_map_literal(mapping: dict[str, str]) -> Column | None:
+    """A (token → canonical) mapping as one literal MAP column — two py4j
+    array literals total, never per-entry ``lit`` calls. None for an empty
+    mapping (``map_from_arrays`` can't infer empty-array types)."""
+    if not mapping:
         return None
-    keys = [r["__t"] for r in mapping_rows]
-    vals = [r["__canonical"] for r in mapping_rows]
-    return F.map_from_arrays(F.lit(keys), F.lit(vals))
+    return F.map_from_arrays(F.lit(list(mapping)), F.lit(list(mapping.values())))
+
+
+def canonical_map_frame(spark, mapping: dict[str, str]) -> DataFrame:
+    """A (token → canonical) mapping as a driver-local (``__t``,
+    ``__canonical``) relation, the build side of the join path."""
+    rows = [{"__t": t, "__canonical": c} for t, c in mapping.items()]
+    return local_frame(spark, rows, "__t string, __canonical string")
 
 
 class LocalTokenResolver:
     """The driver-side twin of :func:`_distinct_token_mapping`, for a
     handful of distinct tokens already in the driver: the same cascade
-    inputs, miss predicates and cascade order, over driver-local relations
+    inputs, miss forms and cascade order, over driver-local relations
     (``sources.local``), with the fuzzy misses scored in the driver by
     :func:`fuzzy_resolve` instead of the pandas UDF. Only Project and
     Filter steps run over the relations, which Catalyst folds into the
@@ -478,25 +410,22 @@ class LocalTokenResolver:
         self.index, self.cutoff = index, cutoff
         self.variants = list(index)
         self.inputs = cascade_inputs(index)
-        norm_miss, snorm_miss = fuzzy_misses()
+        kn, ks = fuzzy_misses()
         self.probe = [
             "__t", "__norm", "__sraw", "__snorm", "__r12", "__r12s",
-            F.when(norm_miss, F.col("__norm")).alias("__kn"),
-            F.when(snorm_miss, F.col("__snorm")).alias("__ks"),
+            kn.alias("__kn"), ks.alias("__ks"),
         ]
         self.canonical = cascade_expr().alias("__canonical")
         self.resolved = F.col("__canonical").isNotNull()
 
     def resolve(self, spark, tokens: list[str]) -> dict[str, str]:
         """(token → canonical) for the resolved ones of distinct ``tokens``."""
-        from ..sources.local import local_frame
-
         d = local_frame(spark, [{"__t": t} for t in tokens], "__t string")
         rows = with_cascade_inputs(d, self.inputs).select(*self.probe).collect()
         keys = {k for r in rows for k in (r["__kn"], r["__ks"]) if k is not None}
         fz = {k: fuzzy_resolve(k, self.index, self.variants, self.cutoff) for k in keys}
-        # the fuzzy results meet the tokens by normalized form, as the
-        # distributed path's broadcast joins on __norm/__snorm do
+        # the fuzzy results meet the tokens by normalized form, as one
+        # memo serves both forms in the distributed path's UDF
         scored = local_frame(
             spark,
             [
@@ -520,44 +449,30 @@ def resolve_tokens_fuzzy(
     out_col: str = "canonical",
     index: dict[str, str] | None = None,
     cutoff: float = FUZZY_SCORE_CUTOFF,
-    caches_out: list | None = None,
 ) -> DataFrame:
     """Full 3-tier resolution of a token column, fuzzy included (see
-    :func:`_distinct_token_mapping` for the cascade contract).
+    :func:`_distinct_token_mapping` for the cascade contract). The mapping
+    is collected when this is called; the returned plan holds no cascade
+    work and no cached frame.
 
-    The resolved mapping is applied back to the token rows adaptively:
-    below ``MAPPING_LITERAL_MAX`` entries it is inlined as a literal map
+    The mapping is applied back to the token rows adaptively: up to
+    ``MAPPING_LITERAL_MAX`` entries it is inlined as a literal map
     expression (zero joins, zero exchanges — the common human-entered-text
-    shape); above, it is broadcast-joined (the general small-dim shape).
-    Both paths are row-for-row identical: an unresolved or null token gets
-    a null ``out_col``.
-
-    ``caches_out``: on the broadcast-join path the returned plan still
-    references the cascade's cached cut-point frames, so they cannot be
-    unpersisted here; pass a list and the frames are appended for the
-    caller to unpersist AFTER its terminal action (a long-lived service
-    must not leak cached blocks per request — ADVICE r4). Without it the
-    frames stay resident until evicted/cache-cleared."""
+    shape); above, it is broadcast-joined as a driver-local relation (the
+    general small-dim shape). Both paths are row-for-row identical: an
+    unresolved or null token gets a null ``out_col``."""
     index = index if index is not None else build_variant_index()
-    mapping, caches = _distinct_token_mapping(tokens_df, token_col, index, cutoff)
-    m, is_literal = mapping_literal_probe(mapping)
-    if is_literal:
-        # the literal carries the whole mapping; the cascade's cached cut
-        # points are dead weight from here on — drop them (service calls
-        # run this per request and must not accumulate blocks)
-        for c in caches:
-            c.unpersist()
+    mapping = _distinct_token_mapping(tokens_df, token_col, index, cutoff)
+    if len(mapping) <= MAPPING_LITERAL_MAX:
+        m = canonical_map_literal(mapping)
         resolved = (
             F.element_at(m, F.col(token_col))
             if m is not None
             else F.lit(None).cast("string")
         )
         return tokens_df.withColumn(out_col, resolved)
-    # join path: the returned plan still reads the cached frames, so they
-    # stay resident until the caller's action completes / cache is cleared
-    if caches_out is not None:
-        caches_out.extend(caches)
-    mapping = mapping.withColumnRenamed("__canonical", out_col)
+    mf = canonical_map_frame(tokens_df.sparkSession, mapping)
+    mf = mf.withColumnRenamed("__canonical", out_col)
     return tokens_df.join(
-        F.broadcast(mapping), tokens_df[token_col] == mapping["__t"], "left"
+        F.broadcast(mf), tokens_df[token_col] == mf["__t"], "left"
     ).drop("__t")

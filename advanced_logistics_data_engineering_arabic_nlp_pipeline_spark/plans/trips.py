@@ -30,8 +30,11 @@ Scale design:
   pairs-per-row bound (≤ C(5,2)=10) caps blowup.
 - Percentage denominators are single-row aggregates broadcast-joined back
   (reference recomputes len(df) driver-side, Main.py:262-263).
-- Above the local limit, the fuzzy variant adds the E4 distinct-fuzzy
-  token mapping (bounded by distinct tokens) to the distinct-text pass.
+- Above the local limit, the fuzzy variant also resolves the distinct
+  texts' tokens at build time: one collected Spark job (the E4
+  distinct-token cascade, bounded by the distinct tokens) whose mapping
+  the distinct-text pass applies as a literal map or one broadcast join.
+  That path caches nothing either.
 """
 
 from __future__ import annotations

@@ -58,22 +58,16 @@ def clean_texts_df(
     fuzzy: bool = True,
     index: dict[str, str] | None = None,
     cutoff: float | None = None,
-    caches_out: list | None = None,
 ) -> DataFrame:
     """F5 shared codepath (api.py:210-225 = Main.py:406-425): adds
-    all_locations, main_location, trip_type for a text column.
-    ``caches_out`` collects join-path cut-point caches for the caller to
-    unpersist after its terminal action (large-mapping requests in a
-    long-lived service must not leak cached blocks)."""
+    all_locations, main_location, trip_type for a text column. With fuzzy
+    on, the token cascade runs when this is called (one collected Spark
+    job, ``extract.with_all_locations_fuzzy``); nothing stays cached, so a
+    long-lived caller has nothing to clean up after its action."""
     index = index if index is not None else build_variant_index()
     if fuzzy:
-        # id_col is documented as ignored (resolution keys on the text
-        # itself) — pass the text column like with_nlp_enrichment does;
-        # the old fabricated __rid monotonically_increasing_id column was
-        # dead work in every request
         df = with_all_locations_fuzzy(
-            df, text_col, text_col, "all_locations", index, cutoff=cutoff,
-            caches_out=caches_out,
+            df, text_col, "all_locations", index, cutoff=cutoff
         )
     else:
         df = df.withColumn("all_locations", extract_all_locations_expr(F.col(text_col), index))
@@ -181,18 +175,8 @@ class CleaningService:
         df = self.spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "idx int, text string"
         )
-        caches: list = []
-        out = clean_texts_df(
-            df, "text", fuzzy, self.index, cutoff=self.fuzzy_cutoff,
-            caches_out=caches,
-        ).orderBy("idx")
-        collected = out.collect()
-        # collect() is the terminal action: any join-path cut-point caches
-        # are dead weight now — a long-lived service must not accumulate
-        # cached blocks per large-mapping request (ADVICE r4)
-        for c in caches:
-            c.unpersist(blocking=True)
-        return collected
+        out = clean_texts_df(df, "text", fuzzy, self.index, cutoff=self.fuzzy_cutoff)
+        return out.orderBy("idx").collect()
 
     def run_cycle(self, fetch_page: landing.PageFetcher, landing_dir: str) -> dict:
         """One fetch→land→enrich cycle (K4, fixed): land new pages, read the
@@ -202,14 +186,10 @@ class CleaningService:
         df = landing.read_landing(
             self.spark, landing_dir, "serialId bigint, confirm_status boolean, end_location string"
         ).filter(F.col("confirm_status").eqNullSafe(True))
-        caches: list = []
-        enriched = clean_texts_df(
+        records = clean_texts_df(
             df, "end_location", self.fuzzy_enabled, self.index,
-            cutoff=self.fuzzy_cutoff, caches_out=caches,
-        )
-        records = enriched.count()
-        for c in caches:
-            c.unpersist(blocking=True)
+            cutoff=self.fuzzy_cutoff,
+        ).count()
         from datetime import datetime, timezone
 
         self._last_stats = {

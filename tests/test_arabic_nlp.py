@@ -138,7 +138,7 @@ def test_fuzzy_pipeline_readme_string(spark):
         [(1, "تشغيل 12 ساعه مطارررر القاهره وعوده"), (2, "الهرم + المطار و وسط البلد"), (3, None)],
         ["id", "txt"],
     )
-    out = with_all_locations_fuzzy(df, "txt", "id").orderBy("id").collect()
+    out = with_all_locations_fuzzy(df, "txt").orderBy("id").collect()
     assert out[0]["all_locations_list"] == ["Cairo Airport"]
     assert out[1]["all_locations_list"] == [
         "Pyramids of Giza",

@@ -91,11 +91,17 @@ def test_tokenize_fuzz_spark_vs_duckdb(spark):
     assert not mismatches, f"{len(mismatches)} mismatches; first: {mismatches[0]!r}"
 
 
+def _storage_ids(spark) -> set:
+    return {x.id() for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def test_resolve_literal_and_join_paths_agree(spark, monkeypatch):
     """resolve_tokens_fuzzy has two application paths — a literal-map
-    expression under MAPPING_LITERAL_MAX resolved entries, a broadcast join
+    expression up to MAPPING_LITERAL_MAX resolved entries, a broadcast join
     above — that must be row-for-row identical. Force each path on the same
-    token set (dictionary variants + misses + null) and compare."""
+    token set (dictionary variants + misses + null) and compare. Neither
+    path may leave a cached block behind (a storage snapshot diff, since
+    other suite tests may hold session-lifetime blocks)."""
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import lookup
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
         build_variant_index,
@@ -112,10 +118,13 @@ def test_resolve_literal_and_join_paths_agree(spark, monkeypatch):
     )
 
     def run():
-        return sorted(
+        before = _storage_ids(spark)
+        rows = sorted(
             (r["i"], r["canonical"])
             for r in lookup.resolve_tokens_fuzzy(df, "token").collect()
         )
+        assert _storage_ids(spark) <= before
+        return rows
 
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 10_000)
     lit_rows = run()
@@ -130,7 +139,8 @@ def test_extract_literal_and_join_paths_agree(spark, monkeypatch):
     (literal rebuilds hits with transform/element_at, join path with
     posexplode + ordered re-aggregation) which was only reachable at >512
     resolved tokens — force both paths over the same texts and require
-    row-for-row equality, nulls/empties included."""
+    row-for-row equality, nulls/empties included, and no cached block left
+    behind by either."""
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import extract, lookup
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
         build_variant_index,
@@ -146,11 +156,14 @@ def test_extract_literal_and_join_paths_agree(spark, monkeypatch):
     )
 
     def run():
-        out = extract.with_all_locations_fuzzy(df, "text", "i", "locs")
-        return sorted(
+        before = _storage_ids(spark)
+        out = extract.with_all_locations_fuzzy(df, "text", "locs")
+        rows = sorted(
             (r["i"], tuple(r["locs"]) if r["locs"] is not None else None)
             for r in out.collect()
         )
+        assert _storage_ids(spark) <= before
+        return rows
 
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 10_000)
     lit_rows = run()

@@ -140,3 +140,34 @@ def test_report_cycle_leaves_no_persisted_rdds(spark, sf_dir, tmp_path):
         write_report_csv(getattr(trips, name)(spark, sf_dir), str(tmp_path / name))
         assert any(f.endswith(".csv") for f in os.listdir(tmp_path / name))
     assert persisted() - before == set()
+
+
+def test_fuzzy_cascade_scores_each_distinct_token_once(spark):
+    """The distributed token cascade is one linear plan whose fuzzy scorer
+    runs once per distinct token: exactly one ArrowEvalPython node, above
+    the token distinct's HashAggregate. Its resolved-only filter is
+    deterministic in the distinct's key, so if the scorer were deterministic
+    Catalyst would push the filter, scorer included, below the distinct and
+    score every input row as well."""
+    from pyspark.sql import functions as F
+
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import extract, lookup
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
+        build_variant_index,
+    )
+
+    texts = spark.createDataFrame(
+        [("الهرم + مطارر",), ("تشغيل هيلتو",), ("xyz",), (None,)], "text string"
+    )
+    tokens = texts.select(
+        F.posexplode_outer(extract.trip_tokens_expr(F.col("text"))).alias("pos", "token")
+    )
+    df = lookup._resolved_tokens(tokens, "token", build_variant_index(), lookup.FUZZY_SCORE_CUTOFF)
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    evals = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
+    aggs = [i for i, line in enumerate(lines) if "HashAggregate(" in line]
+    assert len(evals) == 1, "the fuzzy scorer must run exactly once"
+    assert aggs and evals[0] < min(aggs), "the fuzzy scorer must sit above the token distinct"
+    assert dict(df.collect()) == {
+        "الهرم": "Pyramids of Giza", "مطارر": "Cairo Airport", "تشغيل هيلتو": "Helton Hotel",
+    }

@@ -155,9 +155,9 @@ def test_api_endpoint_functions_reference_shapes(spark, tmp_path):
 
 def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_path):
     """ADVICE r4: on the broadcast-join path the cascade's cut-point caches
-    used to outlive the request in a long-lived service. clean_batch's
-    terminal collect must now unpersist them — zero persisted RDDs after
-    the call (force the join path via MAPPING_LITERAL_MAX=0)."""
+    used to outlive the request in a long-lived service. The cascade caches
+    nothing, so no request may add a persisted RDD, and the caller cleans
+    up nothing (force the join path via MAPPING_LITERAL_MAX=0)."""
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import lookup
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.service import CleaningService
 
@@ -175,8 +175,7 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     assert storage_ids() <= before
 
     # a small batch is now cleaned in the driver and never reaches the join
-    # path; a batch above the local size limit and run_cycle still thread
-    # caches_out through it
+    # path; a batch above the local size limit and run_cycle still do
     big = [f"من الهرم الى المطار {i}" for i in range(LOCAL_MAX_TEXTS)] + ["مطارر", None]
     out = svc.clean_batch(big)
     assert len(out["results"]) == len(big)
@@ -191,9 +190,7 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     assert cyc["records"] == 1
     assert storage_ids() <= before
 
-    # literal path too (resolve_tokens_fuzzy unpersists internally — that
-    # unpersist was also a no-op pre-r5 because the cache handle pointed at
-    # a derived join plan, not the cached frame)
+    # literal path too
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 512)
     out = svc.clean_batch(["من الهرم الى المطار"])
     assert len(out["results"]) == 1
@@ -267,13 +264,8 @@ def _answers(out: dict) -> list[tuple]:
 def _reference(spark, svc: CleaningService, texts, fuzzy: bool) -> dict:
     """clean_texts_df over a createDataFrame of ``texts`` (the distributed
     path), keyed by text."""
-    caches: list = []
     df = spark.createDataFrame([(t,) for t in dict.fromkeys(texts)], "text string")
-    rows = clean_texts_df(
-        df, "text", fuzzy, svc.index, cutoff=svc.fuzzy_cutoff, caches_out=caches
-    ).collect()
-    for c in caches:
-        c.unpersist(blocking=True)
+    rows = clean_texts_df(df, "text", fuzzy, svc.index, cutoff=svc.fuzzy_cutoff).collect()
     return {
         r["text"]: (r["text"], r["main_location"], list(r["all_locations"]), r["trip_type"])
         for r in rows
