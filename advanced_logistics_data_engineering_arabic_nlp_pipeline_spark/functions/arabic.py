@@ -111,69 +111,14 @@ _WORD_FINAL_HA_SPARK = f"ه(?=[^{WORDCH}]|$)"   # lookahead ok in Java/Python
 
 # ── 1. Spark Column expressions ──────────────────────────────────────────────
 
-# Column expression trees are immutable, so an already-built chain can be
-# reused verbatim wherever the same input expression appears again — and the
-# D1 chain below is ~10 chained regexp/HOF constructor calls, each a py4j
-# round-trip (~0.6 s per build, measured). The memo is keyed on the printed
-# input expression plus the live gateway *generation* (a new JVM invalidates
-# old refs).
-_NORM_MEMO: dict[tuple[int, str], Column] = {}
-
-# Every generation-keyed memo in the package registers here so a gateway
-# swap evicts stale entries everywhere (also bounds memo growth to the
-# working set of ONE generation — id()-keyed dicts would grow forever).
-_GEN_KEYED_MEMOS: list[dict] = [_NORM_MEMO]
-
-_GATEWAY_REF = None  # weakref.ref to the last-seen gateway
-_GATEWAY_GEN = 0
-
-
-def _gateway_generation() -> int:
-    """Monotonic generation counter for the live py4j gateway.
-
-    ``id(SparkContext._gateway)`` alone is unsafe as a memo key: after a
-    gateway/JVM restart the old object is GC'd and CPython may hand the SAME
-    id() to the new gateway, resurrecting memoized Column trees that hold
-    dead-JVM py4j refs. Holding a weakref to the gateway alongside a counter
-    makes identity explicit — any *new* gateway object, even at a recycled
-    address, bumps the generation and evicts all prior-generation entries.
-    """
-    global _GATEWAY_REF, _GATEWAY_GEN
-    import weakref
-
-    from pyspark import SparkContext
-
-    gw = SparkContext._gateway
-    if gw is None:
-        raise RuntimeError("no live py4j gateway")
-    cur = _GATEWAY_REF() if _GATEWAY_REF is not None else None
-    if cur is not gw:
-        _GATEWAY_GEN += 1
-        _GATEWAY_REF = weakref.ref(gw)
-        gen = _GATEWAY_GEN
-        for memo in _GEN_KEYED_MEMOS:
-            for k in [k for k in memo if k[0] != gen]:
-                del memo[k]
-    return _GATEWAY_GEN
-
-
+# Each call builds the D1 chain afresh: ~10 chained regexp/HOF constructor
+# calls, each a py4j round-trip. Code that applies it per request or per
+# report holds the built Column instead (operators.extract.local_cleaner
+# builds the NLP block's expressions once per dictionary).
 def normalize_arabic(c: Column) -> Column:
     """D1 ``_normalize`` (cleaner_v6.py:156-171): lower+trim, alef fold,
     tatweel strip, ى→ي, word-final ه→ة, diacritics strip, lam-alef→لا,
     embedded-EN-stopword drop, ≥3 char-run squeeze to 2, whitespace collapse."""
-    try:
-        key = (_gateway_generation(), str(c))
-    except Exception:
-        key = None
-    if key is not None and key in _NORM_MEMO:
-        return _NORM_MEMO[key]
-    out = _normalize_arabic_build(c)
-    if key is not None:
-        _NORM_MEMO[key] = out
-    return out
-
-
-def _normalize_arabic_build(c: Column) -> Column:
     c = F.lower(F.trim(c.cast("string")))
     c = F.regexp_replace(c, ALEF_VARIANTS, "ا")
     c = F.regexp_replace(c, TATWEEL, "")

@@ -5,25 +5,28 @@ verbatim — including the reference's dead branch where any airport-regex hit
 categorizes as 'Airport Transfer' unconditionally (cleaner_v6.py:284-288):
 category parity requires keeping that quirk.
 
-Two implementations of the location scan:
+The NLP block (locs + clean location + trip type) is built once per
+(dictionary, cutoff): :func:`local_cleaner` returns the shared
+:class:`LocalCleaner`, which holds the block's Column expressions over one
+private text column (``TEXT``), and its ``lookup.LocalTokenResolver``
+holds the token cascade's. Two paths read them:
 
-- ``extract_all_locations_expr``: pure Column expression (tiers 1-2).
-  Zero-shuffle, whole-stage-codegen, SQL-mirrorable → the oracle-checked
-  fast path and the default at scale.
-- ``with_all_locations_fuzzy``: adds tier-3 fuzzy. The distinct tokens
-  resolve in one collected pass (operators.lookup); the resulting map
-  applies back as a literal map expression, or for a large map as
-  posexplode → broadcast join → ordered re-aggregation (one groupBy
-  shuffle). Used when fuzzy recall is worth it.
+- :meth:`LocalCleaner.clean`, for up to ``LOCAL_MAX_TEXTS`` texts already
+  in the driver, with no Spark job: the service's small requests and
+  ``with_nlp_enrichment``'s distinct texts (up to
+  ``ENRICH_LOCAL_MAX_TEXTS``);
+- :meth:`LocalCleaner.enrich`, over a DataFrame of any size:
+  ``service.clean_texts_df`` and ``with_nlp_enrichment``'s fallback. Its
+  location scan is either the tier-1/2 expression
+  (``extract_all_locations_expr``: zero-shuffle, whole-stage codegen,
+  SQL-mirrorable, the oracle-checked path) or, with tier-3 fuzzy,
+  :func:`with_all_locations_fuzzy`: the distinct tokens resolve in one
+  collected pass (operators.lookup), and the resulting map applies back as
+  a literal map expression, or for a large map as posexplode → broadcast
+  join → ordered re-aggregation (one groupBy shuffle).
 
-``LocalCleaner`` is the driver-local NLP block (locs + clean location +
-trip type) for up to ``LOCAL_MAX_TEXTS`` texts already in the driver,
-with no Spark job: the service's small requests and
-``with_nlp_enrichment``'s distinct texts (up to
-``ENRICH_LOCAL_MAX_TEXTS``). Its fuzzy scan,
-``LocalLocationScan``, runs the fuzzy scan's literal path and shares the
-tokenization (``trip_tokens_expr``) and hit assembly
-(``literal_hits_expr``) with ``with_all_locations_fuzzy``.
+The fuzzy scans, local and distributed, share the tokenization
+(``trip_tokens_expr``) and the hit assembly (``literal_hits_expr``).
 """
 
 from __future__ import annotations
@@ -32,8 +35,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arabic import (
-    _GEN_KEYED_MEMOS,
-    _gateway_generation,
     is_admin,
     is_airport,
     is_nile,
@@ -41,9 +42,12 @@ from ..functions.arabic import (
     is_round_trip,
     normalize_arabic,
     scrub_round_trip,
+    strip_op_prefix,
     title_first_two_words,
     tokenize_trip,
 )
+from ..session import per_gateway
+from ..sources.dictionary import _default_index
 from ..sources.local import local_frame
 
 _DIGITS_ONLY = "^[0-9٠-٩]+$"
@@ -61,6 +65,9 @@ LOCAL_MAX_TEXTS = 4096
 # overtakes the driver sooner.
 ENRICH_LOCAL_MAX_TEXTS = {True: 2048, False: 1024}
 
+# The private text column every shared NLP expression reads
+TEXT = "__txt"
+
 
 def extract_all_locations_expr(text: Column, index: dict[str, str] | None = None) -> Column:
     """F2 (cleaner_v6.py:248-266): round-trip scrub → tokenize → per-token
@@ -73,8 +80,7 @@ def extract_all_locations_expr(text: Column, index: dict[str, str] | None = None
     form (token / op-prefix-stripped token) is normalized exactly once —
     HOF lambdas are interpreted without subexpression elimination, so the
     naive per-tier formulation would re-normalize per tier."""
-    from ..functions.arabic import normalize_arabic, strip_op_prefix
-    from ..operators.lookup import tier12_expr
+    from .lookup import tier12_expr
 
     raw = F.trim(text.cast("string"))
     tokens = tokenize_trip(scrub_round_trip(raw))
@@ -147,22 +153,21 @@ def with_nlp_enrichment(
     text_col: str,
     fuzzy: bool = False,
     index: dict[str, str] | None = None,
-    locs_col: str = "locs",
-    clean_col: str = "End_Location_Clean",
-    type_col: str = "Trip_Type",
 ) -> DataFrame:
     """F4's full NLP block (locs + clean location + trip type, Main.py:406-425)
     resolved once per *distinct* text, then joined back — the reference's
     lru_cache insight (cleaner_v6.py:37, 180) applied to the whole enrichment,
     not just the dictionary lookup. Every output is a pure function of the
-    text, so per-distinct resolution is semantics-preserving.
+    text, so per-distinct resolution is semantics-preserving. Both paths
+    read the shared cleaner (:func:`local_cleaner`), so neither builds an
+    NLP expression.
 
     Local path: a probe, ``distinct().limit(limit + 1).collect()`` with
     ``limit = ENRICH_LOCAL_MAX_TEXTS[fuzzy]`` (2,048 fuzzy, 1,024 not),
     fetches the distinct texts (cast to string, the type every expression
     below reads them as). When there are at most ``limit`` of them,
-    :class:`LocalCleaner` enriches them in the driver — no Python worker,
-    no cached cut point, no further Spark job — and the
+    :meth:`LocalCleaner.clean` enriches them in the driver — no Python
+    worker, no cached cut point, no further Spark job — and the
     (text, locs, clean location, trip type) rows join back as a broadcast
     driver-local relation, null-safe on the text. The plan this returns
     then holds no enrichment work at all.
@@ -182,86 +187,45 @@ def with_nlp_enrichment(
     vs 0.96 s, 4,096: 1.24 vs 1.05 s; random texts 1,000: 0.44 vs 0.61 s,
     2,000: 0.81 vs 0.75 s. The probe took 0.10-0.20 s at every size.
 
-    Above the limit the distributed path below runs, paying the probe as
-    one extra distinct pass: 0.26-0.36 s of a 9-13 s ``trips_fuzzy_stress``
-    at sf0.1 (100,000 distinct texts) on the same host, measured by hand;
-    no benchmark workload reaches this path. With fuzzy on it also runs
-    the token cascade's collect (:func:`with_all_locations_fuzzy`) when
+    Above the limit, :meth:`LocalCleaner.enrich` runs over the distinct
+    texts and the result joins back, paying the probe as one extra
+    distinct pass: 0.26-0.36 s of a 9-13 s ``trips_fuzzy_stress`` at
+    sf0.1 (100,000 distinct texts) on the same host, measured by hand; no
+    benchmark workload reaches this path. With fuzzy on it also runs the
+    token cascade's collect (:func:`with_all_locations_fuzzy`) when
     called; neither path caches anything or leaves cleanup to the caller.
     Trip texts are short human-entered strings with heavy repetition, so
     the distinct side is orders of magnitude smaller than the fact side
     and AQE broadcast-converts the join-back; the regex-heavy NLP chain
-    runs |distinct| times instead of |rows| times. If a workload ever has
-    near-unique texts, inline ``extract_all_locations_expr`` instead (the
-    expression path needs no shuffle at all)."""
-    from ..sources.dictionary import _default_index
-    from .lookup import FUZZY_SCORE_CUTOFF
-
+    runs |distinct| times instead of |rows| times."""
     spark = df.sparkSession
+    cleaner = local_cleaner(index)
     key = df[text_col].cast("string")
     limit = ENRICH_LOCAL_MAX_TEXTS[bool(fuzzy)]
-    distinct = [
-        r["__txt"] for r in df.select(key.alias("__txt")).distinct().limit(limit + 1).collect()
-    ]
+    distinct = [r[0] for r in df.select(key.alias(TEXT)).distinct().limit(limit + 1).collect()]
     if len(distinct) <= limit:
-        cleaner = local_cleaner(
-            index if index is not None else _default_index(), FUZZY_SCORE_CUTOFF
-        )
-        rows = [
-            {
-                "__txt": r["text"], locs_col: list(r["all_locations"]),
-                clean_col: r["main_location"], type_col: r["trip_type"],
-            }
-            for r in cleaner.clean(spark, distinct, fuzzy)
-        ]
-        texts = local_frame(
-            spark, rows,
-            f"__txt string, `{locs_col}` array<string>, `{clean_col}` string, "
-            f"`{type_col}` string",
-        )
-        return df.join(
-            F.broadcast(texts), key.eqNullSafe(texts["__txt"]), how="left"
-        ).drop("__txt")
-
-    # Rebalance after the distinct: its output is small in bytes, so AQE
-    # coalesces to ~1 partition, which would run the regex-heavy NLP chain
-    # below single-threaded when the distinct side is large (the all-unique
-    # stress shape). The moved data is just the text strings.
-    texts = (
-        df.select(F.col(text_col).alias("__txt"))
-        .distinct()
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    )
-    if fuzzy:
-        texts = with_all_locations_fuzzy(texts, "__txt", locs_col, index)
+        types = {
+            TEXT: "string", "all_locations": "array<string>",
+            "main_location": "string", "trip_type": "string",
+        }
+        rows = [dict(zip(types, r)) for r in cleaner.clean(spark, distinct, fuzzy)]
+        schema = ", ".join(f"{c} {t}" for c, t in types.items())
+        texts, on = F.broadcast(local_frame(spark, rows, schema)), key
     else:
-        texts = texts.withColumn(
-            locs_col, extract_all_locations_expr(F.col("__txt"), index)
-        )
-    # 1:1 Generate barrier: locs/norm feed many lazily-evaluated CASE
-    # branches (no subexpression elimination), so block CollapseProject from
-    # inlining the resolution chain into each branch
-    texts = texts.withColumn("__norm", normalize_arabic(F.col("__txt")))
+        # Rebalance after the distinct: its output is small in bytes, so AQE
+        # coalesces to ~1 partition, which would run the regex-heavy NLP
+        # chain single-threaded when the distinct side is large (the
+        # all-unique stress shape). The moved data is just the text strings.
+        texts = df.select(F.col(text_col).alias(TEXT)).distinct()
+        texts = cleaner.enrich(texts.repartition(spark.sparkContext.defaultParallelism), fuzzy)
+        on = df[text_col]
     texts = texts.select(
-        "__txt",
-        F.explode(F.array(F.struct(F.col(locs_col), F.col("__norm")))).alias("__b"),
-    ).select(
-        "__txt",
-        F.col(f"__b.{locs_col}").alias(locs_col),
-        F.col("__b.__norm").alias("__norm"),
+        TEXT,
+        F.col("all_locations").alias("locs"),
+        F.col("main_location").alias("End_Location_Clean"),
+        F.col("trip_type").alias("Trip_Type"),
     )
-    texts = texts.withColumn(
-        clean_col, end_location_clean_expr(F.col("__txt"), F.col(locs_col))
-    )
-    texts = texts.withColumn(
-        type_col,
-        categorize_trip_type_expr(
-            F.col("__txt"), F.col(locs_col), norm=F.col("__norm")
-        ),
-    ).drop("__norm")
-    return df.join(
-        texts, df[text_col].eqNullSafe(texts["__txt"]), how="left"
-    ).drop("__txt")
+    return df.join(texts, on.eqNullSafe(texts[TEXT]), how="left").drop(TEXT)
 
 
 def trip_tokens_expr(text: Column) -> Column:
@@ -293,83 +257,95 @@ def literal_hits_expr(text: Column, m: Column | None) -> Column:
     ).otherwise(hits)
 
 
-class LocalLocationScan:
-    """F2 with tier-3 fuzzy for texts already in the driver: the steps of
-    :func:`with_all_locations_fuzzy`'s literal path over driver-local
-    relations (``sources.local``), with no Spark job. The texts' tokens
-    are collected and deduplicated in the driver (a local relation takes
-    no distinct), the distinct tokens resolve through
-    ``lookup.LocalTokenResolver``, and :func:`literal_hits_expr` assembles
-    the hits from a map that each text carries for its own tokens (so the
-    expressions stay constant and are built once, here). Unlike the
-    distributed path this never switches to a join: callers bound the
-    input instead (``LOCAL_MAX_TEXTS``)."""
+class LocalCleaner:
+    """The NLP block (all_locations, main_location, trip_type) for one
+    dictionary and cutoff. Its Column expressions (hundreds of py4j calls)
+    are built once here, over the private text column ``TEXT``, and
+    ``resolver`` (``lookup.LocalTokenResolver``) holds the token
+    cascade's. Two paths read them:
+
+    - :meth:`clean`, for texts already in the driver, with no Spark job:
+      the texts become a driver-local relation (``sources.local``) and
+      only Project steps run over it, so Catalyst evaluates all of it in
+      the driver. With fuzzy on, the texts' tokens are deduplicated in the
+      driver, resolve through ``resolver`` (tier-3 misses scored in the
+      driver) and :func:`literal_hits_expr` assembles the hits from a map
+      that each text carries for its own tokens: the steps of
+      :func:`with_all_locations_fuzzy`'s literal path, which callers keep
+      in range by bounding the input (``LOCAL_MAX_TEXTS``);
+    - :meth:`enrich`, over a DataFrame of any size.
+
+    Holds no per-call state: get one from :func:`local_cleaner` and share
+    it across threads."""
 
     def __init__(self, index: dict[str, str], cutoff: float) -> None:
         from .lookup import LocalTokenResolver
 
+        self.index, self.cutoff = index, cutoff
         self.resolver = LocalTokenResolver(index, cutoff)
-        self.tokens = trip_tokens_expr(F.col("text")).alias("__toks")
+        t, locs = F.col(TEXT), F.col("all_locations")
+        self.tokens = trip_tokens_expr(t).alias("__toks")
         self.hits = literal_hits_expr(
-            F.col("text"), F.map_from_arrays(F.col("__mk"), F.col("__mv"))
+            t, F.map_from_arrays(F.col("__mk"), F.col("__mv"))
         ).alias("all_locations")
-
-    def frame(self, spark, texts: list[str | None]) -> DataFrame:
-        """A driver-local (text, all_locations) frame, in input order."""
-        df = local_frame(spark, [{"text": t} for t in texts], "text string")
-        toks = [r["__toks"] for r in df.select(self.tokens).collect()]
-        mapping = self.resolver.resolve(spark, list(dict.fromkeys(t for ts in toks for t in ts)))
-        rows = []
-        for text, ts in zip(texts, toks):
-            own = {t: mapping[t] for t in ts if t in mapping}
-            rows.append({"text": text, "__mk": list(own), "__mv": list(own.values())})
-        schema = "text string, __mk array<string>, __mv array<string>"
-        return local_frame(spark, rows, schema).select("text", self.hits)
-
-
-class LocalCleaner:
-    """The NLP block (all_locations, main_location, trip_type) for texts
-    already in the driver, with no Spark job: the texts become a
-    driver-local relation, tiers 1-2 run as the same Column expressions,
-    tier-3 misses are scored in the driver (:class:`LocalLocationScan`),
-    and only Project steps run over the relation, so Catalyst evaluates
-    all of it in the driver. Holds no per-call state: get one from
-    :func:`local_cleaner` and share it across threads."""
-
-    def __init__(self, index: dict[str, str], cutoff: float) -> None:
-        self.scan = LocalLocationScan(index, cutoff)
-        self.tier12 = extract_all_locations_expr(F.col("text"), index).alias("all_locations")
-        t, locs = F.col("text"), F.col("all_locations")
-        self.outputs = [
-            "text", "all_locations",
+        self.tier12 = extract_all_locations_expr(t, index).alias("all_locations")
+        self.norm = normalize_arabic(t).alias("__norm")
+        # 1:1 Generate barrier: locs/norm feed many lazily-evaluated CASE
+        # branches (no subexpression elimination), so block CollapseProject
+        # from inlining the resolution chain into each branch
+        self.barrier = F.explode(F.array(F.struct(locs, self.norm))).alias("__b")
+        self.block = [
+            locs,
             end_location_clean_expr(t, locs).alias("main_location"),
-            categorize_trip_type_expr(t, locs).alias("trip_type"),
+            categorize_trip_type_expr(t, locs, norm=F.col("__norm")).alias("trip_type"),
         ]
+        self.text = t.alias("text")
 
     def clean(self, spark, texts: list[str | None], fuzzy: bool) -> list:
-        """Result rows in input order; at most ``LOCAL_MAX_TEXTS`` texts."""
+        """(text, all_locations, main_location, trip_type) rows in input
+        order; at most ``LOCAL_MAX_TEXTS`` texts."""
+        df = local_frame(spark, [{TEXT: t} for t in texts], f"{TEXT} string")
         if fuzzy:
-            df = self.scan.frame(spark, texts)
+            toks = [r[0] for r in df.select(self.tokens).collect()]
+            distinct = list(dict.fromkeys(t for ts in toks for t in ts))
+            mapping = self.resolver.resolve(spark, distinct)
+            rows = []
+            for text, ts in zip(texts, toks):
+                own = {t: mapping[t] for t in ts if t in mapping}
+                rows.append({TEXT: text, "__mk": list(own), "__mv": list(own.values())})
+            schema = f"{TEXT} string, __mk array<string>, __mv array<string>"
+            df = local_frame(spark, rows, schema).select(TEXT, self.hits, self.norm)
         else:
-            df = local_frame(spark, [{"text": t} for t in texts], "text string")
-            df = df.select("text", self.tier12)
-        return df.select(*self.outputs).collect()
+            df = df.select(TEXT, self.tier12, self.norm)
+        return df.select(self.text, *self.block).collect()
+
+    def enrich(self, df: DataFrame, fuzzy: bool) -> DataFrame:
+        """``df``, whose text is in ``TEXT``, with all_locations,
+        main_location and trip_type appended: one distributed plan. With
+        fuzzy on, the token cascade's collect runs when this is called
+        (:func:`with_all_locations_fuzzy`); nothing stays cached."""
+        if fuzzy:
+            df = with_all_locations_fuzzy(df, TEXT, "all_locations", self.index, self.cutoff)
+        else:
+            df = df.select("*", self.tier12)
+        keep = [F.col(f"`{c}`") for c in df.columns if c != "all_locations"]
+        df = df.select(*keep, self.barrier).select(*keep, "__b.*")
+        return df.select(*keep, *self.block)
 
 
-# (gateway generation, dictionary contents, cutoff) → LocalCleaner: its
-# expressions are hundreds of py4j calls (~70 ms a build), and every
-# trips report and every service shares the same few settings
-_CLEANERS: dict[tuple, LocalCleaner] = {}
-_GEN_KEYED_MEMOS.append(_CLEANERS)
+def local_cleaner(
+    index: dict[str, str] | None = None, cutoff: float | None = None
+) -> LocalCleaner:
+    """The shared :class:`LocalCleaner` for ``index`` (default: the built-in
+    dictionary) and ``cutoff`` (default: ``lookup.FUZZY_SCORE_CUTOFF``), one
+    per live gateway: every trips report, service and distributed call with
+    the same settings reads the same expressions."""
+    from .lookup import FUZZY_SCORE_CUTOFF
 
-
-def local_cleaner(index: dict[str, str], cutoff: float) -> LocalCleaner:
-    """The shared :class:`LocalCleaner` for ``index`` and ``cutoff``."""
-    key = (_gateway_generation(), tuple(index.items()), cutoff)
-    cleaner = _CLEANERS.get(key)
-    if cleaner is None:
-        cleaner = _CLEANERS[key] = LocalCleaner(index, cutoff)
-    return cleaner
+    index = index if index is not None else _default_index()
+    cutoff = cutoff if cutoff is not None else FUZZY_SCORE_CUTOFF
+    key = ("cleaner", tuple(index.items()), cutoff)
+    return per_gateway(key, lambda: LocalCleaner(index, cutoff))
 
 
 def with_all_locations_fuzzy(
@@ -385,6 +361,9 @@ def with_all_locations_fuzzy(
     3-tier cascade once per distinct token, and the (token → canonical)
     mapping is collected to the driver when this is called
     (``lookup._distinct_token_mapping``); the returned plan caches nothing.
+    The tokenization and the cascade come from the shared cleaner
+    (:func:`local_cleaner`); only the literal path's hit assembly, which
+    carries this call's mapping, is built per call.
 
     Adaptive application (mirrors operators.lookup.resolve_tokens_fuzzy):
     a mapping of at most ``MAPPING_LITERAL_MAX`` entries is inlined as a
@@ -397,21 +376,16 @@ def with_all_locations_fuzzy(
     the scan falls back to explode → broadcast join → ordered
     re-aggregation, joined back to ``df`` on the text."""
     from .lookup import (
-        FUZZY_SCORE_CUTOFF,
         MAPPING_LITERAL_MAX,
         _distinct_token_mapping,
         canonical_map_frame,
         canonical_map_literal,
     )
-    from ..sources.dictionary import build_variant_index
 
-    index = index if index is not None else build_variant_index()
-    cutoff = cutoff if cutoff is not None else FUZZY_SCORE_CUTOFF
-    texts = df.select(F.col(text_col).alias("__ftxt")).distinct()
-    exploded = texts.select(
-        F.col("__ftxt"), F.posexplode_outer(trip_tokens_expr(F.col("__ftxt"))).alias("__pos", "__tok")
-    )
-    mapping = _distinct_token_mapping(exploded, "__tok", index, cutoff)
+    cleaner = local_cleaner(index, cutoff)
+    texts = df.select(F.col(text_col).alias(TEXT)).distinct()
+    exploded = texts.select(TEXT, F.posexplode_outer(cleaner.tokens).alias("__pos", "__tok"))
+    mapping = _distinct_token_mapping(exploded, "__tok", cleaner.index, cleaner.cutoff)
     if len(mapping) <= MAPPING_LITERAL_MAX:
         m = canonical_map_literal(mapping)
         return df.withColumn(out_col, literal_hits_expr(F.col(text_col), m))
@@ -423,7 +397,7 @@ def with_all_locations_fuzzy(
         "left",
     ).drop("__t")
     rebuilt = (
-        resolved.groupBy("__ftxt")
+        resolved.groupBy(F.col(TEXT).alias("__ftxt"))
         .agg(
             F.array_distinct(
                 F.filter(

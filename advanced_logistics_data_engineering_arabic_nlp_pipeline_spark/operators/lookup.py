@@ -19,9 +19,10 @@ the driver, then applied back as a literal map or, for a large mapping,
 one broadcast join. At 100 TB the distinct token set is orders of
 magnitude smaller than the row count, and the resolved mapping smaller
 still. For a handful of tokens already in the driver (a small service
-request), :class:`LocalTokenResolver` runs the same cascade over a
-driver-local relation and scores the misses in the driver — no Spark job,
-no Python worker.
+request), the same cascade runs over a driver-local relation and scores
+the misses in the driver — no Spark job, no Python worker. Both paths read
+one set of cascade expressions per (dictionary, cutoff), built once by
+:class:`LocalTokenResolver` and shared through ``extract.local_cleaner``.
 
 Fuzzy scoring mirrors rapidfuzz ``token_sort_ratio`` (public algorithm):
 sort whitespace tokens, then Indel similarity = 2*LCS/(len_a+len_b) * 100.
@@ -57,18 +58,6 @@ def tier12_expr(norm: Column, index: dict[str, str] | None = None) -> Column:
     return F.coalesce(
         F.element_at(m, norm),
         F.element_at(m, F.regexp_extract(norm, tier2_pattern(index), 1)),
-    )
-
-
-def resolve_token_expr(token: Column, index: dict[str, str] | None = None) -> Column:
-    """Full expression-only cascade (tiers 1-2 on the token, then on its
-    op-prefix-stripped form). This is the oracle-checkable fast path; add
-    tier-3 with :func:`resolve_tokens_fuzzy` on a tokens DataFrame."""
-    index = index if index is not None else build_variant_index()
-    stripped_raw = strip_op_prefix(token)
-    return F.coalesce(
-        tier12_expr(normalize_arabic(token), index),
-        F.when(stripped_raw != "", tier12_expr(normalize_arabic(stripped_raw), index)),
     )
 
 
@@ -341,21 +330,22 @@ def _resolved_tokens(
 ) -> DataFrame:
     """The resolved (``__t``, ``__canonical``) rows for every *distinct* raw
     token of ``tokens_df``, as one linear plan: distinct → repartition →
-    cascade inputs → one fuzzy UDF over the miss forms → cascade order.
-    The whole cascade, not just the fuzzy UDF, runs once per distinct raw
-    token. The repartition matters: the distinct's output is small in
-    bytes, so AQE would coalesce it to ~1 partition and run the
+    cascade inputs → one fuzzy UDF over the miss forms → cascade order,
+    each read from the shared :class:`LocalTokenResolver` for ``index``
+    and ``cutoff`` (``extract.local_cleaner``), so no expression is built
+    per call. The whole cascade, not just the fuzzy UDF, runs once per
+    distinct raw token. The repartition matters: the distinct's output is
+    small in bytes, so AQE would coalesce it to ~1 partition and run the
     regex-heavy tiers and the scorer single-threaded on a large distinct
     set. The UDF still sees every distinct token, but a non-miss row
     reaches it as two nulls and costs no scoring."""
-    fuzzy = fuzzy_lookup_udf(index, cutoff)
+    from .extract import local_cleaner
+
+    r = local_cleaner(index, cutoff).resolver
     d = tokens_df.select(F.col(token_col).alias("__t")).distinct()
     d = d.repartition(tokens_df.sparkSession.sparkContext.defaultParallelism)
-    d = with_cascade_inputs(d, cascade_inputs(index))
-    d = d.withColumn("__fz", fuzzy(*fuzzy_misses())).select("*", "__fz.*")
-    return d.select("__t", cascade_expr().alias("__canonical")).filter(
-        F.col("__canonical").isNotNull()
-    )
+    d = with_cascade_inputs(d, r.inputs).select("*", r.scores).select("*", "__fz.*")
+    return d.select("__t", r.canonical).filter(r.resolved)
 
 
 def _distinct_token_mapping(
@@ -378,9 +368,10 @@ def _distinct_token_mapping(
 
 
 def canonical_map_literal(mapping: dict[str, str]) -> Column | None:
-    """A (token → canonical) mapping as one literal MAP column — two py4j
-    array literals total, never per-entry ``lit`` calls. None for an empty
-    mapping (``map_from_arrays`` can't infer empty-array types)."""
+    """A (token → canonical) mapping as one literal MAP column (one ``lit``
+    per key and value; the mapping is at most ``MAPPING_LITERAL_MAX``
+    entries). None for an empty mapping (``map_from_arrays`` can't infer
+    empty-array types)."""
     if not mapping:
         return None
     return F.map_from_arrays(F.lit(list(mapping)), F.lit(list(mapping.values())))
@@ -394,17 +385,18 @@ def canonical_map_frame(spark, mapping: dict[str, str]) -> DataFrame:
 
 
 class LocalTokenResolver:
-    """The driver-side twin of :func:`_distinct_token_mapping`, for a
-    handful of distinct tokens already in the driver: the same cascade
-    inputs, miss forms and cascade order, over driver-local relations
-    (``sources.local``), with the fuzzy misses scored in the driver by
-    :func:`fuzzy_resolve` instead of the pandas UDF. Only Project and
-    Filter steps run over the relations, which Catalyst folds into the
-    local data, so no Spark job runs and no Python worker starts.
-
-    Per-call data travels in the relations, never in the expressions, so
-    the expressions are built once here (each build is dozens of py4j
-    calls) and reused by every call, from any thread."""
+    """The token cascade's expressions for one dictionary and cutoff, built
+    once here (each build is dozens of py4j calls) and read by both paths:
+    :func:`_resolved_tokens` applies the cascade inputs, the fuzzy pandas
+    UDF over the miss forms and the cascade order to a distributed frame of
+    tokens, and :meth:`resolve` applies the same inputs, miss forms and
+    order to a handful of tokens already in the driver, over driver-local
+    relations (``sources.local``), scoring the misses in the driver with
+    :func:`fuzzy_resolve` instead of the UDF. Only Project and Filter steps
+    run over those relations, which Catalyst folds into the local data, so
+    no Spark job runs and no Python worker starts. Per-call data travels in
+    the frames, never in the expressions, so one resolver serves every call,
+    from any thread; get it from ``extract.local_cleaner``."""
 
     def __init__(self, index: dict[str, str], cutoff: float) -> None:
         self.index, self.cutoff = index, cutoff
@@ -415,6 +407,7 @@ class LocalTokenResolver:
             "__t", "__norm", "__sraw", "__snorm", "__r12", "__r12s",
             kn.alias("__kn"), ks.alias("__ks"),
         ]
+        self.scores = fuzzy_lookup_udf(index, cutoff)(kn, ks).alias("__fz")
         self.canonical = cascade_expr().alias("__canonical")
         self.resolved = F.col("__canonical").isNotNull()
 

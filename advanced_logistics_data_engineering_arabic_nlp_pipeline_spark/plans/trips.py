@@ -198,9 +198,10 @@ def trips_fuzzy_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix, so |distinct texts| == |rows| and the distinct-resolve
     optimization buys nothing — the full 3-tier NLP (fuzzy included) runs
     once per row. Up to ``extract.ENRICH_LOCAL_MAX_TEXTS[True]`` rows it
-    runs in the driver; benched at sf0.1 (100,000 rows) it takes the
-    distributed path after the extra distinct probe, so the claimed
-    fallback behavior has a recorded number instead of an assertion.
+    runs in the driver; at sf0.1 (100,000 rows) it takes the distributed
+    path after the extra distinct probe. No benchmark workload reaches
+    that path, so its timings are by-hand runs (recorded in CHANGES.md),
+    not benchmark evidence.
     Rows-only by design (fuzzy tier has no SQL mirror); the aggregate
     output keeps the bench noop sink from skipping any of the per-row
     work."""

@@ -40,14 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import __version__
-from .operators.extract import (
-    LOCAL_MAX_TEXTS,
-    categorize_trip_type_expr,
-    end_location_clean_expr,
-    extract_all_locations_expr,
-    local_cleaner,
-    with_all_locations_fuzzy,
-)
+from .operators.extract import LOCAL_MAX_TEXTS, TEXT, local_cleaner
 from .sources import landing
 from .sources.dictionary import build_variant_index, load_locations_json
 
@@ -60,20 +53,14 @@ def clean_texts_df(
     cutoff: float | None = None,
 ) -> DataFrame:
     """F5 shared codepath (api.py:210-225 = Main.py:406-425): adds
-    all_locations, main_location, trip_type for a text column. With fuzzy
-    on, the token cascade runs when this is called (one collected Spark
-    job, ``extract.with_all_locations_fuzzy``); nothing stays cached, so a
-    long-lived caller has nothing to clean up after its action."""
-    index = index if index is not None else build_variant_index()
-    if fuzzy:
-        df = with_all_locations_fuzzy(
-            df, text_col, "all_locations", index, cutoff=cutoff
-        )
-    else:
-        df = df.withColumn("all_locations", extract_all_locations_expr(F.col(text_col), index))
-    t, locs = F.col(text_col), F.col("all_locations")
-    df = df.withColumn("main_location", end_location_clean_expr(t, locs))
-    return df.withColumn("trip_type", categorize_trip_type_expr(t, locs))
+    all_locations, main_location, trip_type for a text column, read from
+    the shared cleaner (``extract.local_cleaner``), so no NLP expression is
+    built per call. With fuzzy on, the token cascade runs when this is
+    called (one collected Spark job, ``extract.with_all_locations_fuzzy``);
+    nothing stays cached, so a long-lived caller has nothing to clean up
+    after its action."""
+    cleaner = local_cleaner(index, cutoff)
+    return cleaner.enrich(df.withColumn(TEXT, F.col(text_col)), fuzzy).drop(TEXT)
 
 
 def config_from_env(env: dict[str, str] | None = None) -> dict:
@@ -81,7 +68,7 @@ def config_from_env(env: dict[str, str] | None = None) -> dict:
     them at startup (api.py:106-134): ``FUZZY_ENABLED`` (``"true"``/
     ``"false"``, case-insensitive), ``FUZZY_CUTOFF`` (int score 0-100),
     ``LOCATIONS_PATH`` (path to a ``{canonical: [variants]}`` JSON; unset →
-    the built-in dictionary)."""
+    the built-in dictionary; an empty ``{}`` file is an empty dictionary)."""
     env = env if env is not None else dict(os.environ)
     locations_path = env.get("LOCATIONS_PATH")
     return {
@@ -107,7 +94,7 @@ class CleaningService:
         self.spark = spark
         self.fuzzy_enabled = fuzzy_enabled
         self.fuzzy_cutoff = fuzzy_cutoff
-        self.index = build_variant_index(locations) if locations else build_variant_index()
+        self.index = build_variant_index(locations)
         self._last_stats: dict = {"status": "idle", "records": 0}
 
     @classmethod

@@ -23,11 +23,31 @@ Every other config choice is made for a real multi-executor cluster at
 from __future__ import annotations
 
 import os
+import weakref
+from collections.abc import Callable
+from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the directory holding the package: Python workers import it from here
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+# live py4j gateway → {key: value}: an entry goes away with its gateway,
+# and with it every JVM reference its values hold
+_PER_GATEWAY: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def per_gateway(key: tuple, build: Callable[[], Any]) -> Any:
+    """``build()``'s value for ``key`` under the live py4j gateway, built on
+    its first use there and shared afterwards (from any thread: a race
+    builds twice and keeps one). For driver-side objects that hold JVM
+    references, such as Column expressions, which die with their JVM."""
+    memo = _PER_GATEWAY.setdefault(SparkContext._gateway, {})
+    if key not in memo:
+        memo.setdefault(key, build())
+    return memo[key]
 
 
 def default_cpus() -> int:

@@ -60,8 +60,10 @@ def load_locations_json(path: str) -> dict[str, list[str]]:
 def build_variant_index(locations: dict[str, list[str]] | None = None) -> dict[str, str]:
     """First-wins reverse index {normalized_variant -> canonical}
     (cleaner_v6.py:149-154 semantics), in dictionary insertion order —
-    the order also defines fuzzy-candidate iteration (tie-breaking)."""
-    locations = locations or LOCATIONS
+    the order also defines fuzzy-candidate iteration (tie-breaking).
+    ``None`` means the built-in ``LOCATIONS``; an empty mapping is used as
+    given and yields an empty index."""
+    locations = LOCATIONS if locations is None else locations
     index: dict[str, str] = {}
     for canonical, variants in locations.items():
         for v in variants:
@@ -87,39 +89,16 @@ def _default_index() -> dict[str, str]:
     return build_variant_index()
 
 
-_MAP_EXPR_MEMO: dict[tuple[int, tuple[tuple[str, str], ...]], Column] = {}
-
-
 def variant_map_expr(index: dict[str, str] | None = None) -> Column:
     """The reverse index as a literal MAP expression — the Spark analogue of
     the broadcast O(1) lookup (README.md:48 claim). For a dictionary too big
     to inline, use :func:`dim_table` + broadcast join instead.
 
-    Memoized per (gateway generation, dictionary contents): the literal is
-    2×|variants| py4j `lit` calls and the cascade instantiates it several
-    times per query (norm + stripped-norm, tier-1 + tier-2). Registered in
-    arabic._GEN_KEYED_MEMOS so a JVM restart evicts stale entries."""
+    Each call costs 2×|variants| + 3 py4j calls (``F.lit`` of a list is one
+    ``lit`` per element), so the NLP block's expressions, which hold it,
+    are built once per dictionary (``operators.extract.local_cleaner``)."""
     index = index if index is not None else _default_index()
-    from ..functions.arabic import _GEN_KEYED_MEMOS, _gateway_generation
-
-    if not any(m is _MAP_EXPR_MEMO for m in _GEN_KEYED_MEMOS):
-        _GEN_KEYED_MEMOS.append(_MAP_EXPR_MEMO)
-    try:
-        key = (_gateway_generation(), tuple(index.items()))
-    except Exception:
-        key = None
-    if key is not None and key in _MAP_EXPR_MEMO:
-        return _MAP_EXPR_MEMO[key]
-    # TWO py4j literal calls total (one array literal per side), not
-    # 2×|variants| per-entry F.lit round-trips — at a 10k-variant custom
-    # dictionary the per-entry form pays thousands of gateway calls on
-    # every cold build (and after every JVM restart)
-    out = F.map_from_arrays(
-        F.lit(list(index.keys())), F.lit(list(index.values()))
-    )
-    if key is not None:
-        _MAP_EXPR_MEMO[key] = out
-    return out
+    return F.map_from_arrays(F.lit(list(index.keys())), F.lit(list(index.values())))
 
 
 def dim_table(spark: SparkSession, index: dict[str, str] | None = None) -> DataFrame:

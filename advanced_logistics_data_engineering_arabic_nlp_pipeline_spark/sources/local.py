@@ -22,28 +22,25 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.arabic import _GEN_KEYED_MEMOS, _gateway_generation
-
-
-# (gateway generation, schema) → (line splitter, string encoder, parser
-# Column): the py4j class lookups and the schema parse cost a few ms per
-# call, about a third of building a small frame
-_HANDLES: dict[tuple[int, str], tuple] = {}
-_GEN_KEYED_MEMOS.append(_HANDLES)
+from ..session import per_gateway
 
 
 def _handles(spark: SparkSession, schema: str) -> tuple:
-    key = (_gateway_generation(), schema)
-    if key not in _HANDLES:
+    """(line splitter, string encoder, parser Column) for ``schema``, shared
+    per gateway: the py4j class lookups and the schema parse cost a few ms
+    per call, about a third of building a small frame."""
+
+    def build() -> tuple:
         jvm = spark._jvm
-        _HANDLES[key] = (
+        return (
             jvm.java.util.regex.Pattern.compile("\n"),
             jvm.org.apache.spark.sql.Encoders.STRING(),
             # FAILFAST: a row the parser rejects raises instead of
             # turning into nulls
             F.from_json("value", schema, {"mode": "FAILFAST"}).alias("r"),
         )
-    return _HANDLES[key]
+
+    return per_gateway(("local_frame", schema), build)
 
 
 def local_frame(spark: SparkSession, rows: list[dict], schema: str) -> DataFrame:

@@ -56,3 +56,31 @@ def test_enrichment_limit_boundary(spark, monkeypatch, fuzzy):
     assert "HashAggregate" in _plan(over, fuzzy)
     assert _enriched(at_limit, fuzzy) == _distributed(at_limit, fuzzy, monkeypatch)
     assert _enriched(over, fuzzy) == _distributed(over, fuzzy, monkeypatch)
+
+
+def test_second_distributed_build_builds_no_nlp_expression(spark, monkeypatch):
+    """The distributed paths read the shared cleaner's expressions: once it
+    exists, building clean_texts_df or with_nlp_enrichment's fallback builds
+    none of the NLP block's expressions again."""
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark import service
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import lookup
+
+    df = spark.createDataFrame([(t,) for t in GOLDEN_TEXTS[:4]], "t string")
+    service.clean_texts_df(df, "t", fuzzy=False)
+    builders = (
+        "extract_all_locations_expr", "end_location_clean_expr", "categorize_trip_type_expr",
+        "cascade_inputs", "fuzzy_lookup_udf",
+    )
+    built = []
+    for module in (extract, lookup, service):
+        for name in builders:
+            if hasattr(module, name):
+                def counted(*a, _fn=getattr(module, name), _name=name, **k):
+                    built.append(_name)
+                    return _fn(*a, **k)
+
+                monkeypatch.setattr(module, name, counted)
+    service.clean_texts_df(df, "t", fuzzy=False)
+    monkeypatch.setitem(extract.ENRICH_LOCAL_MAX_TEXTS, False, 0)
+    assert "HashAggregate" in _plan(df, False)
+    assert built == []

@@ -70,27 +70,24 @@ def test_scan_rebalance_only_when_row_groups_cannot_feed_cores(spark, sf_dir):
 
 
 def test_expression_builder_memos_return_same_tree(spark):
-    """normalize_arabic / variant_map_expr are memoized per (gateway, input
-    expression): repeated builds must return the SAME Column object (py4j
-    construction cost is the point), and different inputs must not collide."""
-    from pyspark.sql import functions as F
-
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.functions.arabic import normalize_arabic
+    """The NLP block's expressions are built once per (dictionary, cutoff)
+    and live gateway, by the shared cleaner: repeated lookups must return
+    the SAME Column objects (py4j construction cost is the point), and a
+    different dictionary or cutoff must not collide."""
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.extract import (
+        local_cleaner,
+    )
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
         build_variant_index,
-        variant_map_expr,
     )
 
-    a1 = normalize_arabic(F.col("some_col"))
-    a2 = normalize_arabic(F.col("some_col"))
-    assert a1 is a2
-    b = normalize_arabic(F.col("other_col"))
-    assert b is not a1
-
     idx = build_variant_index()
-    m1 = variant_map_expr(idx)
-    m2 = variant_map_expr(idx)
-    assert m1 is m2
+    a1 = local_cleaner(idx, 82)
+    a2 = local_cleaner(build_variant_index(), 82)
+    assert a1 is a2
+    assert a1.tier12 is a2.tier12 and a1.resolver.inputs is a2.resolver.inputs
+    assert local_cleaner(idx, 90) is not a1
+    assert local_cleaner(build_variant_index({"A": ["الهرم"]}), 82) is not a1
 
 
 def test_trips_master_fuzzy_build_runs_only_the_distinct_probe(spark, sf_dir):

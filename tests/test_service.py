@@ -105,6 +105,18 @@ def test_config_from_env_and_from_env_service(spark, tmp_path):
     svc2 = CleaningService.from_env(spark, {})
     assert svc2.fuzzy_enabled is True and svc2.fuzzy_cutoff == 82
 
+    # an empty dictionary file is used as given, not replaced by the
+    # built-in one: it answers like a dictionary whose group has no variant
+    answers = []
+    for i, locations in enumerate(({}, {"A": []})):
+        path = tmp_path / f"empty{i}.json"
+        path.write_text(json.dumps(locations), encoding="utf-8")
+        svc3 = CleaningService.from_env(spark, {"LOCATIONS_PATH": str(path)})
+        assert svc3.index == {}
+        out = svc3.clean_one("مطار القاهرة")
+        answers.append((out["main_location"], out["all_locations"], out["trip_type"]))
+    assert answers[0] == answers[1] == ("مطار القاهرة", [], "Airport Transfer")
+
 
 def test_api_endpoint_functions_reference_shapes(spark, tmp_path):
     """The framework-free endpoint functions must return the reference's
