@@ -513,7 +513,9 @@ def jaccard_pairs(
     # let eviction fall back to recompute (advisory, not load-bearing).
     # ``caches_out`` hands the cached frames to a long-lived caller for
     # unpersist after its terminal action (the lookup.py cascade pattern,
-    # ADVICE r4) — one-shot plans can ignore it (bench clears the cache).
+    # ADVICE r4) — one-shot plans can ignore it (the oracle pass over
+    # __spark_entry__.queries() and tests/oracle_util.compare clear the
+    # cache between queries).
     sh = sh.cache()
     if caches_out is not None:
         caches_out.append(sh)

@@ -320,7 +320,8 @@ def training_export_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree in the repo (curation → LSH anti-join → PQ encode → chunk
     # explode) executes twice in one plan (r8 self-review). Same
     # cache-cut-point contract as _export_encoded's kept frame: the query
-    # is self-contained and the bench/driver clearCache() between queries.
+    # is self-contained, and the oracle pass over __spark_entry__.queries()
+    # and tests/oracle_util.compare clearCache() between queries.
     chunks = training_export_chunks(spark, sf_dir).persist()
     assign = (
         _epoch_shards(

@@ -203,7 +203,7 @@ def trips_fuzzy_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
     that path, so its timings are by-hand runs (recorded in CHANGES.md),
     not benchmark evidence.
     Rows-only by design (fuzzy tier has no SQL mirror); the aggregate
-    output keeps the bench noop sink from skipping any of the per-row
+    output keeps a noop-sink write from skipping any of the per-row
     work."""
     df = trips_raw(spark, sf_dir).withColumn(
         "end_location",

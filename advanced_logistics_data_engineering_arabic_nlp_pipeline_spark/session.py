@@ -10,7 +10,8 @@ Every other config choice is made for a real multi-executor cluster at
 
 - AQE on: runtime shuffle-partition coalescing, broadcast-join conversion and
   skew-join splitting replace hand-tuned partition counts at scale.
-- ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE coalesces.
+- ``spark.sql.shuffle.partitions`` is the CPU count and only the *initial*
+  number; AQE coalesces.
 - Arrow on: every Pandas-UDF boundary is Arrow-batched (the only Python code
   paths in this engine are the tier-3 fuzzy lookup and multimodal decode).
 - UTC session timezone: deterministic timestamp semantics across engines
@@ -69,13 +70,11 @@ def default_driver_mem() -> str:
 def get_spark(
     app_name: str = "aldean-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     worker_path = os.pathsep.join(
         [PACKAGE_ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus)))
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     # Shuffle/spill scratch: prefer tmpfs when present — the default /tmp
     # sits on a virtual disk whose latency varies with host neighbors, and
@@ -93,15 +92,15 @@ def get_spark(
         except OSError:
             free_bytes = 0
         # 4 GiB floor: comfortably above the largest shuffle this engine
-        # produces in local mode at sf1 (sub-GB), far below the 128 GiB
-        # bench host's tmpfs (half of RAM by default).
+        # produces in local mode at sf1 (sub-GB), far below the tmpfs of a
+        # large-memory host (half of RAM by default).
         if free_bytes >= 4 * 1024**3:
             local_dir = "/dev/shm/spark-local"
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.local.dir", local_dir or "/tmp")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

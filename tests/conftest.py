@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="aldean-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="aldean-tests")
     yield s
 
 

@@ -82,11 +82,11 @@ def _pdf_rows(pdf):
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> None:
     s_pdf = spark_df.toPandas()
-    # Same cache discipline as bench.py: a few queries pin an internal cut
-    # point (e.g. _export_encoded's kept frame, training_export_sharded's
-    # chunks) under the documented contract that the harness clears
-    # between queries — without this, a full parity sweep accumulates one
-    # cached frame per such query for the session's lifetime.
+    # A few queries pin an internal cut point (e.g. _export_encoded's kept
+    # frame, training_export_sharded's chunks) under the documented
+    # contract that whoever runs registered queries in sequence clears the
+    # cache between them — without this, a full parity sweep accumulates
+    # one cached frame per such query for the session's lifetime.
     spark_df.sparkSession.catalog.clearCache()
     d_pdf = con.execute(sql).df()
     s_cols = list(s_pdf.columns)

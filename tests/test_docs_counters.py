@@ -1,10 +1,9 @@
 """Mechanized doc counters (VERDICT r8 Next-round #6 / What's-wrong #4).
 
-The registry-count and headline-count claims in SCALE.md / README.md kept
-drifting behind the code (fixed by hand in commits 5c59e67 and again in r8's
-verdict) — so derive them here: the prose numbers must match the live
-``registry.all_queries()`` / ``bench.HEADLINE`` or this test goes red, which
-turns "stale doc" from a judge finding into a failing build.
+The registry-count claim in SCALE.md kept drifting behind the code (fixed by
+hand in commits 5c59e67 and again in r8's verdict) — so derive it here: the
+prose number must match the live ``registry.all_queries()`` or this test
+goes red, which turns "stale doc" from a judge finding into a failing build.
 """
 
 from __future__ import annotations
@@ -12,7 +11,6 @@ from __future__ import annotations
 import os
 import re
 
-import bench
 from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark import registry
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -29,13 +27,4 @@ def test_scale_md_registry_count_current():
     assert int(m.group(1)) == len(registry.all_queries()), (
         f"SCALE.md claims {m.group(1)} registry queries; live registry has "
         f"{len(registry.all_queries())} — update the prose"
-    )
-
-
-def test_readme_headline_count_current():
-    m = re.search(r"(\d+) headline queries", _read("README.md"))
-    assert m, "README.md lost its headline-count sentence; update the pattern"
-    assert int(m.group(1)) == len(bench.HEADLINE), (
-        f"README.md claims {m.group(1)} headline queries; bench.HEADLINE has "
-        f"{len(bench.HEADLINE)} — update the prose"
     )

@@ -95,6 +95,10 @@ def _storage_ids(spark) -> set:
     return {x.id() for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_resolve_literal_and_join_paths_agree(spark, monkeypatch):
     """resolve_tokens_fuzzy has two application paths — a literal-map
     expression up to MAPPING_LITERAL_MAX resolved entries, a broadcast join
@@ -119,17 +123,18 @@ def test_resolve_literal_and_join_paths_agree(spark, monkeypatch):
 
     def run():
         before = _storage_ids(spark)
-        rows = sorted(
-            (r["i"], r["canonical"])
-            for r in lookup.resolve_tokens_fuzzy(df, "token").collect()
-        )
+        out = lookup.resolve_tokens_fuzzy(df, "token")
+        rows = sorted((r["i"], r["canonical"]) for r in out.collect())
         assert _storage_ids(spark) <= before
-        return rows
+        return rows, _physical_plan(out)
 
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 10_000)
-    lit_rows = run()
+    lit_rows, lit_plan = run()
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 0)
-    join_rows = run()
+    join_rows, join_plan = run()
+    # each forced run took the path it was forced onto
+    assert "Join" not in lit_plan, lit_plan
+    assert "BroadcastHashJoin" in join_plan, join_plan
     assert lit_rows == join_rows
     assert any(c is not None for _, c in lit_rows), "no token resolved"
 
@@ -163,11 +168,14 @@ def test_extract_literal_and_join_paths_agree(spark, monkeypatch):
             for r in out.collect()
         )
         assert _storage_ids(spark) <= before
-        return rows
+        return rows, _physical_plan(out)
 
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 10_000)
-    lit_rows = run()
+    lit_rows, lit_plan = run()
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 0)
-    join_rows = run()
+    join_rows, join_plan = run()
+    # each forced run took the path it was forced onto
+    assert "Join" not in lit_plan, lit_plan
+    assert "BroadcastHashJoin" in join_plan, join_plan
     assert lit_rows == join_rows
     assert any(locs for _, locs in lit_rows), "no text resolved any location"

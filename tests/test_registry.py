@@ -43,12 +43,3 @@ def test_every_oracle_has_query():
     dangling = set(registry.all_oracles()) - set(queries)
     assert not dangling, sorted(dangling)
 
-
-def test_bench_headline_names_exist_in_registry():
-    """A typo'd HEADLINE/STRESS name silently drops the query from the
-    bench (`if n in queries` guard) — pin every name to the registry."""
-    import bench
-
-    queries = set(registry.all_queries())
-    missing = [n for n in bench.HEADLINE + bench.STRESS if n not in queries]
-    assert not missing, missing

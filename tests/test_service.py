@@ -179,12 +179,24 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     def storage_ids():
         return {x.id() for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
+    # the plan is out of reach here: count builds of the join path's
+    # broadcast side instead, to prove the forced runs took that path
+    map_frames = []
+    canonical_map_frame = lookup.canonical_map_frame
+
+    def counting_map_frame(spark, mapping):
+        map_frames.append(len(mapping))
+        return canonical_map_frame(spark, mapping)
+
+    monkeypatch.setattr(lookup, "canonical_map_frame", counting_map_frame)
+
     before = storage_ids()
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 0)
     svc = CleaningService(spark)
     out = svc.clean_batch(["من الهرم الى المطار", "مطارر", None])
     assert len(out["results"]) == 3
     assert storage_ids() <= before
+    assert map_frames == []
 
     # a small batch is now cleaned in the driver and never reaches the join
     # path; a batch above the local size limit and run_cycle still do
@@ -193,6 +205,7 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     assert len(out["results"]) == len(big)
     assert out["results"][-2]["main_location"] == "Cairo Airport"
     assert storage_ids() <= before
+    assert len(map_frames) == 1
 
     def fetch(page: int):
         rows = [{"serialId": 1, "confirm_status": True, "end_location": "مطارر القاهره"}]
@@ -201,6 +214,7 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     cyc = svc.run_cycle(fetch, str(tmp_path / "cycle"))
     assert cyc["records"] == 1
     assert storage_ids() <= before
+    assert len(map_frames) == 2
 
     # literal path too
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 512)
