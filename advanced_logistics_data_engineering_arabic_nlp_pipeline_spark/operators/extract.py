@@ -14,7 +14,9 @@ holds the token cascade's. Two paths read them:
 - :meth:`LocalCleaner.clean`, for up to ``LOCAL_MAX_TEXTS`` texts already
   in the driver, with no Spark job: the service's small requests and
   ``with_nlp_enrichment``'s distinct texts (up to
-  ``ENRICH_LOCAL_MAX_TEXTS``);
+  ``ENRICH_LOCAL_MAX_TEXTS``). With fuzzy on it runs two driver-local
+  plans (per-token cascade inputs, then hits and trip type), with fuzzy
+  off one;
 - :meth:`LocalCleaner.enrich`, over a DataFrame of any size:
   ``service.clean_texts_df`` and ``with_nlp_enrichment``'s fallback. Its
   location scan is either the tier-1/2 expression
@@ -26,7 +28,8 @@ holds the token cascade's. Two paths read them:
   join → ordered re-aggregation (one groupBy shuffle).
 
 The fuzzy scans, local and distributed, share the tokenization
-(``trip_tokens_expr``) and the hit assembly (``literal_hits_expr``).
+(``trip_tokens_expr``), the token cascade (``operators.lookup``) and the
+hit assembly (``hits_expr``).
 """
 
 from __future__ import annotations
@@ -47,7 +50,7 @@ from ..functions.arabic import (
     tokenize_trip,
 )
 from ..session import per_gateway
-from ..sources.dictionary import _default_index
+from ..sources.dictionary import _default_index, variant_map_expr
 from ..sources.local import local_frame
 
 _DIGITS_ONLY = "^[0-9٠-٩]+$"
@@ -69,7 +72,9 @@ ENRICH_LOCAL_MAX_TEXTS = {True: 2048, False: 1024}
 TEXT = "__txt"
 
 
-def extract_all_locations_expr(text: Column, index: dict[str, str] | None = None) -> Column:
+def extract_all_locations_expr(
+    text: Column, index: dict[str, str] | None = None, m: Column | None = None
+) -> Column:
     """F2 (cleaner_v6.py:248-266): round-trip scrub → tokenize → per-token
     cascade → order-preserving distinct canonicals. Empty array for null/''.
 
@@ -79,13 +84,14 @@ def extract_all_locations_expr(text: Column, index: dict[str, str] | None = None
     Normalization is staged through per-token structs so each candidate
     form (token / op-prefix-stripped token) is normalized exactly once —
     HOF lambdas are interpreted without subexpression elimination, so the
-    naive per-tier formulation would re-normalize per tier."""
+    naive per-tier formulation would re-normalize per tier. ``m`` is
+    ``index``'s map (``variant_map_expr``) when the caller already holds
+    it."""
     from .lookup import tier12_expr
 
-    raw = F.trim(text.cast("string"))
-    tokens = tokenize_trip(scrub_round_trip(raw))
+    m = m if m is not None else variant_map_expr(index)
     staged = F.transform(
-        tokens,
+        trip_tokens_expr(text),
         lambda t: F.struct(
             normalize_arabic(t).alias("n"),
             F.when(
@@ -95,10 +101,9 @@ def extract_all_locations_expr(text: Column, index: dict[str, str] | None = None
     )
     resolved = F.transform(
         staged,
-        lambda x: F.coalesce(tier12_expr(x["n"], index), tier12_expr(x["s"], index)),
+        lambda x: F.coalesce(tier12_expr(x["n"], index, m), tier12_expr(x["s"], index, m)),
     )
-    hits = F.array_distinct(F.filter(resolved, lambda x: x.isNotNull()))
-    return F.when(text.isNull() | (raw == ""), F.array().cast("array<string>")).otherwise(hits)
+    return hits_expr(resolved)
 
 
 def end_location_clean_expr(text: Column, locs: Column) -> Column:
@@ -237,24 +242,10 @@ def trip_tokens_expr(text: Column) -> Column:
     ).otherwise(tokenize_trip(scrub_round_trip(raw)))
 
 
-def literal_hits_expr(text: Column, m: Column | None) -> Column:
-    """F2's location list from a resolved (token → canonical) map (None =
-    empty mapping): each token looked up in text order, misses dropped,
-    order-preserving distinct; empty for null/''."""
-    raw = F.trim(text.cast("string"))
-    if m is None:
-        hits = F.array().cast("array<string>")
-    else:
-        dtoks = tokenize_trip(scrub_round_trip(raw))
-        hits = F.array_distinct(
-            F.filter(
-                F.transform(dtoks, lambda t: F.element_at(m, t)),
-                lambda x: x.isNotNull(),
-            )
-        )
-    return F.when(
-        text.isNull() | (raw == ""), F.array().cast("array<string>")
-    ).otherwise(hits)
+def hits_expr(resolved: Column) -> Column:
+    """F2's location list from each token's canonical in text order (null
+    = miss): misses dropped, order-preserving distinct."""
+    return F.array_distinct(F.filter(resolved, lambda x: x.isNotNull()))
 
 
 class LocalCleaner:
@@ -267,12 +258,13 @@ class LocalCleaner:
     - :meth:`clean`, for texts already in the driver, with no Spark job:
       the texts become a driver-local relation (``sources.local``) and
       only Project steps run over it, so Catalyst evaluates all of it in
-      the driver. With fuzzy on, the texts' tokens are deduplicated in the
-      driver, resolve through ``resolver`` (tier-3 misses scored in the
-      driver) and :func:`literal_hits_expr` assembles the hits from a map
-      that each text carries for its own tokens: the steps of
-      :func:`with_all_locations_fuzzy`'s literal path, which callers keep
-      in range by bounding the input (``LOCAL_MAX_TEXTS``);
+      the driver. With fuzzy on that is two plans, one ``collect()`` each:
+      the resolver's ``staged`` returns each text's per-token cascade
+      inputs and miss forms; the driver scores the distinct misses, and
+      a second relation of per-token tier-1/2 and fuzzy results gets the
+      cascade order, the hits, ``__norm``, main_location and trip_type.
+      A warm request costs about 80 py4j round trips (the four plans
+      before took ~180). Callers bound the input (``LOCAL_MAX_TEXTS``);
     - :meth:`enrich`, over a DataFrame of any size.
 
     Holds no per-call state: get one from :func:`local_cleaner` and share
@@ -282,13 +274,12 @@ class LocalCleaner:
         from .lookup import LocalTokenResolver
 
         self.index, self.cutoff = index, cutoff
-        self.resolver = LocalTokenResolver(index, cutoff)
         t, locs = F.col(TEXT), F.col("all_locations")
-        self.tokens = trip_tokens_expr(t).alias("__toks")
-        self.hits = literal_hits_expr(
-            t, F.map_from_arrays(F.col("__mk"), F.col("__mv"))
-        ).alias("all_locations")
-        self.tier12 = extract_all_locations_expr(t, index).alias("all_locations")
+        m, tokens = variant_map_expr(index), trip_tokens_expr(t)
+        self.tokens = tokens.alias("__toks")
+        self.resolver = LocalTokenResolver(index, cutoff, m, tokens)
+        self.hits = hits_expr(self.resolver.order).alias("all_locations")
+        self.tier12 = extract_all_locations_expr(t, index, m).alias("all_locations")
         self.norm = normalize_arabic(t).alias("__norm")
         # 1:1 Generate barrier: locs/norm feed many lazily-evaluated CASE
         # branches (no subexpression elimination), so block CollapseProject
@@ -306,15 +297,9 @@ class LocalCleaner:
         order; at most ``LOCAL_MAX_TEXTS`` texts."""
         df = local_frame(spark, [{TEXT: t} for t in texts], f"{TEXT} string")
         if fuzzy:
-            toks = [r[0] for r in df.select(self.tokens).collect()]
-            distinct = list(dict.fromkeys(t for ts in toks for t in ts))
-            mapping = self.resolver.resolve(spark, distinct)
-            rows = []
-            for text, ts in zip(texts, toks):
-                own = {t: mapping[t] for t in ts if t in mapping}
-                rows.append({TEXT: text, "__mk": list(own), "__mv": list(own.values())})
-            schema = f"{TEXT} string, __mk array<string>, __mv array<string>"
-            df = local_frame(spark, rows, schema).select(TEXT, self.hits, self.norm)
+            staged = [r[0] for r in df.select(self.resolver.staged).collect()]
+            df = self.resolver.scored(spark, TEXT, texts, staged)
+            df = df.select(TEXT, self.hits, self.norm)
         else:
             df = df.select(TEXT, self.tier12, self.norm)
         return df.select(self.text, *self.block).collect()
@@ -362,7 +347,7 @@ def with_all_locations_fuzzy(
     mapping is collected to the driver when this is called
     (``lookup._distinct_token_mapping``); the returned plan caches nothing.
     The tokenization and the cascade come from the shared cleaner
-    (:func:`local_cleaner`); only the literal path's hit assembly, which
+    (:func:`local_cleaner`); only the literal path's map lookup, which
     carries this call's mapping, is built per call.
 
     Adaptive application (mirrors operators.lookup.resolve_tokens_fuzzy):
@@ -388,7 +373,10 @@ def with_all_locations_fuzzy(
     mapping = _distinct_token_mapping(exploded, "__tok", cleaner.index, cleaner.cutoff)
     if len(mapping) <= MAPPING_LITERAL_MAX:
         m = canonical_map_literal(mapping)
-        return df.withColumn(out_col, literal_hits_expr(F.col(text_col), m))
+        hits = hits_expr(F.transform("__toks", lambda t: F.element_at(m, t)))
+        out = df.withColumn(TEXT, F.col(text_col)).select("*", cleaner.tokens)
+        out = out.withColumn(out_col, hits).drop("__toks")
+        return out if text_col == TEXT else out.drop(TEXT)
 
     mf = canonical_map_frame(df.sparkSession, mapping)
     resolved = exploded.join(
@@ -399,20 +387,17 @@ def with_all_locations_fuzzy(
     rebuilt = (
         resolved.groupBy(F.col(TEXT).alias("__ftxt"))
         .agg(
-            F.array_distinct(
-                F.filter(
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(
-                                F.when(
-                                    F.col("__canon").isNotNull(),
-                                    F.struct(F.col("__pos"), F.col("__canon").alias("loc")),
-                                )
+            hits_expr(
+                F.transform(
+                    F.sort_array(
+                        F.collect_list(
+                            F.when(
+                                F.col("__canon").isNotNull(),
+                                F.struct(F.col("__pos"), F.col("__canon").alias("loc")),
                             )
-                        ),
-                        lambda x: x["loc"],
+                        )
                     ),
-                    lambda x: x.isNotNull(),
+                    lambda x: x["loc"],
                 )
             ).alias(out_col)
         )

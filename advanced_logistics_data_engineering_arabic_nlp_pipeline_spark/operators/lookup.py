@@ -18,11 +18,14 @@ one linear plan whose resolved (token → canonical) rows are collected to
 the driver, then applied back as a literal map or, for a large mapping,
 one broadcast join. At 100 TB the distinct token set is orders of
 magnitude smaller than the row count, and the resolved mapping smaller
-still. For a handful of tokens already in the driver (a small service
-request), the same cascade runs over a driver-local relation and scores
-the misses in the driver — no Spark job, no Python worker. Both paths read
-one set of cascade expressions per (dictionary, cutoff), built once by
-:class:`LocalTokenResolver` and shared through ``extract.local_cleaner``.
+still. For texts already in the driver (a small service request, a
+report's distinct texts), the same cascade runs per token inside two
+projections over driver-local relations and scores the misses in the
+driver — no Spark job, no Python worker, about 80 py4j round trips per
+request whatever the dictionary's size. Both paths read one set of
+cascade expressions per (dictionary, cutoff), built once by
+:class:`LocalTokenResolver` and shared through ``extract.local_cleaner``;
+the inputs, miss forms and order are each defined once, below.
 
 Fuzzy scoring mirrors rapidfuzz ``token_sort_ratio`` (public algorithm):
 sort whitespace tokens, then Indel similarity = 2*LCS/(len_a+len_b) * 100.
@@ -32,6 +35,7 @@ order (cleaner_v6.py:35-37, 198-208).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import lru_cache
 
 import numpy as np
@@ -50,11 +54,14 @@ FUZZY_MIN_LEN = 3
 
 # ── Tiers 1-2: pure expressions ─────────────────────────────────────────────
 
-def tier12_expr(norm: Column, index: dict[str, str] | None = None) -> Column:
+def tier12_expr(
+    norm: Column, index: dict[str, str] | None = None, m: Column | None = None
+) -> Column:
     """Resolve an already-normalized token via exact map hit, else first
-    boundary-guarded containment match. NULL on miss."""
+    boundary-guarded containment match. NULL on miss. ``m`` is ``index``'s
+    map (``variant_map_expr``) when the caller already holds it."""
     index = index if index is not None else build_variant_index()
-    m = variant_map_expr(index)
+    m = m if m is not None else variant_map_expr(index)
     return F.coalesce(
         F.element_at(m, norm),
         F.element_at(m, F.regexp_extract(norm, tier2_pattern(index), 1)),
@@ -106,16 +113,10 @@ def _lcs_len(a: str, b: str) -> int:
     return _lcs_len_masked(masks, la, b)
 
 
-def _ratio_sorted(a2: str, b2: str) -> float:
-    """token_sort_ratio on already token-sorted, single-spaced strings."""
-    total = len(a2) + len(b2)
-    if total == 0:
-        return 0.0
-    return 200.0 * _lcs_len(a2, b2) / total
-
-
 def token_sort_ratio(a: str, b: str) -> float:
-    return _ratio_sorted(" ".join(sorted(a.split())), " ".join(sorted(b.split())))
+    a2, b2 = " ".join(sorted(a.split())), " ".join(sorted(b.split()))
+    total = len(a2) + len(b2)
+    return 200.0 * _lcs_len(a2, b2) / total if total else 0.0
 
 
 @lru_cache(maxsize=32)
@@ -270,56 +271,73 @@ MAPPING_LITERAL_MAX = 512
 
 # ── The cascade, defined once for the distributed and the driver-local path ─
 #
-# Both paths resolve a frame of distinct raw tokens ``__t`` in three steps:
-# the cascade inputs (:func:`cascade_inputs`), tier-3 scoring of the two
-# miss forms (:func:`fuzzy_misses`; the pandas UDF or :func:`fuzzy_resolve`
-# in the driver), then the cascade order over the fuzzy results
-# ``__fzn``/``__fzs`` (:func:`cascade_expr`). Both return the resolved
-# tokens as a driver-side (token → canonical) dict.
+# Each piece is a function of a field accessor ``f`` (name → Column):
+# ``F.col`` over a frame of distinct raw tokens ``__t`` (the distributed
+# path, :func:`_resolved_tokens`), or a token struct's ``getField`` inside a
+# ``transform`` over each text's tokens (the driver-local path,
+# :class:`LocalTokenResolver`). Both run the cascade inputs, tier-3 scoring
+# of the two miss forms into ``__fzn``/``__fzs``, then the cascade order.
 
-def cascade_inputs(index: dict[str, str]) -> list[tuple[str, Column]]:
-    """The cascade's inputs for a frame of raw tokens ``__t``, as (column,
-    expression) pairs in dependency order: the normalized token, the
-    op-prefix-stripped raw token and its normalized form, and the tier-1/2
-    result of each normalized form."""
-    stripped = strip_op_prefix(F.col("__t"))
+def cascade_inputs(index: dict[str, str], m: Column) -> list[list[tuple[str, Callable]]]:
+    """The cascade's inputs for a raw token ``__t`` as stages of (field,
+    builder) pairs, each builder a function of a field accessor that reads
+    only the token and earlier stages' fields: the normalized token and the
+    op-prefix-stripped raw token, the stripped token's normalized form, and
+    the tier-1/2 result of each normalized form (``m``: ``index``'s map)."""
     return [
-        ("__norm", normalize_arabic(F.col("__t"))),
-        ("__sraw", stripped),
-        ("__snorm", normalize_arabic(stripped)),
-        ("__r12", tier12_expr(F.col("__norm"), index)),
-        ("__r12s", tier12_expr(F.col("__snorm"), index)),
+        [("__norm", lambda f: normalize_arabic(f("__t"))),
+         ("__sraw", lambda f: strip_op_prefix(f("__t")))],
+        [("__snorm", lambda f: normalize_arabic(f("__sraw")))],
+        [
+            ("__r12", lambda f: tier12_expr(f("__norm"), index, m)),
+            ("__r12s", lambda f: tier12_expr(f("__snorm"), index, m)),
+        ],
     ]
 
 
-def with_cascade_inputs(tokens: DataFrame, inputs: list[tuple[str, Column]]) -> DataFrame:
-    for name, c in inputs:
-        tokens = tokens.withColumn(name, c)
-    return tokens
+def fuzzy_misses() -> list[tuple[str, Callable]]:
+    """The two forms tier 3 scores, as one stage of (field, builder) pairs
+    over the cascade inputs, each null where the cascade cannot reach its
+    fuzzy result: ``__kn`` is ``__norm`` when tiers 1-2 miss it, ``__ks``
+    is ``__snorm`` when they miss both forms and the stripped raw token is
+    non-empty."""
+    return [
+        ("__kn", lambda f: F.when(f("__r12").isNull(), f("__norm"))),
+        ("__ks", lambda f: F.when(
+            f("__r12").isNull() & f("__r12s").isNull() & (f("__sraw") != ""), f("__snorm"))),
+    ]
 
 
-def fuzzy_misses() -> tuple[Column, Column]:
-    """The two forms tier 3 scores, null where the cascade cannot reach
-    their fuzzy result: ``__norm`` when tiers 1-2 miss it, ``__snorm``
-    when they miss both forms and the stripped raw token is non-empty."""
-    r12_miss = F.col("__r12").isNull()
-    snorm_miss = r12_miss & F.col("__r12s").isNull() & (F.col("__sraw") != "")
-    return F.when(r12_miss, F.col("__norm")), F.when(snorm_miss, F.col("__snorm"))
-
-
-def cascade_expr() -> Column:
+def cascade_expr(f: Callable[[str], Column]) -> Column:
     """The cascade order (cleaner_v6.py:180-208, 236-243): t1/t2 of the
     token, t3 of the token, then — only if the raw op-prefix-stripped token
     is non-empty — t1/t2 and t3 of the stripped form. ``__fzn``/``__fzs``
-    are the fuzzy results for ``__norm``/``__snorm`` (null on a miss)."""
-    return F.coalesce(
-        F.col("__r12"),
-        F.col("__fzn"),
-        F.when(
-            F.col("__sraw") != "",
-            F.coalesce(F.col("__r12s"), F.col("__fzs")),
-        ),
+    are the fuzzy results for the miss forms (null on a miss)."""
+    stripped = F.when(f("__sraw") != "", F.coalesce(f("__r12s"), f("__fzs")))
+    return F.coalesce(f("__r12"), f("__fzn"), stripped)
+
+
+def _staged(tokens: Column, stages: list[list[tuple[str, Callable]]]) -> Column:
+    """Each token of the array ``tokens`` as a struct of ``__t`` and the
+    stages' fields, one ``transform`` per stage (the first reads only the
+    token): HOF lambdas get no subexpression elimination, so each field is
+    computed once and later stages read it from the struct."""
+    first, *rest = stages
+    arr = F.transform(
+        tokens,
+        lambda t: F.struct(t.alias("__t"), *(b(lambda _: t).alias(n) for n, b in first)),
     )
+    names = ["__t"] + [n for n, _ in first]
+    for stage in rest:
+        carried = list(names)
+        arr = F.transform(
+            arr,
+            lambda x: F.struct(
+                *(x[n].alias(n) for n in carried), *(b(x.getField).alias(n) for n, b in stage),
+            ),
+        )
+        names += [n for n, _ in stage]
+    return arr
 
 
 def _resolved_tokens(
@@ -344,7 +362,9 @@ def _resolved_tokens(
     r = local_cleaner(index, cutoff).resolver
     d = tokens_df.select(F.col(token_col).alias("__t")).distinct()
     d = d.repartition(tokens_df.sparkSession.sparkContext.defaultParallelism)
-    d = with_cascade_inputs(d, r.inputs).select("*", r.scores).select("*", "__fz.*")
+    for name, c in r.inputs:
+        d = d.withColumn(name, c)
+    d = d.select("*", r.scores).select("*", "__fz.*")
     return d.select("__t", r.canonical).filter(r.resolved)
 
 
@@ -356,25 +376,19 @@ def _distinct_token_mapping(
 ) -> dict[str, str]:
     """(token → canonical) for the resolved distinct raw tokens of
     ``tokens_df``, collected to the driver by one Spark job — the same
-    contract as :meth:`LocalTokenResolver.resolve`. The mapping stays small
-    by construction because every entry fuzzy- or exact-matches a finite
-    dictionary at cutoff ≥ 82.
-
-    Cascade order matches the reference exactly: t1(tok), t2(tok), t3(tok),
-    then — only if the raw op-prefix-stripped token is non-empty — t1, t2,
-    t3 of the stripped form (cleaner_v6.py:180-208, 236-243)."""
+    cascade as the driver-local path (:class:`LocalTokenResolver`). The
+    mapping stays small by construction because every entry fuzzy- or
+    exact-matches a finite dictionary at cutoff ≥ 82. The cascade order
+    is the reference's (:func:`cascade_expr`)."""
     rows = _resolved_tokens(tokens_df, token_col, index, cutoff).collect()
     return {r["__t"]: r["__canonical"] for r in rows}
 
 
-def canonical_map_literal(mapping: dict[str, str]) -> Column | None:
-    """A (token → canonical) mapping as one literal MAP column (one ``lit``
-    per key and value; the mapping is at most ``MAPPING_LITERAL_MAX``
-    entries). None for an empty mapping (``map_from_arrays`` can't infer
-    empty-array types)."""
-    if not mapping:
-        return None
-    return F.map_from_arrays(F.lit(list(mapping)), F.lit(list(mapping.values())))
+def canonical_map_literal(mapping: dict[str, str]) -> Column:
+    """A (token → canonical) mapping as one literal MAP column, built in
+    one gateway call (``variant_map_expr``); the mapping is at most
+    ``MAPPING_LITERAL_MAX`` entries."""
+    return variant_map_expr(mapping)
 
 
 def canonical_map_frame(spark, mapping: dict[str, str]) -> DataFrame:
@@ -386,54 +400,57 @@ def canonical_map_frame(spark, mapping: dict[str, str]) -> DataFrame:
 
 class LocalTokenResolver:
     """The token cascade's expressions for one dictionary and cutoff, built
-    once here (each build is dozens of py4j calls) and read by both paths:
+    once here (each build is dozens of py4j calls) and read by both paths.
     :func:`_resolved_tokens` applies the cascade inputs, the fuzzy pandas
     UDF over the miss forms and the cascade order to a distributed frame of
-    tokens, and :meth:`resolve` applies the same inputs, miss forms and
-    order to a handful of tokens already in the driver, over driver-local
-    relations (``sources.local``), scoring the misses in the driver with
-    :func:`fuzzy_resolve` instead of the UDF. Only Project and Filter steps
-    run over those relations, which Catalyst folds into the local data, so
-    no Spark job runs and no Python worker starts. Per-call data travels in
-    the frames, never in the expressions, so one resolver serves every call,
-    from any thread; get it from ``extract.local_cleaner``."""
+    tokens. The driver-local path (``extract.LocalCleaner.clean``) runs the
+    same inputs, miss forms and order in two plans over driver-local
+    relations (``sources.local``), one ``collect()`` each:
 
-    def __init__(self, index: dict[str, str], cutoff: float) -> None:
+    1. ``staged``, over the texts: each text's ``tokens`` as structs of
+       cascade inputs and miss forms. The driver then scores the distinct
+       miss forms with :func:`fuzzy_resolve` instead of the UDF and builds
+       the second relation (:meth:`scored`);
+    2. ``order``, over that relation: the cascade order per token, which
+       ``extract`` turns into the hits and the rest of the NLP block.
+
+    Only Project steps run over those relations, which Catalyst folds into
+    the local data, so no Spark job runs and no Python worker starts; a
+    warm request costs about 80 py4j round trips, whatever the
+    dictionary's size. Per-call data travels in the relations, never in
+    the expressions, so one resolver serves every call, from any thread;
+    get it from ``extract.local_cleaner``."""
+
+    def __init__(self, index: dict[str, str], cutoff: float, m: Column, tokens: Column) -> None:
         self.index, self.cutoff = index, cutoff
         self.variants = list(index)
-        self.inputs = cascade_inputs(index)
-        kn, ks = fuzzy_misses()
-        self.probe = [
-            "__t", "__norm", "__sraw", "__snorm", "__r12", "__r12s",
-            kn.alias("__kn"), ks.alias("__ks"),
-        ]
+        inputs, misses = cascade_inputs(index, m), fuzzy_misses()
+        self.inputs = [(name, build(F.col)) for stage in inputs for name, build in stage]
+        kn, ks = (build(F.col) for _, build in misses)
         self.scores = fuzzy_lookup_udf(index, cutoff)(kn, ks).alias("__fz")
-        self.canonical = cascade_expr().alias("__canonical")
+        self.canonical = cascade_expr(F.col).alias("__canonical")
         self.resolved = F.col("__canonical").isNotNull()
+        self.staged = _staged(tokens, [*inputs, misses]).alias("__tk")
+        self.order = F.transform("__tk", lambda x: cascade_expr(x.getField))
 
-    def resolve(self, spark, tokens: list[str]) -> dict[str, str]:
-        """(token → canonical) for the resolved ones of distinct ``tokens``."""
-        d = local_frame(spark, [{"__t": t} for t in tokens], "__t string")
-        rows = with_cascade_inputs(d, self.inputs).select(*self.probe).collect()
-        keys = {k for r in rows for k in (r["__kn"], r["__ks"]) if k is not None}
+    def scored(self, spark, text_col: str, texts: list, staged: list) -> DataFrame:
+        """The relation ``order`` reads: each of ``texts`` in ``text_col``,
+        and in ``__tk`` its tokens' ``__sraw``/``__r12``/``__r12s`` from
+        ``staged`` (the collected ``staged`` column) with ``__fzn``/
+        ``__fzs``, the fuzzy result of each miss form. Each distinct
+        non-null miss form is scored once, as one memo serves both forms in
+        the distributed path's UDF."""
+        keys = {k for toks in staged for x in toks for k in (x["__kn"], x["__ks"])}
+        keys.discard(None)
         fz = {k: fuzzy_resolve(k, self.index, self.variants, self.cutoff) for k in keys}
-        # the fuzzy results meet the tokens by normalized form, as one
-        # memo serves both forms in the distributed path's UDF
-        scored = local_frame(
-            spark,
-            [
-                {
-                    "__t": r["__t"], "__sraw": r["__sraw"], "__r12": r["__r12"],
-                    "__r12s": r["__r12s"], "__fzn": fz.get(r["__norm"]),
-                    "__fzs": fz.get(r["__snorm"]),
-                }
-                for r in rows
-            ],
-            "__t string, __sraw string, __r12 string, __r12s string, "
-            "__fzn string, __fzs string",
-        )
-        out = scored.select("__t", self.canonical).filter(self.resolved).collect()
-        return {r["__t"]: r["__canonical"] for r in out}
+        tokens = [
+            [{"__sraw": x["__sraw"], "__r12": x["__r12"], "__r12s": x["__r12s"],
+              "__fzn": fz.get(x["__kn"]), "__fzs": fz.get(x["__ks"])} for x in toks]
+            for toks in staged
+        ]
+        fields = ", ".join(f"{n}: string" for n in ("__sraw", "__r12", "__r12s", "__fzn", "__fzs"))
+        rows = [{text_col: text, "__tk": toks} for text, toks in zip(texts, tokens)]
+        return local_frame(spark, rows, f"{text_col} string, __tk array<struct<{fields}>>")
 
 
 def resolve_tokens_fuzzy(
@@ -458,12 +475,7 @@ def resolve_tokens_fuzzy(
     mapping = _distinct_token_mapping(tokens_df, token_col, index, cutoff)
     if len(mapping) <= MAPPING_LITERAL_MAX:
         m = canonical_map_literal(mapping)
-        resolved = (
-            F.element_at(m, F.col(token_col))
-            if m is not None
-            else F.lit(None).cast("string")
-        )
-        return tokens_df.withColumn(out_col, resolved)
+        return tokens_df.withColumn(out_col, F.element_at(m, F.col(token_col)))
     mf = canonical_map_frame(tokens_df.sparkSession, mapping)
     mf = mf.withColumnRenamed("__canonical", out_col)
     return tokens_df.join(

@@ -16,10 +16,14 @@ that enriches each trips report's distinct texts: the texts become a
 driver-local relation, tiers 1-2 run as the engine's Column expressions
 (Catalyst's ``ConvertToLocalRelation`` folds them into the local data),
 and the few tier-3 misses are scored in the driver by the same function
-the fuzzy pandas UDF calls. No Python worker starts. The cascade order,
-the per-string fuzzy rule and the hit assembly are shared with the
-distributed path, so both give the same answers (pinned by
-tests/test_service.py and tests/test_enrichment.py). A larger
+the fuzzy pandas UDF calls. No Python worker starts. With fuzzy on a
+request is two driver-local plans (per-token cascade inputs, then hits
+and trip type), with fuzzy off one; a warm request's time is their plan
+analysis and ~80 py4j round trips, whatever the dictionary's size
+(pinned by tests/test_service.py), not Spark jobs. The cascade inputs,
+miss forms and order, the per-string fuzzy rule and the hit assembly are
+shared with the distributed path, so both give the same answers (pinned
+by tests/test_service.py and tests/test_enrichment.py). A larger
 batch is one distributed :func:`clean_texts_df` pass. The limit sits at
 half the measured crossover. Best of two warm runs, fuzzy on, 4 vCPUs,
 local against distributed: texts whose tokens are all unique (the worst

@@ -199,7 +199,9 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     assert map_frames == []
 
     # a small batch is now cleaned in the driver and never reaches the join
-    # path; a batch above the local size limit and run_cycle still do
+    # path; a batch above the local size limit and run_cycle still do. This
+    # batch (one unique number token per text) builds a ~4,100-entry
+    # mapping, so it takes the join path even at the default limit.
     big = [f"من الهرم الى المطار {i}" for i in range(LOCAL_MAX_TEXTS)] + ["مطارر", None]
     out = svc.clean_batch(big)
     assert len(out["results"]) == len(big)
@@ -216,11 +218,25 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     assert storage_ids() <= before
     assert len(map_frames) == 2
 
-    # literal path too
+    # literal path too: a batch above the local size limit (so distributed)
+    # whose few distinct tokens make a mapping of at most 512 entries
+    literals = []
+    canonical_map_literal = lookup.canonical_map_literal
+
+    def counting_map_literal(mapping):
+        literals.append(len(mapping))
+        return canonical_map_literal(mapping)
+
+    monkeypatch.setattr(lookup, "canonical_map_literal", counting_map_literal)
     monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 512)
-    out = svc.clean_batch(["من الهرم الى المطار"])
-    assert len(out["results"]) == 1
+    golden = [t for t in GOLDEN_TEXTS if t is not None]
+    repeated = (golden * (LOCAL_MAX_TEXTS // len(golden) + 2))[: LOCAL_MAX_TEXTS + 1]
+    out = svc.clean_batch(repeated)
+    assert len(out["results"]) == len(repeated)
+    assert out["results"][0]["main_location"] == "Cairo Airport"
     assert storage_ids() <= before
+    assert len(literals) == 1 and 0 < literals[0] <= 512
+    assert len(map_frames) == 2
 
 
 def test_api_fuzzy_default_defers_to_service_config(spark):
@@ -401,6 +417,62 @@ def test_concurrent_requests_match_serial_answers(spark):
         sys.setswitchinterval(interval)
     assert concurrent == serial
     assert storage_ids() <= before
+
+
+def _round_trips(monkeypatch, fn) -> int:
+    """py4j commands the calling thread sends while ``fn`` runs. The
+    gateway frees Java objects from its own finalizer thread, at times of
+    its choosing, so those commands are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    sent, me = [0], threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            sent[0] += 1
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return sent[0]
+
+
+def test_requests_make_a_fixed_number_of_round_trips(spark, monkeypatch):
+    """A warm fuzzy /clean and an 8-text /clean/batch each run two
+    driver-local plans: at most 90 py4j round trips (the four-plan path
+    before them took ~180). The count does not depend on the dictionary:
+    a 2,000-variant one costs the built-in's per request, and building its
+    cleaner cold costs at most 50 round trips more (its map is one JSON
+    literal, not one call per variant)."""
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.extract import (
+        LocalCleaner,
+    )
+
+    rng = random.Random(17)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    big = {
+        f"Place {i}": ["".join(rng.choice(letters) for _ in range(rng.randint(5, 12)))]
+        for i in range(2000)
+    }
+    texts = list(GOLDEN_TEXTS[:6]) + _near_misses(23, 2)
+    counts, cold = {}, {}
+    for name, locations in (("built-in", None), ("2,000 variants", big)):
+        svc = CleaningService(spark, locations=locations)
+        cold[name] = _round_trips(monkeypatch, lambda: LocalCleaner(svc.index, svc.fuzzy_cutoff))
+        for _ in range(2):
+            svc.clean_one(texts[0])
+            svc.clean_batch(texts)
+        counts[name] = (
+            _round_trips(monkeypatch, lambda: svc.clean_one(texts[1])),
+            _round_trips(monkeypatch, lambda: svc.clean_batch(texts)),
+        )
+    assert max(counts["built-in"]) <= 90, counts
+    assert counts["2,000 variants"] == counts["built-in"], counts
+    assert cold["2,000 variants"] <= cold["built-in"] + 50, cold
 
 
 @pytest.mark.parametrize("fuzzy_enabled", [True, False])
