@@ -34,6 +34,8 @@ hit assembly (``hits_expr``).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -160,7 +162,7 @@ def with_nlp_enrichment(
     index: dict[str, str] | None = None,
 ) -> DataFrame:
     """F4's full NLP block (locs + clean location + trip type, Main.py:406-425)
-    resolved once per *distinct* text, then joined back — the reference's
+    resolved once per *distinct* text, then applied back — the reference's
     lru_cache insight (cleaner_v6.py:37, 180) applied to the whole enrichment,
     not just the dictionary lookup. Every output is a pure function of the
     text, so per-distinct resolution is semantics-preserving. Both paths
@@ -173,19 +175,27 @@ def with_nlp_enrichment(
     below reads them as). When there are at most ``limit`` of them,
     :meth:`LocalCleaner.clean` enriches them in the driver — no Python
     worker, no cached cut point, no further Spark job — and the
-    (text, locs, clean location, trip type) rows join back as a broadcast
-    driver-local relation, null-safe on the text. The plan this returns
-    then holds no enrichment work at all.
+    (text → locs, clean location, trip type) answers become one JSON
+    literal, parsed by ``from_json`` into a map (and the null text's
+    struct, if the probe saw a null), which one projection looks the text
+    up in. The plan this returns then holds no enrichment work and no
+    join. Spark looks a key up in a map by scanning its keys, so a row
+    costs time linear in the number of distinct texts: over 4,000,000
+    rows (noop write, 4 vCPUs, measured by hand) the literal took 0.6 s
+    against the broadcast join's 0.7 s at 32 texts, 2.2 vs 0.8 s at 256
+    and 8.4 vs 0.9 s at 2,048.
 
     The probe is a Spark job run when this function is called, not when
     the returned plan runs: every caller (all of ``plans.trips``) pays it
     to build a plan, even one that is only explained. On the local path
     the result is a snapshot of the source at that moment; a text that
-    appears in the source later joins to null locs.
+    appears in the source later gets null locs, clean location and trip
+    type.
 
     Crossover, 4 vCPUs, build + noop write, best of 3 interleaved runs,
-    local against distributed, each over N distinct texts: fuzzy on,
-    golden texts with a unique number appended 4,096: 2.0 vs 3.6 s,
+    local (then joined back) against distributed, each over N distinct
+    texts: fuzzy on, golden texts with a unique number appended 4,096:
+    2.0 vs 3.6 s,
     8,192: 3.4 vs 4.4 s, 16,384: 6.6 vs 4.1 s; random 3-word texts (every
     token unique) 2,000: 1.3 vs 2.5 s, 4,096: 2.3 vs 2.8 s, 8,192: 4.2 vs
     3.3 s. Fuzzy off, golden + number 1,000: 0.80 vs 1.15 s, 2,000: 0.91
@@ -193,12 +203,13 @@ def with_nlp_enrichment(
     2,000: 0.81 vs 0.75 s. The probe took 0.10-0.20 s at every size.
 
     Above the limit, :meth:`LocalCleaner.enrich` runs over the distinct
-    texts and the result joins back, paying the probe as one extra
-    distinct pass: 0.26-0.36 s of a 9-13 s ``trips_fuzzy_stress`` at
-    sf0.1 (100,000 distinct texts) on the same host, measured by hand; no
-    benchmark workload reaches this path. With fuzzy on it also runs the
-    token cascade's collect (:func:`with_all_locations_fuzzy`) when
-    called; neither path caches anything or leaves cleanup to the caller.
+    texts and the result joins back, null-safe on the text, paying the
+    probe as one extra distinct pass: 0.26-0.36 s of a 9-13 s
+    ``trips_fuzzy_stress`` at sf0.1 (100,000 distinct texts) on the same
+    host, measured by hand; no benchmark workload reaches this path. With
+    fuzzy on it also runs the token cascade's collect
+    (:func:`with_all_locations_fuzzy`) when called; neither path caches
+    anything or leaves cleanup to the caller.
     Trip texts are short human-entered strings with heavy repetition, so
     the distinct side is orders of magnitude smaller than the fact side
     and AQE broadcast-converts the join-back; the regex-heavy NLP chain
@@ -209,28 +220,31 @@ def with_nlp_enrichment(
     limit = ENRICH_LOCAL_MAX_TEXTS[bool(fuzzy)]
     distinct = [r[0] for r in df.select(key.alias(TEXT)).distinct().limit(limit + 1).collect()]
     if len(distinct) <= limit:
-        types = {
-            TEXT: "string", "all_locations": "array<string>",
-            "main_location": "string", "trip_type": "string",
-        }
-        rows = [dict(zip(types, r)) for r in cleaner.clean(spark, distinct, fuzzy)]
-        schema = ", ".join(f"{c} {t}" for c, t in types.items())
-        texts, on = F.broadcast(local_frame(spark, rows, schema)), key
-    else:
-        # Rebalance after the distinct: its output is small in bytes, so AQE
-        # coalesces to ~1 partition, which would run the regex-heavy NLP
-        # chain single-threaded when the distinct side is large (the
-        # all-unique stress shape). The moved data is just the text strings.
-        texts = df.select(F.col(text_col).alias(TEXT)).distinct()
-        texts = cleaner.enrich(texts.repartition(spark.sparkContext.defaultParallelism), fuzzy)
-        on = df[text_col]
+        out = ("locs", "End_Location_Clean", "Trip_Type")
+        found = {r[0]: dict(zip(out, r[1:])) for r in cleaner.clean(spark, distinct, fuzzy)}
+        null = found.pop(None, None)
+        fields = "locs: array<string>, End_Location_Clean: string, Trip_Type: string"
+        # one JSON literal (variant_map_expr's mechanism): the map of the
+        # non-null texts and the struct of the null text, if it was seen
+        e = F.from_json(
+            F.lit(json.dumps({"m": found, "n": null})),
+            f"struct<m: map<string, struct<{fields}>>, n: struct<{fields}>>",
+        )
+        hit = F.when(key.isNull(), e["n"]).otherwise(F.try_element_at(e["m"], key))
+        return df.select("*", *(hit[c].alias(c) for c in out))
+    # Rebalance after the distinct: its output is small in bytes, so AQE
+    # coalesces to ~1 partition, which would run the regex-heavy NLP
+    # chain single-threaded when the distinct side is large (the
+    # all-unique stress shape). The moved data is just the text strings.
+    texts = df.select(F.col(text_col).alias(TEXT)).distinct()
+    texts = cleaner.enrich(texts.repartition(spark.sparkContext.defaultParallelism), fuzzy)
     texts = texts.select(
         TEXT,
         F.col("all_locations").alias("locs"),
         F.col("main_location").alias("End_Location_Clean"),
         F.col("trip_type").alias("Trip_Type"),
     )
-    return df.join(texts, on.eqNullSafe(texts[TEXT]), how="left").drop(TEXT)
+    return df.join(texts, df[text_col].eqNullSafe(texts[TEXT]), how="left").drop(TEXT)
 
 
 def trip_tokens_expr(text: Column) -> Column:
@@ -294,15 +308,18 @@ class LocalCleaner:
 
     def clean(self, spark, texts: list[str | None], fuzzy: bool) -> list:
         """(text, all_locations, main_location, trip_type) rows in input
-        order; at most ``LOCAL_MAX_TEXTS`` texts."""
-        df = local_frame(spark, [{TEXT: t} for t in texts], f"{TEXT} string")
+        order; at most ``LOCAL_MAX_TEXTS`` texts. Each distinct text is
+        cleaned once, and its row repeats for its repeats."""
+        distinct = list(dict.fromkeys(texts))
+        df = local_frame(spark, [{TEXT: t} for t in distinct], f"{TEXT} string")
         if fuzzy:
             staged = [r[0] for r in df.select(self.resolver.staged).collect()]
-            df = self.resolver.scored(spark, TEXT, texts, staged)
+            df = self.resolver.scored(spark, TEXT, distinct, staged)
             df = df.select(TEXT, self.hits, self.norm)
         else:
             df = df.select(TEXT, self.tier12, self.norm)
-        return df.select(self.text, *self.block).collect()
+        rows = dict(zip(distinct, df.select(self.text, *self.block).collect()))
+        return [rows[t] for t in texts]
 
     def enrich(self, df: DataFrame, fuzzy: bool) -> DataFrame:
         """``df``, whose text is in ``TEXT``, with all_locations,

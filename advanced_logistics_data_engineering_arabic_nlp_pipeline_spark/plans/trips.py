@@ -15,21 +15,28 @@ Scale design:
   (``extract.with_nlp_enrichment``). Up to
   ``extract.ENRICH_LOCAL_MAX_TEXTS`` distinct texts (2,048 fuzzy, 1,024
   not; the golden corpus has 32) are enriched in the driver after one
-  distinct probe and broadcast-joined back as a local relation, so a
-  report's plan holds no NLP work, no Python UDF and no cached cut point;
-  more distinct texts take the distributed cascade. No builder here
-  persists anything or asks its caller to ``clearCache()``.
+  distinct probe, and their answers ride into the plan as one map literal
+  in a projection, so a report's plan holds no NLP work, no join, no
+  Python UDF and no cached cut point; more distinct texts take the
+  distributed cascade. No builder here persists anything or asks its
+  caller to ``clearCache()``.
 - Building is eager: the probe is a Spark job that every builder here
   runs when called, so code that only builds a plan (registry
-  enumeration, explain capture) pays one job per builder. On the local
-  path the built plan carries the enrichment as a snapshot of the source
-  at build time.
+  enumeration, explain capture) pays it once per builder. It is the
+  build's only Spark work: the events schema comes from the parquet
+  footer (``sources.tables``), and the master stage's select lists are
+  built once per live gateway and applied as three projections around
+  the enrichment. On the local path the built plan carries the
+  enrichment as a snapshot of the source at build time.
 - ``location_pairs`` generates pair structs with array expressions
   (flatten/transform) instead of the reference's iterrows loop
   (Main.py:244-255) — the explode is the only wide step, and the
   pairs-per-row bound (≤ C(5,2)=10) caps blowup.
 - Percentage denominators are single-row aggregates broadcast-joined back
   (reference recomputes len(df) driver-side, Main.py:262-263).
+- The pairs and stats reports hold at most one row per (pair of)
+  canonical location(s), so they sort in one partition: no range
+  exchange and no sampling job.
 - Above the local limit, the fuzzy variant also resolves the distinct
   texts' tokens at build time: one collected Spark job (the E4
   distinct-token cascade, bounded by the distinct tokens) whose mapping
@@ -52,6 +59,7 @@ from ..functions.scalars import (
     us_date_string,
 )
 from ..operators.extract import with_nlp_enrichment
+from ..session import per_gateway
 from ..sources.dictionary import sql_tier1_case, sql_tier2_case
 from ..sources.tables import load_table
 
@@ -108,77 +116,81 @@ MASTER_COLUMNS = [
 ]
 
 
-def _golden_array() -> Column:
-    return F.array(
-        *[
-            F.lit(t) if t is not None else F.lit(None).cast("string")
-            for t in GOLDEN_TEXTS
+def _columns() -> tuple[list[Column], list[Column], list[Column]]:
+    """The master stage's three select lists, built once per live gateway
+    (``session.per_gateway``; a build is about a hundred py4j calls, the
+    32-text golden array among them) and shared by every builder:
+
+    - ``raw``: trips_raw's records over the events columns;
+    - ``scalars``: the raw records with B5's string scrub of
+      ``end_location``, C1-C3 and ``end_location_original``;
+    - ``master``: after the NLP block, MASTER_COLUMNS with the clean
+      location and G1/G2, plus ``locs``."""
+
+    def build():
+        n = len(GOLDEN_TEXTS)
+        uid, eid = F.col("user_id"), F.col("event_id")
+        golden = F.array(
+            *[F.lit(t) if t is not None else F.lit(None).cast("string") for t in GOLDEN_TEXTS]
+        )
+        raw = {
+            "#": eid,
+            "customer_name": F.concat(F.lit("Customer "), (uid % 200).cast("string")),
+            "ts": F.col("ts"),
+            "sale_price": F.col("value"),
+            "currency": F.lit("EGP"),
+            "driver_name": F.concat(F.lit("Driver "), (uid % 7).cast("string")),
+            "entry_number": eid % 97,
+            "start_location": F.col("event_type"),
+            "end_location": F.element_at(golden, ((eid % n) + 1).cast("int")),
+            "km_start": eid % 1000,
+            "km_return": (eid % 1000) + (eid % 7) * 50 - 100,
+            "station": F.concat(F.lit("ST-"), (uid % 5).cast("string")),
+            "receiver_name": F.concat(F.lit("Receiver "), (uid % 11).cast("string")),
+            "car_number": F.when(uid % 13 == 0, F.lit("بدون ارقام"))
+            .when(uid % 5 == 0, F.concat(F.lit("00"), (uid % 100).cast("string")))
+            .otherwise(F.concat(F.lit("س و ع "), uid.cast("string"))),
+            "reference_id": F.concat(F.lit("REF-"), eid.cast("string")),
+        }
+        # apply_power_query_transformations mirror (Main.py:362-439):
+        # B5 string scrub → C1/C2/C3, then (after the NLP block) G1/G2
+        text = coerce_string(F.col("end_location"))
+        scalars = [F.col(f"`{c}`") for c in raw if c != "end_location"] + [
+            text.alias("end_location"),
+            conditional_distance(F.col("km_start"), F.col("km_return")).alias("Total_KM"),
+            extract_plate(F.col("car_number")).alias("Car_Num"),
+            us_date_string(F.col("ts")).alias("date"),
+            text.alias("end_location_original"),
         ]
-    )
+        locs = F.col("locs")
+        derived = {
+            "end_location": F.col("End_Location_Clean"),
+            "num_locations": F.size(locs).cast("bigint"),
+            # try_element_at: NULL beyond the array end (G2,
+            # Main.py:227-231) — plain element_at throws under ANSI mode
+            # (Spark 4 default)
+            **{f"Location_{i}": F.try_element_at(locs, F.lit(i)) for i in range(1, 6)},
+        }
+        master = [derived[c].alias(c) if c in derived else F.col(f"`{c}`") for c in MASTER_COLUMNS]
+        return [e.alias(c) for c, e in raw.items()], scalars, master + [locs]
+
+    return per_gateway(("plans.trips",), build)
 
 
 def trips_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic trip records from events (structure_raw_data analogue,
     Main.py:442-463 shape)."""
-    ev = load_table(spark, sf_dir, "events")
-    n = len(GOLDEN_TEXTS)
-    return ev.select(
-        F.col("event_id").alias("#"),
-        F.concat(F.lit("Customer "), (F.col("user_id") % 200).cast("string")).alias(
-            "customer_name"
-        ),
-        F.col("ts"),
-        F.col("value").alias("sale_price"),
-        F.lit("EGP").alias("currency"),
-        F.concat(F.lit("Driver "), (F.col("user_id") % 7).cast("string")).alias("driver_name"),
-        (F.col("event_id") % 97).alias("entry_number"),
-        F.col("event_type").alias("start_location"),
-        F.element_at(_golden_array(), ((F.col("event_id") % n) + 1).cast("int")).alias(
-            "end_location"
-        ),
-        (F.col("event_id") % 1000).alias("km_start"),
-        ((F.col("event_id") % 1000) + (F.col("event_id") % 7) * 50 - 100).alias("km_return"),
-        F.concat(F.lit("ST-"), (F.col("user_id") % 5).cast("string")).alias("station"),
-        F.concat(F.lit("Receiver "), (F.col("user_id") % 11).cast("string")).alias(
-            "receiver_name"
-        ),
-        F.when(F.col("user_id") % 13 == 0, F.lit("بدون ارقام"))
-        .when(
-            F.col("user_id") % 5 == 0,
-            F.concat(F.lit("00"), (F.col("user_id") % 100).cast("string")),
-        )
-        .otherwise(F.concat(F.lit("س و ع "), F.col("user_id").cast("string")))
-        .alias("car_number"),
-        F.concat(F.lit("REF-"), F.col("event_id").cast("string")).alias("reference_id"),
-    )
-
-
-def _enrich(df: DataFrame, fuzzy: bool) -> DataFrame:
-    """apply_power_query_transformations mirror (Main.py:362-439):
-    B5 string scrub → C1/C2/C3 → F4 NLP block → G1/G2 → B7 projection."""
-    df = df.withColumn("end_location", coerce_string(F.col("end_location")))
-    df = df.withColumn(
-        "Total_KM", conditional_distance(F.col("km_start"), F.col("km_return"))
-    )
-    df = df.withColumn("Car_Num", extract_plate(F.col("car_number")))
-    df = df.withColumn("date", us_date_string(F.col("ts")))
-
-    df = df.withColumn("end_location_original", F.col("end_location"))
-    # the whole NLP block is a pure function of the text → resolve once per
-    # distinct text and broadcast-join back (reference's lru_cache insight;
-    # the chain runs |distinct| times instead of |rows| times)
-    df = with_nlp_enrichment(df, "end_location", fuzzy=fuzzy)
-    df = df.withColumn("end_location", F.col("End_Location_Clean"))
-    df = df.withColumn("num_locations", F.size(F.col("locs")).cast("bigint"))
-    for i in range(1, 6):
-        # try_element_at: NULL beyond the array end (G2, Main.py:227-231) —
-        # plain element_at throws under ANSI mode (Spark 4 default)
-        df = df.withColumn(f"Location_{i}", F.try_element_at(F.col("locs"), F.lit(i)))
-    return df
+    return load_table(spark, sf_dir, "events").select(*_columns()[0])
 
 
 def _master_stage(spark: SparkSession, sf_dir: str, fuzzy: bool = False) -> DataFrame:
-    return _enrich(trips_raw(spark, sf_dir), fuzzy)
+    """The enriched master records: ``MASTER_COLUMNS`` and ``locs``. The
+    whole NLP block is a pure function of the text, so it resolves once
+    per distinct text (the reference's lru_cache insight; the chain runs
+    |distinct| times instead of |rows| times)."""
+    _, scalars, master = _columns()
+    df = trips_raw(spark, sf_dir).select(*scalars)
+    return with_nlp_enrichment(df, "end_location", fuzzy=fuzzy).select(*master)
 
 
 def trips_master(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,8 +240,8 @@ def location_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H1/H2 pair analysis (Main.py:234-263): unordered sorted pairs from the
     per-trip location set, frequency/revenue/percentage-of-multi-trips."""
     # both the pairs branch and the percentage denominator read the
-    # enriched multi-trip slice; the enrichment is a broadcast join against
-    # a driver-local relation, so reading it twice costs two cheap scans
+    # enriched multi-trip slice; the enrichment is a map literal in the
+    # scan's projection, so reading it twice costs two cheap scans
     m = (
         _master_stage(spark, sf_dir)
         .filter(F.col("num_locations") >= 2)
@@ -264,17 +276,20 @@ def location_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sale_price"),
         F.explode(pairs).alias("pair"),
     ).select("trip_id", "sale_price", "pair.Location_A", "pair.Location_B")
+    agg = exploded.groupBy("Location_A", "Location_B").agg(
+        F.count("trip_id").alias("Frequency"),
+        dsum(F.col("sale_price"), 6).alias("Total_Revenue"),
+    )
+    # at most one row per pair of canonical locations: sorted in one
+    # partition, the sort needs no range-sampling job (the sink writes one
+    # file anyway)
     return (
-        exploded.groupBy("Location_A", "Location_B")
-        .agg(
-            F.count("trip_id").alias("Frequency"),
-            dsum(F.col("sale_price"), 6).alias("Total_Revenue"),
+        agg.crossJoin(F.broadcast(total))
+        .select(
+            "Location_A", "Location_B", "Frequency", "Total_Revenue",
+            F.round(F.col("Frequency") * 100.0 / F.col("__tm"), 2).alias("Percentage"),
         )
-        .crossJoin(F.broadcast(total))
-        .withColumn(
-            "Percentage", F.round(F.col("Frequency") * 100.0 / F.col("__tm"), 2)
-        )
-        .drop("__tm")
+        .coalesce(1)
         .orderBy(F.desc("Frequency"), "Location_A", "Location_B")
     )
 
@@ -292,22 +307,23 @@ def location_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sale_price"),
         F.posexplode(F.slice(F.col("locs"), 1, 5)).alias("pos", "Location"),
     ).filter(_VALID_LOC(F.col("Location")))
+    agg = melted.groupBy("Location").agg(
+        F.count("id").alias("Total_Visits"),
+        dsum(F.col("sale_price"), 6).alias("Total_Revenue"),
+        F.sum((F.col("pos") == 0).cast("bigint")).alias("Primary_Destination_Count"),
+    )
+    # at most one row per canonical location: one-partition sort, as in
+    # location_pairs
     return (
-        melted.groupBy("Location")
-        .agg(
-            F.count("id").alias("Total_Visits"),
-            dsum(F.col("sale_price"), 6).alias("Total_Revenue"),
-            F.sum((F.col("pos") == 0).cast("bigint")).alias("Primary_Destination_Count"),
+        agg.crossJoin(F.broadcast(total))
+        .select(
+            "Location", "Total_Visits", "Total_Revenue", "Primary_Destination_Count",
+            F.round(F.col("Total_Revenue") / F.col("Total_Visits"), 2).alias(
+                "Avg_Revenue_Per_Visit"
+            ),
+            F.round(F.col("Total_Visits") * 100.0 / F.col("__tt"), 2).alias("Visit_Percentage"),
         )
-        .withColumn(
-            "Avg_Revenue_Per_Visit",
-            F.round(F.col("Total_Revenue") / F.col("Total_Visits"), 2),
-        )
-        .crossJoin(F.broadcast(total))
-        .withColumn(
-            "Visit_Percentage", F.round(F.col("Total_Visits") * 100.0 / F.col("__tt"), 2)
-        )
-        .drop("__tt")
+        .coalesce(1)
         .orderBy(F.desc("Total_Visits"), "Location")
     )
 
@@ -315,9 +331,9 @@ def location_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multi_location_details(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H5 multi-location detail report (Main.py:293-310)."""
     m = _master_stage(spark, sf_dir).filter(F.col("num_locations") >= 2)
-    return m.withColumn("Trip_Route", route_string(F.slice(F.col("locs"), 1, 5))).select(
+    return m.select(
         "#", "customer_name", "date", "sale_price", "num_locations",
-        "Trip_Route", "Trip_Type",
+        route_string(F.slice(F.col("locs"), 1, 5)).alias("Trip_Route"), "Trip_Type",
         "Location_1", "Location_2", "Location_3", "Location_4", "Location_5",
     )
 

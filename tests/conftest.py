@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -21,3 +22,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn, tag)``: (fn's result, the Spark jobs it ran). A
+    control job in a second group follows it: status events arrive in
+    order, so once the control job is listed every job ``fn`` ran is
+    listed too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn, tag: str):
+        group = f"test-{tag}-{time.monotonic_ns()}"
+        sc.setJobGroup(group, tag)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(group + "-control", "control")
+            sc.parallelize([1], 1).count()
+            deadline = time.monotonic() + 30
+            while not tracker.getJobIdsForGroup(group + "-control") and time.monotonic() < deadline:
+                time.sleep(0.02)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run

@@ -1,6 +1,7 @@
 """with_nlp_enrichment's driver-local path (up to ENRICH_LOCAL_MAX_TEXTS
-distinct texts, enriched by the shared LocalCleaner and broadcast-joined
-back) against its distributed path, forced by setting the limit to 0."""
+distinct texts, enriched by the shared LocalCleaner and applied back as
+one map literal) against its distributed path, forced by setting the limit
+to 0."""
 
 from __future__ import annotations
 

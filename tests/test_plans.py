@@ -31,13 +31,13 @@ def test_revenue_by_nation_broadcasts_dims(spark, sf_dir):
 
 
 def test_trips_master_fact_side_stays_narrow(spark, sf_dir):
-    # NLP resolution runs once per distinct text; the fact side must join
-    # that map back via broadcast — never a fact-side repartition (a
-    # SortMergeJoin here would shuffle every row at 100 TB). The only
-    # hash exchange allowed is the tiny distinct-text aggregation.
-    p = _plan(spark, sf_dir, "trips_master")
-    assert "BroadcastHashJoin" in p, "NLP map must broadcast-join back"
-    assert "SortMergeJoin" not in p, "fact side must not shuffle for the NLP join"
+    # NLP resolution runs once per distinct text and its answers ride in
+    # the scan's projection: the fact side is never joined and never
+    # repartitioned (a shuffle here would move every row at 100 TB)
+    df = QUERIES["trips_master"](spark, sf_dir)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in p, "the NLP answers must not be joined back"
+    assert "Exchange" not in p, "the fact side must not shuffle"
 
 
 def test_top_customers_avoids_global_sort(spark, sf_dir):
@@ -90,7 +90,7 @@ def test_expression_builder_memos_return_same_tree(spark):
     assert local_cleaner(build_variant_index({"A": ["الهرم"]}), 82) is not a1
 
 
-def test_trips_master_fuzzy_build_runs_only_the_distinct_probe(spark, sf_dir):
+def test_trips_master_fuzzy_build_runs_only_the_distinct_probe(spark, sf_dir, spark_jobs):
     """The fuzzy master's build runs no more Spark jobs than its distinct
     probe needs (the texts are enriched in the driver), and its plan holds
     no Python UDF and no shuffle join."""
@@ -100,15 +100,14 @@ def test_trips_master_fuzzy_build_runs_only_the_distinct_probe(spark, sf_dir):
         ENRICH_LOCAL_MAX_TEXTS,
     )
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.plans import trips
-    from tests.test_service import _jobs
 
     def probe_only():
         raw = trips.trips_raw(spark, sf_dir).select(F.col("end_location").cast("string"))
         return raw.distinct().limit(ENRICH_LOCAL_MAX_TEXTS[True] + 1).collect()
 
     trips.trips_master_fuzzy(spark, sf_dir)  # warm the scan and the memos
-    _, probe = _jobs(spark, probe_only, "probe")
-    df, build = _jobs(spark, lambda: trips.trips_master_fuzzy(spark, sf_dir), "build")
+    _, probe = spark_jobs(probe_only, "probe")
+    df, build = spark_jobs(lambda: trips.trips_master_fuzzy(spark, sf_dir), "build")
     assert 0 < build <= probe
     p = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -137,6 +136,47 @@ def test_report_cycle_leaves_no_persisted_rdds(spark, sf_dir, tmp_path):
         write_report_csv(getattr(trips, name)(spark, sf_dir), str(tmp_path / name))
         assert any(f.endswith(".csv") for f in os.listdir(tmp_path / name))
     assert persisted() - before == set()
+
+
+def test_report_cycle_runs_each_build_as_its_probe(spark, sf_dir, tmp_path, spark_jobs):
+    """A report cycle (four builds + CSV writes) runs at most 18 Spark jobs,
+    and each build runs no more jobs than its distinct probe: the events
+    load infers no schema, the enrichment joins nothing back, and the two
+    small grouped reports sort in one partition (no range-sampling job).
+    Before those, a cycle ran 32."""
+    from pyspark.sql import functions as F
+
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.extract import (
+        ENRICH_LOCAL_MAX_TEXTS,
+    )
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.plans import trips
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.sinks import (
+        write_report_csv,
+    )
+
+    fuzzy = {
+        "trips_master_fuzzy": True, "location_pairs": False,
+        "location_stats": False, "multi_location_details": False,
+    }
+
+    def probe(on: bool):
+        raw = trips.trips_raw(spark, sf_dir).select(F.col("end_location").cast("string"))
+        return raw.distinct().limit(ENRICH_LOCAL_MAX_TEXTS[on] + 1).collect()
+
+    def cycle() -> dict[str, tuple[int, int]]:
+        jobs = {}
+        for name in fuzzy:
+            df, build = spark_jobs(lambda: getattr(trips, name)(spark, sf_dir), name)
+            _, write = spark_jobs(lambda: write_report_csv(df, str(tmp_path / name)), "write")
+            jobs[name] = (build, write)
+        return jobs
+
+    cycle()  # warm the scans and the memos
+    jobs = cycle()
+    probes = {on: spark_jobs(lambda: probe(on), "probe")[1] for on in (True, False)}
+    assert sum(b + w for b, w in jobs.values()) <= 18, jobs
+    for name, (build, _) in jobs.items():
+        assert 0 < build <= probes[fuzzy[name]], (name, jobs, probes)
 
 
 def test_fuzzy_cascade_scores_each_distinct_token_once(spark):

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import random
 import sys
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -314,32 +313,12 @@ def _reference(spark, svc: CleaningService, texts, fuzzy: bool) -> dict:
     }
 
 
-def _jobs(spark, fn, tag: str):
-    """(fn's result, the Spark jobs it ran). A control job in a second
-    group follows it: status events arrive in order, so once the control
-    job is listed every job ``fn`` ran is listed too."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = f"test-service-{tag}-{time.monotonic_ns()}"
-    sc.setJobGroup(group, tag)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(group + "-control", "control")
-        sc.parallelize([1], 1).count()
-        deadline = time.monotonic() + 30
-        while not tracker.getJobIdsForGroup(group + "-control") and time.monotonic() < deadline:
-            time.sleep(0.02)
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(tracker.getJobIdsForGroup(group))
-
-
 def test_local_path_matches_clean_texts_df(spark):
     """Requests up to LOCAL_MAX_TEXTS are cleaned in the driver; every
     answer must equal the distributed clean_texts_df over createDataFrame:
     the golden corpus, seeded near-miss spellings, None/''/digits-only,
-    the empty batch, a batch of exactly the limit (local) and one of the
-    limit plus one (distributed)."""
+    the empty batch, a batch of repeated texts, a batch of exactly the
+    limit (local) and one of the limit plus one (distributed)."""
     svc = CleaningService(spark)
     edge = [None, "", "   ", "12345", "٠١٢٣", "x"]
     messy = _near_misses(7, 120)
@@ -352,7 +331,7 @@ def test_local_path_matches_clean_texts_df(spark):
     assert svc.clean_batch([])["results"] == []
     with pytest.raises(TypeError):
         svc.clean_batch(["الهرم", 5])
-    for batch in (list(GOLDEN_TEXTS), edge, messy, at_limit, over):
+    for batch in (list(GOLDEN_TEXTS), edge, messy, messy[:5] * 3 + edge * 2, at_limit, over):
         got = _answers(svc.clean_batch(batch))
         assert got == [ref[t] for t in batch]
     for t in list(GOLDEN_TEXTS[:4]) + edge[:4] + messy[:4]:
@@ -365,18 +344,18 @@ def test_local_path_matches_clean_texts_df(spark):
     assert got == [ref12[t] for t in list(GOLDEN_TEXTS) + messy]
 
 
-def test_small_requests_run_no_spark_job(spark):
+def test_small_requests_run_no_spark_job(spark, spark_jobs):
     """/clean and a small /clean/batch run no Spark job at all (fuzzy on:
     the tier-3 misses are scored in the driver); a batch above the limit
     takes the distributed path and does."""
     svc = CleaningService(spark)
-    out, jobs = _jobs(spark, lambda: svc.clean_one("تشغيل 12 ساعه مطارررر القاهره وعوده"), "one")
+    out, jobs = spark_jobs(lambda: svc.clean_one("تشغيل 12 ساعه مطارررر القاهره وعوده"), "one")
     assert out["main_location"] == "Cairo Airport"
     assert jobs == 0
-    out, jobs = _jobs(spark, lambda: svc.clean_batch(list(GOLDEN_TEXTS[:8]) + [None, ""]), "batch")
+    out, jobs = spark_jobs(lambda: svc.clean_batch(list(GOLDEN_TEXTS[:8]) + [None, ""]), "batch")
     assert len(out["results"]) == 10
     assert jobs == 0
-    _, jobs = _jobs(spark, lambda: svc.clean_batch(["الهرم"] * (LOCAL_MAX_TEXTS + 1)), "big")
+    _, jobs = spark_jobs(lambda: svc.clean_batch(["الهرم"] * (LOCAL_MAX_TEXTS + 1)), "big")
     assert jobs > 0
 
 
