@@ -17,19 +17,20 @@ holds the token cascade's. Two paths read them:
   ``ENRICH_LOCAL_MAX_TEXTS``). With fuzzy on it runs two driver-local
   plans (per-token cascade inputs, then hits and trip type), with fuzzy
   off one;
-- :meth:`LocalCleaner.enrich`, over a DataFrame of any size:
-  ``service.clean_texts_df`` and ``with_nlp_enrichment``'s fallback. Its
-  location scan is either the tier-1/2 expression
-  (``extract_all_locations_expr``: zero-shuffle, whole-stage codegen,
-  SQL-mirrorable, the oracle-checked path) or, with tier-3 fuzzy,
-  :func:`with_all_locations_fuzzy`: the distinct tokens resolve in one
-  collected pass (operators.lookup), and the resulting map applies back as
-  a literal map expression, or for a large map as posexplode → broadcast
-  join → ordered re-aggregation (one groupBy shuffle).
+- :meth:`LocalCleaner.enrich`, over a DataFrame of any size, as one lazy
+  plan that runs no Spark job until its caller's action:
+  ``service.clean_texts_df`` and ``with_nlp_enrichment``'s fallback, both
+  once per distinct text through :meth:`LocalCleaner.enrich_distinct`
+  (``clean_texts_df`` with fuzzy off runs per row). Its location scan is
+  either the tier-1/2 expression (``extract_all_locations_expr``:
+  zero-shuffle, whole-stage codegen, SQL-mirrorable, the oracle-checked
+  path) or, with tier-3 fuzzy, the per-token cascade with each row's
+  misses scored by one pandas UDF (operators.lookup).
 
-The fuzzy scans, local and distributed, share the tokenization
-(``trip_tokens_expr``), the token cascade (``operators.lookup``) and the
-hit assembly (``hits_expr``).
+The fuzzy scans, local and distributed, share one hits expression
+(``LocalCleaner.hits``): the tokenization (``trip_tokens_expr``), the
+token cascade and its scoring rule (``operators.lookup``) and the hit
+assembly (``hits_expr``).
 """
 
 from __future__ import annotations
@@ -60,14 +61,16 @@ _DIGITS_ONLY = "^[0-9٠-٩]+$"
 # The most texts one :class:`LocalCleaner` call takes: a /clean or
 # /clean/batch request of up to this many texts runs in the driver with no
 # Spark job. Set at half the crossover with the service's distributed path
-# (service module docstring).
+# as it was then; the lazy distributed path meets the driver at about this
+# size (service module docstring). A benchmark workload is to re-derive it.
 LOCAL_MAX_TEXTS = 4096
 
 # with_nlp_enrichment enriches in the driver up to this many distinct texts,
 # by fuzzy setting; above, its distributed path wins. Set at about half the
-# crossover measured against that path (with_nlp_enrichment docstring):
-# without the fuzzy tier the distributed path starts no Python worker, so it
-# overtakes the driver sooner.
+# crossover measured against that path as it was then; with fuzzy on, the
+# lazy distributed path now meets the driver at ~1,000-2,000 texts
+# (with_nlp_enrichment docstring). A benchmark workload is to re-derive
+# both.
 ENRICH_LOCAL_MAX_TEXTS = {True: 2048, False: 1024}
 
 # The private text column every shared NLP expression reads
@@ -193,23 +196,27 @@ def with_nlp_enrichment(
     type.
 
     Crossover, 4 vCPUs, build + noop write, best of 3 interleaved runs,
-    local (then joined back) against distributed, each over N distinct
-    texts: fuzzy on, golden texts with a unique number appended 4,096:
-    2.0 vs 3.6 s,
-    8,192: 3.4 vs 4.4 s, 16,384: 6.6 vs 4.1 s; random 3-word texts (every
-    token unique) 2,000: 1.3 vs 2.5 s, 4,096: 2.3 vs 2.8 s, 8,192: 4.2 vs
-    3.3 s. Fuzzy off, golden + number 1,000: 0.80 vs 1.15 s, 2,000: 0.91
-    vs 0.96 s, 4,096: 1.24 vs 1.05 s; random texts 1,000: 0.44 vs 0.61 s,
-    2,000: 0.81 vs 0.75 s. The probe took 0.10-0.20 s at every size.
+    local against distributed, each over N distinct texts of sf0.1
+    events, measured by hand. Fuzzy on (the distributed side as one lazy
+    plan), golden texts with a unique number appended 1,000: 0.80 vs
+    1.05 s, 2,000: 0.94 vs 0.95 s, 4,096: 1.62 vs 1.15 s, 8,192: 3.0 vs
+    0.99 s, 16,384: 4.7 vs 1.1 s; random 3-word texts 500: 0.42 vs 0.70 s,
+    1,000: 0.58 vs 0.61 s, 2,000: 0.75 vs 0.67 s, 4,096: 1.2 vs 0.66 s,
+    8,192: 2.4 vs 0.81 s. That crossover is ~1,000-2,000 texts, so the
+    fuzzy limit (2,048) sits at or above it, not at half of it; no
+    benchmark workload has yet decided it. Fuzzy off, golden + number
+    1,000: 0.80 vs 1.15 s, 2,000: 0.91 vs 0.96 s, 4,096: 1.24 vs 1.05 s;
+    random texts 1,000: 0.44 vs 0.61 s, 2,000: 0.81 vs 0.75 s. The probe
+    took 0.10-0.20 s at every size.
 
-    Above the limit, :meth:`LocalCleaner.enrich` runs over the distinct
-    texts and the result joins back, null-safe on the text, paying the
-    probe as one extra distinct pass: 0.26-0.36 s of a 9-13 s
-    ``trips_fuzzy_stress`` at sf0.1 (100,000 distinct texts) on the same
-    host, measured by hand; no benchmark workload reaches this path. With
-    fuzzy on it also runs the token cascade's collect
-    (:func:`with_all_locations_fuzzy`) when called; neither path caches
-    anything or leaves cleanup to the caller.
+    Above the limit, :meth:`LocalCleaner.enrich_distinct` runs the block
+    over the distinct texts and joins it back, null-safe on the text,
+    paying the probe as one extra distinct pass (0.26-0.36 s at sf0.1's
+    100,000 distinct texts, where all of ``trips_fuzzy_stress`` takes
+    4.6-5.2 s, measured by hand); no benchmark workload reaches this path.
+    Past the probe the returned plan is lazy, with fuzzy on too: nothing
+    runs until the caller's action, and neither path caches anything or
+    leaves cleanup to the caller.
     Trip texts are short human-entered strings with heavy repetition, so
     the distinct side is orders of magnitude smaller than the fact side
     and AQE broadcast-converts the join-back; the regex-heavy NLP chain
@@ -232,19 +239,8 @@ def with_nlp_enrichment(
         )
         hit = F.when(key.isNull(), e["n"]).otherwise(F.try_element_at(e["m"], key))
         return df.select("*", *(hit[c].alias(c) for c in out))
-    # Rebalance after the distinct: its output is small in bytes, so AQE
-    # coalesces to ~1 partition, which would run the regex-heavy NLP
-    # chain single-threaded when the distinct side is large (the
-    # all-unique stress shape). The moved data is just the text strings.
-    texts = df.select(F.col(text_col).alias(TEXT)).distinct()
-    texts = cleaner.enrich(texts.repartition(spark.sparkContext.defaultParallelism), fuzzy)
-    texts = texts.select(
-        TEXT,
-        F.col("all_locations").alias("locs"),
-        F.col("main_location").alias("End_Location_Clean"),
-        F.col("trip_type").alias("Trip_Type"),
-    )
-    return df.join(texts, df[text_col].eqNullSafe(texts[TEXT]), how="left").drop(TEXT)
+    out = cleaner.enrich_distinct(df, text_col, fuzzy)
+    return out.toDF(*df.columns, "locs", "End_Location_Clean", "Trip_Type")
 
 
 def trip_tokens_expr(text: Column) -> Column:
@@ -274,12 +270,14 @@ class LocalCleaner:
       only Project steps run over it, so Catalyst evaluates all of it in
       the driver. With fuzzy on that is two plans, one ``collect()`` each:
       the resolver's ``staged`` returns each text's per-token cascade
-      inputs and miss forms; the driver scores the distinct misses, and
-      a second relation of per-token tier-1/2 and fuzzy results gets the
-      cascade order, the hits, ``__norm``, main_location and trip_type.
-      A warm request costs about 80 py4j round trips (the four plans
-      before took ~180). Callers bound the input (``LOCAL_MAX_TEXTS``);
-    - :meth:`enrich`, over a DataFrame of any size.
+      inputs and miss forms; the driver scores the misses, and a second
+      relation of per-token tier-1/2 and fuzzy results gets the cascade
+      order, the hits, ``__norm``, main_location and trip_type. A warm
+      request costs about 80 py4j round trips (the four plans before
+      took ~180). Callers bound the input (``LOCAL_MAX_TEXTS``);
+    - :meth:`enrich`, over a DataFrame of any size, the same steps as
+      one lazy projection chain, the misses scored by the resolver's
+      pandas UDF; :meth:`enrich_distinct` runs it once per distinct text.
 
     Holds no per-call state: get one from :func:`local_cleaner` and share
     it across threads."""
@@ -287,11 +285,9 @@ class LocalCleaner:
     def __init__(self, index: dict[str, str], cutoff: float) -> None:
         from .lookup import LocalTokenResolver
 
-        self.index, self.cutoff = index, cutoff
         t, locs = F.col(TEXT), F.col("all_locations")
-        m, tokens = variant_map_expr(index), trip_tokens_expr(t)
-        self.tokens = tokens.alias("__toks")
-        self.resolver = LocalTokenResolver(index, cutoff, m, tokens)
+        m = variant_map_expr(index)
+        self.resolver = LocalTokenResolver(index, cutoff, m, trip_tokens_expr(t))
         self.hits = hits_expr(self.resolver.order).alias("all_locations")
         self.tier12 = extract_all_locations_expr(t, index, m).alias("all_locations")
         self.norm = normalize_arabic(t).alias("__norm")
@@ -323,16 +319,33 @@ class LocalCleaner:
 
     def enrich(self, df: DataFrame, fuzzy: bool) -> DataFrame:
         """``df``, whose text is in ``TEXT``, with all_locations,
-        main_location and trip_type appended: one distributed plan. With
-        fuzzy on, the token cascade's collect runs when this is called
-        (:func:`with_all_locations_fuzzy`); nothing stays cached."""
+        main_location and trip_type appended: one lazy projection chain
+        per row. With fuzzy on it stages each text's tokens, scores their
+        misses in one pandas UDF and assembles the hits (the resolver's
+        ``staged``, ``fuzzy`` and ``order``)."""
+        keep = [F.col(f"`{c}`") for c in df.columns]
         if fuzzy:
-            df = with_all_locations_fuzzy(df, TEXT, "all_locations", self.index, self.cutoff)
+            r = self.resolver
+            df = df.select(*keep, r.staged).select(*keep, "__tk", r.fuzzy)
+            df = df.select(*keep, self.hits)
         else:
-            df = df.select("*", self.tier12)
-        keep = [F.col(f"`{c}`") for c in df.columns if c != "all_locations"]
+            df = df.select(*keep, self.tier12)
         df = df.select(*keep, self.barrier).select(*keep, "__b.*")
         return df.select(*keep, *self.block)
+
+    def enrich_distinct(self, df: DataFrame, text_col: str, fuzzy: bool) -> DataFrame:
+        """``df`` with all_locations, main_location and trip_type of
+        ``text_col`` appended, :meth:`enrich` run once per distinct text
+        and joined back null-safe on the text: one lazy plan, so no Spark
+        job runs until the caller's action. The distinct is rebalanced
+        first: its output is small in bytes, so AQE would coalesce it to
+        ~1 partition and run the regex-heavy block (and the fuzzy scorer)
+        single-threaded when the distinct side is large (the all-unique
+        stress shape). The moved data is just the text strings."""
+        spark = df.sparkSession
+        texts = df.select(F.col(text_col).alias(TEXT)).distinct()
+        texts = self.enrich(texts.repartition(spark.sparkContext.defaultParallelism), fuzzy)
+        return df.join(texts, df[text_col].eqNullSafe(texts[TEXT]), how="left").drop(TEXT)
 
 
 def local_cleaner(
@@ -348,80 +361,3 @@ def local_cleaner(
     cutoff = cutoff if cutoff is not None else FUZZY_SCORE_CUTOFF
     key = ("cleaner", tuple(index.items()), cutoff)
     return per_gateway(key, lambda: LocalCleaner(index, cutoff))
-
-
-def with_all_locations_fuzzy(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "all_locations_list",
-    index: dict[str, str] | None = None,
-    cutoff: float | None = None,
-) -> DataFrame:
-    """F2 with tier-3 fuzzy: the full scan runs once per *distinct* text —
-    the reference's lru_cache insight (cleaner_v6.py:37, 180) lifted to the
-    text level. The distinct texts' tokens (posexplode) resolve through the
-    3-tier cascade once per distinct token, and the (token → canonical)
-    mapping is collected to the driver when this is called
-    (``lookup._distinct_token_mapping``); the returned plan caches nothing.
-    The tokenization and the cascade come from the shared cleaner
-    (:func:`local_cleaner`); only the literal path's map lookup, which
-    carries this call's mapping, is built per call.
-
-    Adaptive application (mirrors operators.lookup.resolve_tokens_fuzzy):
-    a mapping of at most ``MAPPING_LITERAL_MAX`` entries is inlined as a
-    literal map and the whole scan becomes ONE zero-shuffle expression
-    over ``df`` — identical in shape to the tier-1/2
-    :func:`extract_all_locations_expr`, with fuzzy hits included in the
-    map. (``df`` is the distinct-text frame when called from
-    with_nlp_enrichment, so the per-row tokenize regex runs once per
-    distinct text.) A larger mapping becomes a driver-local relation, and
-    the scan falls back to explode → broadcast join → ordered
-    re-aggregation, joined back to ``df`` on the text."""
-    from .lookup import (
-        MAPPING_LITERAL_MAX,
-        _distinct_token_mapping,
-        canonical_map_frame,
-        canonical_map_literal,
-    )
-
-    cleaner = local_cleaner(index, cutoff)
-    texts = df.select(F.col(text_col).alias(TEXT)).distinct()
-    exploded = texts.select(TEXT, F.posexplode_outer(cleaner.tokens).alias("__pos", "__tok"))
-    mapping = _distinct_token_mapping(exploded, "__tok", cleaner.index, cleaner.cutoff)
-    if len(mapping) <= MAPPING_LITERAL_MAX:
-        m = canonical_map_literal(mapping)
-        hits = hits_expr(F.transform("__toks", lambda t: F.element_at(m, t)))
-        out = df.withColumn(TEXT, F.col(text_col)).select("*", cleaner.tokens)
-        out = out.withColumn(out_col, hits).drop("__toks")
-        return out if text_col == TEXT else out.drop(TEXT)
-
-    mf = canonical_map_frame(df.sparkSession, mapping)
-    resolved = exploded.join(
-        F.broadcast(mf.withColumnRenamed("__canonical", "__canon")),
-        exploded["__tok"] == mf["__t"],
-        "left",
-    ).drop("__t")
-    rebuilt = (
-        resolved.groupBy(F.col(TEXT).alias("__ftxt"))
-        .agg(
-            hits_expr(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(
-                                F.col("__canon").isNotNull(),
-                                F.struct(F.col("__pos"), F.col("__canon").alias("loc")),
-                            )
-                        )
-                    ),
-                    lambda x: x["loc"],
-                )
-            ).alias(out_col)
-        )
-    )
-    joined = df.join(
-        rebuilt, df[text_col].eqNullSafe(rebuilt["__ftxt"]), how="left"
-    ).drop("__ftxt")
-    return joined.withColumn(
-        out_col, F.coalesce(F.col(out_col), F.array().cast("array<string>"))
-    )

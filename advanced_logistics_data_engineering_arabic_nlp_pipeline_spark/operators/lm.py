@@ -174,8 +174,8 @@ def resolve_lm(spark, lm: "tuple[DataFrame, DataFrame] | str"):
 
 
 # literal-map expression ceiling: a 4096-entry map expression is ~100 KB
-# of plan — fine; an uncapped vocabulary is not (the lookup.py
-# MAPPING_LITERAL_MAX discipline, scaled for LM vocabularies)
+# of plan — fine; an uncapped vocabulary is not (Spark looks a key up in
+# a literal map by scanning its keys, so each row pays the map's size)
 EXPR_MODEL_MAX_VOCAB = 4096
 
 

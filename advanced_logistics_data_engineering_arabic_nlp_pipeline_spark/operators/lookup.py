@@ -11,21 +11,20 @@ Per-token resolution cascade (cleaner_v6.py:180-208):
 
 Tiers 1-2 are pure Column expressions (map lookup + regexp_extract) — they
 run JVM-side inside codegen and vectorize for free. Tier 3 is the engine's
-only Python hot path: an Arrow-batched pandas UDF applied via the
-distinct-resolve pattern (E4) — the Spark idiom for the reference's
-``lru_cache`` insight: each *distinct* string is resolved exactly once, in
-one linear plan whose resolved (token → canonical) rows are collected to
-the driver, then applied back as a literal map or, for a large mapping,
-one broadcast join. At 100 TB the distinct token set is orders of
-magnitude smaller than the row count, and the resolved mapping smaller
-still. For texts already in the driver (a small service request, a
-report's distinct texts), the same cascade runs per token inside two
-projections over driver-local relations and scores the misses in the
-driver — no Spark job, no Python worker, about 80 py4j round trips per
-request whatever the dictionary's size. Both paths read one set of
-cascade expressions per (dictionary, cutoff), built once by
-:class:`LocalTokenResolver` and shared through ``extract.local_cleaner``;
-the inputs, miss forms and order are each defined once, below.
+only Python hot path. The cascade runs per token inside projections over
+a frame of texts, and callers run it once per *distinct* text (E4, the
+Spark idiom for the reference's ``lru_cache``): ``extract`` dedupes the
+texts, and tier 3 scores each batch's misses with one memo. Over a
+DataFrame of any size the batch is an Arrow batch of one pandas UDF in a
+lazy plan: building it runs no Spark job and collects nothing to the
+driver. For texts already in the driver (a small service request, a
+report's distinct texts) the misses are scored in the driver between two
+projections over driver-local relations — no Spark job, no Python worker,
+about 80 py4j round trips per request whatever the dictionary's size.
+Both paths read one set of cascade expressions per (dictionary, cutoff),
+built once by :class:`LocalTokenResolver` and shared through
+``extract.local_cleaner``; the inputs, miss forms, scoring rule and order
+are each defined once, below.
 
 Fuzzy scoring mirrors rapidfuzz ``token_sort_ratio`` (public algorithm):
 sort whitespace tokens, then Indel similarity = 2*LCS/(len_a+len_b) * 100.
@@ -211,72 +210,59 @@ def fuzzy_best_match(
 
 
 def fuzzy_lookup_udf(index: dict[str, str] | None = None, cutoff: float = FUZZY_SCORE_CUTOFF):
-    """pandas UDF over the cascade's two miss forms (:func:`fuzzy_misses`):
-    (``__norm`` miss, ``__snorm`` miss) → ``struct(__fzn, __fzs)``, each
-    the canonical of :func:`fuzzy_resolve` (None for a null input). One
-    memo per Arrow batch serves both columns, mirroring the reference's
-    lru_cache, so a token with no op prefix is scored once; cross-row
-    dedupe is done by the distinct before it."""
+    """pandas UDF over each row's two miss-form arrays (:func:`fuzzy_misses`,
+    ``__tk.__kn`` and ``__tk.__ks``) → ``struct(__fzn, __fzs)``, two arrays
+    of the tokens' fuzzy results (:func:`miss_scorer`). One memo per Arrow
+    batch serves both arrays, mirroring the reference's lru_cache, so a
+    token seen again in the batch, or with no op prefix, is scored once;
+    cross-row dedupe of whole texts is done by the distinct before it."""
     index = index if index is not None else build_variant_index()
     variants = list(index.keys())
 
-    @pandas_udf("__fzn string, __fzs string")
-    def _fuzzy(norms: pd.Series, snorms: pd.Series) -> pd.DataFrame:
-        # unbounded: a batch is bounded, and a bounded LRU would evict the
-        # first column's keys before the second column reads them
-        @lru_cache(maxsize=None)
-        def one(norm: str | None) -> str | None:
-            return fuzzy_resolve(norm, index, variants, cutoff)
+    @pandas_udf("__fzn array<string>, __fzs array<string>")
+    def _fuzzy(kns: pd.Series, kss: pd.Series) -> pd.DataFrame:
+        score = miss_scorer(index, variants, cutoff)
+        return pd.DataFrame({"__fzn": score(kns), "__fzs": score(kss)})
 
-        return pd.DataFrame({"__fzn": norms.map(one), "__fzs": snorms.map(one)})
+    return _fuzzy
 
-    # nondeterministic, else Catalyst pushes the result filter and this UDF below the distinct
-    return _fuzzy.asNondeterministic()
+
+def miss_scorer(index: dict[str, str], variants: list[str], cutoff: float) -> Callable:
+    """A function from rows of miss forms (one array of them per text) to
+    rows of their fuzzy results (:func:`fuzzy_resolve`, None for a null
+    form), shared by the pandas UDF (one per Arrow batch) and the
+    driver-local path (one per request). Its memo is unbounded: each
+    scorer serves one bounded batch, and a bounded LRU would evict the
+    first array's keys before the second array reads them."""
+
+    @lru_cache(maxsize=None)
+    def one(form: str | None) -> str | None:
+        return fuzzy_resolve(form, index, variants, cutoff)
+
+    return lambda rows: [[one(k) for k in forms] for forms in rows]
 
 
 def fuzzy_resolve(
     norm: str | None, index: dict[str, str], variants: list[str], cutoff: float
 ) -> str | None:
-    """THE per-string tier-3 rule, shared by the pandas UDF and the
-    driver-local cascade (:class:`LocalTokenResolver`): a normalized string
-    shorter than FUZZY_MIN_LEN never fuzzy-matches; otherwise the best
-    variant's canonical, or None. ``variants`` is ``list(index)``, passed in
-    so callers build it once."""
+    """THE per-string tier-3 rule, which :func:`miss_scorer` applies for
+    both paths: a normalized string shorter than FUZZY_MIN_LEN never
+    fuzzy-matches; otherwise the best variant's canonical, or None.
+    ``variants`` is ``list(index)``, passed in so callers build it once."""
     if not norm or len(norm) < FUZZY_MIN_LEN:
         return None
     m = fuzzy_best_match(norm, variants, cutoff)
     return index[m] if m is not None else None
 
 
-# ── E4: distinct-resolve-join over a tokens DataFrame ───────────────────────
-
-# Resolved-mapping size up to which the collected (token → canonical) map
-# is inlined as a literal map expression instead of broadcast-joined back.
-# A literal map rides the serialized plan to executors exactly like a
-# broadcast variable but skips the broadcast-exchange build, the join node
-# and, in the location scan, the explode and re-aggregation shuffle — for
-# the dominant workload shape (human-entered location strings:
-# tens-to-hundreds of distinct resolvable tokens) the mapping applies as a
-# zero-shuffle Column expression. The threshold is deliberately SMALL:
-# Spark evaluates element_at on a map literal as a LINEAR scan
-# (ArrayBasedMapData has no hash index), so per-row lookup cost is
-# O(entries) — measured: a 59k-entry literal turned the all-unique stress
-# case into minutes of string compares, where the broadcast hash join's
-# O(1) probe took seconds. 512 entries × a few string equals is well under
-# the cost of the tier-2 regex the row already paid; above that one
-# broadcast join against the mapping as a driver-local relation takes over
-# (same asymptotics as any small-dim join).
-MAPPING_LITERAL_MAX = 512
-
-
 # ── The cascade, defined once for the distributed and the driver-local path ─
 #
-# Each piece is a function of a field accessor ``f`` (name → Column):
-# ``F.col`` over a frame of distinct raw tokens ``__t`` (the distributed
-# path, :func:`_resolved_tokens`), or a token struct's ``getField`` inside a
-# ``transform`` over each text's tokens (the driver-local path,
-# :class:`LocalTokenResolver`). Both run the cascade inputs, tier-3 scoring
-# of the two miss forms into ``__fzn``/``__fzs``, then the cascade order.
+# Each piece is a function of a field accessor ``f`` (name → Column)
+# inside a ``transform`` over each text's tokens: a token struct's
+# ``getField``, and for ``__fzn``/``__fzs`` the token's slot in the arrays
+# of tier-3 results (:class:`LocalTokenResolver`). Both paths run the
+# cascade inputs, tier-3 scoring of the two miss forms, then the cascade
+# order.
 
 def cascade_inputs(index: dict[str, str], m: Column) -> list[list[tuple[str, Callable]]]:
     """The cascade's inputs for a raw token ``__t`` as stages of (field,
@@ -340,144 +326,59 @@ def _staged(tokens: Column, stages: list[list[tuple[str, Callable]]]) -> Column:
     return arr
 
 
-def _resolved_tokens(
-    tokens_df: DataFrame,
-    token_col: str,
-    index: dict[str, str],
-    cutoff: float,
-) -> DataFrame:
-    """The resolved (``__t``, ``__canonical``) rows for every *distinct* raw
-    token of ``tokens_df``, as one linear plan: distinct → repartition →
-    cascade inputs → one fuzzy UDF over the miss forms → cascade order,
-    each read from the shared :class:`LocalTokenResolver` for ``index``
-    and ``cutoff`` (``extract.local_cleaner``), so no expression is built
-    per call. The whole cascade, not just the fuzzy UDF, runs once per
-    distinct raw token. The repartition matters: the distinct's output is
-    small in bytes, so AQE would coalesce it to ~1 partition and run the
-    regex-heavy tiers and the scorer single-threaded on a large distinct
-    set. The UDF still sees every distinct token, but a non-miss row
-    reaches it as two nulls and costs no scoring."""
-    from .extract import local_cleaner
-
-    r = local_cleaner(index, cutoff).resolver
-    d = tokens_df.select(F.col(token_col).alias("__t")).distinct()
-    d = d.repartition(tokens_df.sparkSession.sparkContext.defaultParallelism)
-    for name, c in r.inputs:
-        d = d.withColumn(name, c)
-    d = d.select("*", r.scores).select("*", "__fz.*")
-    return d.select("__t", r.canonical).filter(r.resolved)
-
-
-def _distinct_token_mapping(
-    tokens_df: DataFrame,
-    token_col: str,
-    index: dict[str, str],
-    cutoff: float,
-) -> dict[str, str]:
-    """(token → canonical) for the resolved distinct raw tokens of
-    ``tokens_df``, collected to the driver by one Spark job — the same
-    cascade as the driver-local path (:class:`LocalTokenResolver`). The
-    mapping stays small by construction because every entry fuzzy- or
-    exact-matches a finite dictionary at cutoff ≥ 82. The cascade order
-    is the reference's (:func:`cascade_expr`)."""
-    rows = _resolved_tokens(tokens_df, token_col, index, cutoff).collect()
-    return {r["__t"]: r["__canonical"] for r in rows}
-
-
-def canonical_map_literal(mapping: dict[str, str]) -> Column:
-    """A (token → canonical) mapping as one literal MAP column, built in
-    one gateway call (``variant_map_expr``); the mapping is at most
-    ``MAPPING_LITERAL_MAX`` entries."""
-    return variant_map_expr(mapping)
-
-
-def canonical_map_frame(spark, mapping: dict[str, str]) -> DataFrame:
-    """A (token → canonical) mapping as a driver-local (``__t``,
-    ``__canonical``) relation, the build side of the join path."""
-    rows = [{"__t": t, "__canonical": c} for t, c in mapping.items()]
-    return local_frame(spark, rows, "__t string, __canonical string")
-
-
 class LocalTokenResolver:
     """The token cascade's expressions for one dictionary and cutoff, built
-    once here (each build is dozens of py4j calls) and read by both paths.
-    :func:`_resolved_tokens` applies the cascade inputs, the fuzzy pandas
-    UDF over the miss forms and the cascade order to a distributed frame of
-    tokens. The driver-local path (``extract.LocalCleaner.clean``) runs the
-    same inputs, miss forms and order in two plans over driver-local
-    relations (``sources.local``), one ``collect()`` each:
+    once here (each build is dozens of py4j calls) and read by both paths
+    (``extract.LocalCleaner``), which differ only in where the misses are
+    scored:
 
-    1. ``staged``, over the texts: each text's ``tokens`` as structs of
-       cascade inputs and miss forms. The driver then scores the distinct
-       miss forms with :func:`fuzzy_resolve` instead of the UDF and builds
-       the second relation (:meth:`scored`);
-    2. ``order``, over that relation: the cascade order per token, which
-       ``extract`` turns into the hits and the rest of the NLP block.
+    1. ``staged``, over the texts: each text's tokens in ``__tk``, as
+       structs of the cascade inputs and the two miss forms;
+    2. in ``__fz``, a struct of two arrays aligned with ``__tk``, the
+       misses' fuzzy results. The distributed path computes them with
+       ``fuzzy``, one pandas UDF over each row's miss-form arrays. The
+       driver-local path collects ``staged``, scores the misses in the
+       driver and builds a driver-local relation of both columns
+       (:meth:`scored`). Both score through :func:`miss_scorer`;
+    3. ``order``, over ``__tk`` and ``__fz``: the cascade order per token,
+       which ``extract`` turns into the hits and the rest of the NLP block.
 
-    Only Project steps run over those relations, which Catalyst folds into
-    the local data, so no Spark job runs and no Python worker starts; a
-    warm request costs about 80 py4j round trips, whatever the
-    dictionary's size. Per-call data travels in the relations, never in
-    the expressions, so one resolver serves every call, from any thread;
-    get it from ``extract.local_cleaner``."""
+    On the driver-local path only Project steps run over the relations
+    (``sources.local``), which Catalyst folds into the local data, so no
+    Spark job runs and no Python worker starts; a warm request costs about
+    80 py4j round trips, whatever the dictionary's size. Per-call data
+    travels in the frames, never in the expressions, so one resolver
+    serves every call, from any thread; get it from
+    ``extract.local_cleaner``."""
 
     def __init__(self, index: dict[str, str], cutoff: float, m: Column, tokens: Column) -> None:
         self.index, self.cutoff = index, cutoff
         self.variants = list(index)
-        inputs, misses = cascade_inputs(index, m), fuzzy_misses()
-        self.inputs = [(name, build(F.col)) for stage in inputs for name, build in stage]
-        kn, ks = (build(F.col) for _, build in misses)
-        self.scores = fuzzy_lookup_udf(index, cutoff)(kn, ks).alias("__fz")
-        self.canonical = cascade_expr(F.col).alias("__canonical")
-        self.resolved = F.col("__canonical").isNotNull()
-        self.staged = _staged(tokens, [*inputs, misses]).alias("__tk")
-        self.order = F.transform("__tk", lambda x: cascade_expr(x.getField))
+        self.staged = _staged(tokens, [*cascade_inputs(index, m), fuzzy_misses()]).alias("__tk")
+        scores = fuzzy_lookup_udf(index, cutoff)(F.col("__tk.__kn"), F.col("__tk.__ks"))
+        self.fuzzy = scores.alias("__fz")
+        self.order = F.transform("__tk", lambda x, i: cascade_expr(
+            lambda n: F.col("__fz")[n][i] if n in ("__fzn", "__fzs") else x[n]
+        ))
 
     def scored(self, spark, text_col: str, texts: list, staged: list) -> DataFrame:
-        """The relation ``order`` reads: each of ``texts`` in ``text_col``,
-        and in ``__tk`` its tokens' ``__sraw``/``__r12``/``__r12s`` from
-        ``staged`` (the collected ``staged`` column) with ``__fzn``/
-        ``__fzs``, the fuzzy result of each miss form. Each distinct
-        non-null miss form is scored once, as one memo serves both forms in
+        """The relation ``order`` reads on the driver-local path: each of
+        ``texts`` in ``text_col``, in ``__tk`` its tokens' ``__sraw``/
+        ``__r12``/``__r12s`` from ``staged`` (the collected ``staged``
+        column), and in ``__fz`` the fuzzy results of their miss forms.
+        One memo serves the whole call, as one serves an Arrow batch in
         the distributed path's UDF."""
-        keys = {k for toks in staged for x in toks for k in (x["__kn"], x["__ks"])}
-        keys.discard(None)
-        fz = {k: fuzzy_resolve(k, self.index, self.variants, self.cutoff) for k in keys}
-        tokens = [
-            [{"__sraw": x["__sraw"], "__r12": x["__r12"], "__r12s": x["__r12s"],
-              "__fzn": fz.get(x["__kn"]), "__fzs": fz.get(x["__ks"])} for x in toks]
-            for toks in staged
+        score = miss_scorer(self.index, self.variants, self.cutoff)
+        fzn = score([[x["__kn"] for x in toks] for toks in staged])
+        fzs = score([[x["__ks"] for x in toks] for toks in staged])
+        kept = ("__sraw", "__r12", "__r12s")
+        rows = [
+            {text_col: text, "__tk": [{k: x[k] for k in kept} for x in toks],
+             "__fz": {"__fzn": n, "__fzs": s}}
+            for text, toks, n, s in zip(texts, staged, fzn, fzs)
         ]
-        fields = ", ".join(f"{n}: string" for n in ("__sraw", "__r12", "__r12s", "__fzn", "__fzs"))
-        rows = [{text_col: text, "__tk": toks} for text, toks in zip(texts, tokens)]
-        return local_frame(spark, rows, f"{text_col} string, __tk array<struct<{fields}>>")
-
-
-def resolve_tokens_fuzzy(
-    tokens_df: DataFrame,
-    token_col: str = "token",
-    out_col: str = "canonical",
-    index: dict[str, str] | None = None,
-    cutoff: float = FUZZY_SCORE_CUTOFF,
-) -> DataFrame:
-    """Full 3-tier resolution of a token column, fuzzy included (see
-    :func:`_distinct_token_mapping` for the cascade contract). The mapping
-    is collected when this is called; the returned plan holds no cascade
-    work and no cached frame.
-
-    The mapping is applied back to the token rows adaptively: up to
-    ``MAPPING_LITERAL_MAX`` entries it is inlined as a literal map
-    expression (zero joins, zero exchanges — the common human-entered-text
-    shape); above, it is broadcast-joined as a driver-local relation (the
-    general small-dim shape). Both paths are row-for-row identical: an
-    unresolved or null token gets a null ``out_col``."""
-    index = index if index is not None else build_variant_index()
-    mapping = _distinct_token_mapping(tokens_df, token_col, index, cutoff)
-    if len(mapping) <= MAPPING_LITERAL_MAX:
-        m = canonical_map_literal(mapping)
-        return tokens_df.withColumn(out_col, F.element_at(m, F.col(token_col)))
-    mf = canonical_map_frame(tokens_df.sparkSession, mapping)
-    mf = mf.withColumnRenamed("__canonical", out_col)
-    return tokens_df.join(
-        F.broadcast(mf), tokens_df[token_col] == mf["__t"], "left"
-    ).drop("__t")
+        tk = ", ".join(f"{k}: string" for k in kept)
+        fz = "__fzn: array<string>, __fzs: array<string>"
+        return local_frame(
+            spark, rows, f"{text_col} string, __tk array<struct<{tk}>>, __fz struct<{fz}>"
+        )

@@ -37,11 +37,10 @@ Scale design:
 - The pairs and stats reports hold at most one row per (pair of)
   canonical location(s), so they sort in one partition: no range
   exchange and no sampling job.
-- Above the local limit, the fuzzy variant also resolves the distinct
-  texts' tokens at build time: one collected Spark job (the E4
-  distinct-token cascade, bounded by the distinct tokens) whose mapping
-  the distinct-text pass applies as a literal map or one broadcast join.
-  That path caches nothing either.
+- Above the local limit, the enrichment is one lazy plan over the
+  distinct texts, joined back on the text: building it runs nothing
+  beyond the probe, and the fuzzy variant scores each text's misses in
+  one pandas UDF when the plan runs. That path caches nothing either.
 """
 
 from __future__ import annotations

@@ -24,15 +24,19 @@ analysis and ~80 py4j round trips, whatever the dictionary's size
 miss forms and order, the per-string fuzzy rule and the hit assembly are
 shared with the distributed path, so both give the same answers (pinned
 by tests/test_service.py and tests/test_enrichment.py). A larger
-batch is one distributed :func:`clean_texts_df` pass. The limit sits at
-half the measured crossover. Best of two warm runs, fuzzy on, 4 vCPUs,
-local against distributed: texts whose tokens are all unique (the worst
-case for driver-side scoring) take 0.45 against 3.80 s at 256 texts,
-1.54 against 3.51 s at 2,000, 3.00 against 4.52 s at 4,000 and 5.87
-against 6.34 s at 8,000; messy texts with repeating tokens take 0.84
-against 3.44 s at 2,000 and 2.41 against 5.04 s at 8,000. The local pass
-is single-threaded and grows ~0.75 ms per all-unique text, while the
-distributed pass is ~3.5 s of fixed cost.
+batch is one distributed :func:`clean_texts_df` pass, a lazy plan whose
+fuzzy block runs once per distinct text. Best of two warm runs, fuzzy on,
+4 vCPUs, local against distributed, measured by hand: texts whose tokens
+are all unique (the worst case for driver-side scoring) take 0.15
+against 1.00 s at 256 texts, 0.53 against 1.24 s at 1,000, 0.73 against
+1.16 s at 2,000, 1.52 against 1.39 s at 4,000 and 3.16 against 1.88 s at
+8,000; messy texts cycling through 300 distinct ones take 0.15 against
+1.20 s at 2,000 and 0.15 against 1.25 s at 8,000 (the local pass cleans
+each distinct text once). The local pass is single-threaded and grows
+~0.4 ms per all-unique text, while the distributed pass is ~1 s of fixed
+cost, so the two meet near 4,000 all-unique texts: the limit sits at
+that crossover, not at half of it, until a benchmark workload
+re-derives it.
 """
 
 from __future__ import annotations
@@ -59,12 +63,15 @@ def clean_texts_df(
     """F5 shared codepath (api.py:210-225 = Main.py:406-425): adds
     all_locations, main_location, trip_type for a text column, read from
     the shared cleaner (``extract.local_cleaner``), so no NLP expression is
-    built per call. With fuzzy on, the token cascade runs when this is
-    called (one collected Spark job, ``extract.with_all_locations_fuzzy``);
-    nothing stays cached, so a long-lived caller has nothing to clean up
-    after its action."""
+    built per call. The plan is lazy: building it runs no Spark job. With
+    fuzzy on, the block runs once per distinct text, its misses scored by
+    one pandas UDF, and joins back (``LocalCleaner.enrich_distinct``);
+    with fuzzy off it is one projection chain per row. Nothing is cached,
+    so a long-lived caller has nothing to clean up after its action."""
     cleaner = local_cleaner(index, cutoff)
-    return cleaner.enrich(df.withColumn(TEXT, F.col(text_col)), fuzzy).drop(TEXT)
+    if fuzzy:
+        return cleaner.enrich_distinct(df, text_col, True)
+    return cleaner.enrich(df.withColumn(TEXT, F.col(text_col)), False).drop(TEXT)
 
 
 def config_from_env(env: dict[str, str] | None = None) -> dict:

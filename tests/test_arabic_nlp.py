@@ -12,12 +12,12 @@ from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.ext
     categorize_trip_type_expr,
     end_location_clean_expr,
     extract_all_locations_expr,
-    with_all_locations_fuzzy,
 )
 from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.lookup import (
     fuzzy_best_match,
     token_sort_ratio,
 )
+from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.service import clean_texts_df
 from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
     build_variant_index,
 )
@@ -138,14 +138,14 @@ def test_fuzzy_pipeline_readme_string(spark):
         [(1, "تشغيل 12 ساعه مطارررر القاهره وعوده"), (2, "الهرم + المطار و وسط البلد"), (3, None)],
         ["id", "txt"],
     )
-    out = with_all_locations_fuzzy(df, "txt").orderBy("id").collect()
-    assert out[0]["all_locations_list"] == ["Cairo Airport"]
-    assert out[1]["all_locations_list"] == [
+    out = clean_texts_df(df, "txt", fuzzy=True).orderBy("id").collect()
+    assert out[0]["all_locations"] == ["Cairo Airport"]
+    assert out[1]["all_locations"] == [
         "Pyramids of Giza",
         "Cairo Airport",
         "Downtown Cairo",
     ]
-    assert out[2]["all_locations_list"] == []
+    assert out[2]["all_locations"] == []
 
 
 EXPECTED_TYPES = {

@@ -9,6 +9,9 @@ import pytest
 
 from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import extract
 from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.plans.trips import GOLDEN_TEXTS
+from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
+    build_variant_index,
+)
 from tests.test_service import _near_misses
 
 OUT = ["t", "locs", "End_Location_Clean", "Trip_Type"]
@@ -31,10 +34,17 @@ def _plan(df, fuzzy: bool) -> str:
 
 @pytest.mark.parametrize("fuzzy", [True, False])
 def test_local_enrichment_matches_distributed(spark, monkeypatch, fuzzy):
-    """The golden corpus, seeded near-miss spellings and None/''/blank/
-    digits-only texts, each twice, and a non-string text column: the same
-    (text, locs, End_Location_Clean, Trip_Type) on both paths."""
-    texts = list(GOLDEN_TEXTS) + _near_misses(7, 120) + [None, "", "   ", "12345", "٠١٢٣"]
+    """The golden corpus, seeded near-miss spellings, texts around
+    dictionary variants, the bare variants and None/''/blank/digits-only
+    texts, each twice, and a non-string text column: the same (text, locs,
+    End_Location_Clean, Trip_Type) on both paths."""
+    variants = list(build_variant_index())
+    around = [f"من {v} الى المطار" for v in variants[:12]] + ["مطارر ثم هيلتو", "xyz only"]
+    bare = variants[:20] + ["xyz-no-match", "قريب من " + variants[0], "ذهاب وعودة الهرم"]
+    texts = (
+        list(GOLDEN_TEXTS) + _near_misses(7, 120) + around + bare
+        + [None, "", "  ", "   ", "12345", "٠١٢٣"]
+    )
     df = spark.createDataFrame([(t,) for t in texts + texts], "t string")
     assert "HashAggregate" not in _plan(df, fuzzy)
     assert _enriched(df, fuzzy) == _distributed(df, fuzzy, monkeypatch)
@@ -61,8 +71,9 @@ def test_enrichment_limit_boundary(spark, monkeypatch, fuzzy):
 
 def test_second_distributed_build_builds_no_nlp_expression(spark, monkeypatch):
     """The distributed paths read the shared cleaner's expressions: once it
-    exists, building clean_texts_df or with_nlp_enrichment's fallback builds
-    none of the NLP block's expressions again."""
+    exists, building clean_texts_df or with_nlp_enrichment's fallback, with
+    fuzzy on or off, builds none of the NLP block's expressions again (the
+    fuzzy pandas UDF included)."""
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark import service
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import lookup
 
@@ -70,7 +81,7 @@ def test_second_distributed_build_builds_no_nlp_expression(spark, monkeypatch):
     service.clean_texts_df(df, "t", fuzzy=False)
     builders = (
         "extract_all_locations_expr", "end_location_clean_expr", "categorize_trip_type_expr",
-        "cascade_inputs", "fuzzy_lookup_udf",
+        "cascade_inputs", "fuzzy_misses", "cascade_expr", "fuzzy_lookup_udf",
     )
     built = []
     for module in (extract, lookup, service):
@@ -81,7 +92,8 @@ def test_second_distributed_build_builds_no_nlp_expression(spark, monkeypatch):
                     return _fn(*a, **k)
 
                 monkeypatch.setattr(module, name, counted)
-    service.clean_texts_df(df, "t", fuzzy=False)
-    monkeypatch.setitem(extract.ENRICH_LOCAL_MAX_TEXTS, False, 0)
-    assert "HashAggregate" in _plan(df, False)
+    for fuzzy in (False, True):
+        service.clean_texts_df(df, "t", fuzzy=fuzzy)
+        monkeypatch.setitem(extract.ENRICH_LOCAL_MAX_TEXTS, fuzzy, 0)
+        assert "HashAggregate" in _plan(df, fuzzy)
     assert built == []

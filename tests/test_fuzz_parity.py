@@ -89,93 +89,3 @@ def test_tokenize_fuzz_spark_vs_duckdb(spark):
         (t, s, d) for t, s, d in zip(corpus, spark_out, duck_out) if s != d
     ]
     assert not mismatches, f"{len(mismatches)} mismatches; first: {mismatches[0]!r}"
-
-
-def _storage_ids(spark) -> set:
-    return {x.id() for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-
-
-def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_resolve_literal_and_join_paths_agree(spark, monkeypatch):
-    """resolve_tokens_fuzzy has two application paths — a literal-map
-    expression up to MAPPING_LITERAL_MAX resolved entries, a broadcast join
-    above — that must be row-for-row identical. Force each path on the same
-    token set (dictionary variants + misses + null) and compare. Neither
-    path may leave a cached block behind (a storage snapshot diff, since
-    other suite tests may hold session-lifetime blocks)."""
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import lookup
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
-        build_variant_index,
-    )
-
-    variants = list(build_variant_index().keys())
-    toks = (
-        variants[:20]
-        + ["xyz-no-match", "قريب من " + variants[0], "", "12345"]
-        + [None]
-    )
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(toks)], "i int, token string"
-    )
-
-    def run():
-        before = _storage_ids(spark)
-        out = lookup.resolve_tokens_fuzzy(df, "token")
-        rows = sorted((r["i"], r["canonical"]) for r in out.collect())
-        assert _storage_ids(spark) <= before
-        return rows, _physical_plan(out)
-
-    monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 10_000)
-    lit_rows, lit_plan = run()
-    monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 0)
-    join_rows, join_plan = run()
-    # each forced run took the path it was forced onto
-    assert "Join" not in lit_plan, lit_plan
-    assert "BroadcastHashJoin" in join_plan, join_plan
-    assert lit_rows == join_rows
-    assert any(c is not None for _, c in lit_rows), "no token resolved"
-
-
-def test_extract_literal_and_join_paths_agree(spark, monkeypatch):
-    """ADVICE r4: with_all_locations_fuzzy has its own literal-vs-join fork
-    (literal rebuilds hits with transform/element_at, join path with
-    posexplode + ordered re-aggregation) which was only reachable at >512
-    resolved tokens — force both paths over the same texts and require
-    row-for-row equality, nulls/empties included, and no cached block left
-    behind by either."""
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import extract, lookup
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
-        build_variant_index,
-    )
-
-    variants = list(build_variant_index().keys())
-    texts = (
-        [f"من {v} الى المطار" for v in variants[:12]]
-        + ["مطارر ثم هيلتو", "xyz only", "", "  ", None, "ذهاب وعودة الهرم"]
-    )
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i int, text string"
-    )
-
-    def run():
-        before = _storage_ids(spark)
-        out = extract.with_all_locations_fuzzy(df, "text", "locs")
-        rows = sorted(
-            (r["i"], tuple(r["locs"]) if r["locs"] is not None else None)
-            for r in out.collect()
-        )
-        assert _storage_ids(spark) <= before
-        return rows, _physical_plan(out)
-
-    monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 10_000)
-    lit_rows, lit_plan = run()
-    monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 0)
-    join_rows, join_plan = run()
-    # each forced run took the path it was forced onto
-    assert "Join" not in lit_plan, lit_plan
-    assert "BroadcastHashJoin" in join_plan, join_plan
-    assert lit_rows == join_rows
-    assert any(locs for _, locs in lit_rows), "no text resolved any location"

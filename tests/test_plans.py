@@ -85,7 +85,7 @@ def test_expression_builder_memos_return_same_tree(spark):
     a1 = local_cleaner(idx, 82)
     a2 = local_cleaner(build_variant_index(), 82)
     assert a1 is a2
-    assert a1.tier12 is a2.tier12 and a1.resolver.inputs is a2.resolver.inputs
+    assert a1.tier12 is a2.tier12 and a1.resolver.fuzzy is a2.resolver.fuzzy
     assert local_cleaner(idx, 90) is not a1
     assert local_cleaner(build_variant_index({"A": ["الهرم"]}), 82) is not a1
 
@@ -179,32 +179,26 @@ def test_report_cycle_runs_each_build_as_its_probe(spark, sf_dir, tmp_path, spar
         assert 0 < build <= probes[fuzzy[name]], (name, jobs, probes)
 
 
-def test_fuzzy_cascade_scores_each_distinct_token_once(spark):
-    """The distributed token cascade is one linear plan whose fuzzy scorer
-    runs once per distinct token: exactly one ArrowEvalPython node, above
-    the token distinct's HashAggregate. Its resolved-only filter is
-    deterministic in the distinct's key, so if the scorer were deterministic
-    Catalyst would push the filter, scorer included, below the distinct and
-    score every input row as well."""
-    from pyspark.sql import functions as F
-
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import extract, lookup
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.sources.dictionary import (
-        build_variant_index,
-    )
+def test_fuzzy_cascade_scores_each_distinct_token_once(spark, spark_jobs):
+    """The distributed fuzzy block is one lazy plan: building
+    clean_texts_df(fuzzy=True) runs no Spark job, and its fuzzy scorer runs
+    once per distinct text (its memo then scores each distinct token of an
+    Arrow batch once): exactly one ArrowEvalPython node, above the text
+    distinct's HashAggregate."""
+    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark import service
 
     texts = spark.createDataFrame(
         [("الهرم + مطارر",), ("تشغيل هيلتو",), ("xyz",), (None,)], "text string"
     )
-    tokens = texts.select(
-        F.posexplode_outer(extract.trip_tokens_expr(F.col("text"))).alias("pos", "token")
-    )
-    df = lookup._resolved_tokens(tokens, "token", build_variant_index(), lookup.FUZZY_SCORE_CUTOFF)
+    service.clean_texts_df(texts, "text", True)  # warm the shared cleaner
+    df, jobs = spark_jobs(lambda: service.clean_texts_df(texts, "text", True), "build")
+    assert jobs == 0, "building the plan must run no Spark job"
     lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
     evals = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
     aggs = [i for i, line in enumerate(lines) if "HashAggregate(" in line]
     assert len(evals) == 1, "the fuzzy scorer must run exactly once"
-    assert aggs and evals[0] < min(aggs), "the fuzzy scorer must sit above the token distinct"
-    assert dict(df.collect()) == {
-        "الهرم": "Pyramids of Giza", "مطارر": "Cairo Airport", "تشغيل هيلتو": "Helton Hotel",
+    assert aggs and evals[0] < min(aggs), "the fuzzy scorer must sit above the text distinct"
+    assert {r["text"]: list(r["all_locations"]) for r in df.collect()} == {
+        "الهرم + مطارر": ["Pyramids of Giza", "Cairo Airport"],
+        "تشغيل هيلتو": ["Helton Hotel"], "xyz": [], None: [],
     }

@@ -164,12 +164,11 @@ def test_api_endpoint_functions_reference_shapes(spark, tmp_path):
             api.create_app(svc)
 
 
-def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_path):
-    """ADVICE r4: on the broadcast-join path the cascade's cut-point caches
-    used to outlive the request in a long-lived service. The cascade caches
-    nothing, so no request may add a persisted RDD, and the caller cleans
-    up nothing (force the join path via MAPPING_LITERAL_MAX=0)."""
-    from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators import lookup
+def test_distributed_requests_leave_no_cached_blocks(spark, tmp_path):
+    """ADVICE r4: the distributed cascade's cut-point caches used to
+    outlive the request in a long-lived service. The distributed path is
+    one lazy plan that caches nothing, so no request may add a persisted
+    RDD, and the caller cleans up nothing."""
     from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.service import CleaningService
 
     # other suite tests may hold session-lifetime blocks (e.g. RDD
@@ -178,35 +177,20 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     def storage_ids():
         return {x.id() for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
-    # the plan is out of reach here: count builds of the join path's
-    # broadcast side instead, to prove the forced runs took that path
-    map_frames = []
-    canonical_map_frame = lookup.canonical_map_frame
-
-    def counting_map_frame(spark, mapping):
-        map_frames.append(len(mapping))
-        return canonical_map_frame(spark, mapping)
-
-    monkeypatch.setattr(lookup, "canonical_map_frame", counting_map_frame)
-
     before = storage_ids()
-    monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 0)
     svc = CleaningService(spark)
     out = svc.clean_batch(["من الهرم الى المطار", "مطارر", None])
     assert len(out["results"]) == 3
     assert storage_ids() <= before
-    assert map_frames == []
 
-    # a small batch is now cleaned in the driver and never reaches the join
-    # path; a batch above the local size limit and run_cycle still do. This
-    # batch (one unique number token per text) builds a ~4,100-entry
-    # mapping, so it takes the join path even at the default limit.
+    # a small batch is cleaned in the driver; a batch above the local size
+    # limit (one unique number token per text) and run_cycle take the
+    # distributed path
     big = [f"من الهرم الى المطار {i}" for i in range(LOCAL_MAX_TEXTS)] + ["مطارر", None]
     out = svc.clean_batch(big)
     assert len(out["results"]) == len(big)
     assert out["results"][-2]["main_location"] == "Cairo Airport"
     assert storage_ids() <= before
-    assert len(map_frames) == 1
 
     def fetch(page: int):
         rows = [{"serialId": 1, "confirm_status": True, "end_location": "مطارر القاهره"}]
@@ -215,27 +199,14 @@ def test_clean_batch_join_path_leaves_no_cached_blocks(spark, monkeypatch, tmp_p
     cyc = svc.run_cycle(fetch, str(tmp_path / "cycle"))
     assert cyc["records"] == 1
     assert storage_ids() <= before
-    assert len(map_frames) == 2
 
-    # literal path too: a batch above the local size limit (so distributed)
-    # whose few distinct tokens make a mapping of at most 512 entries
-    literals = []
-    canonical_map_literal = lookup.canonical_map_literal
-
-    def counting_map_literal(mapping):
-        literals.append(len(mapping))
-        return canonical_map_literal(mapping)
-
-    monkeypatch.setattr(lookup, "canonical_map_literal", counting_map_literal)
-    monkeypatch.setattr(lookup, "MAPPING_LITERAL_MAX", 512)
+    # a distributed batch of a few distinct texts, each repeated
     golden = [t for t in GOLDEN_TEXTS if t is not None]
     repeated = (golden * (LOCAL_MAX_TEXTS // len(golden) + 2))[: LOCAL_MAX_TEXTS + 1]
     out = svc.clean_batch(repeated)
     assert len(out["results"]) == len(repeated)
     assert out["results"][0]["main_location"] == "Cairo Airport"
     assert storage_ids() <= before
-    assert len(literals) == 1 and 0 < literals[0] <= 512
-    assert len(map_frames) == 2
 
 
 def test_api_fuzzy_default_defers_to_service_config(spark):
@@ -267,12 +238,13 @@ def test_api_fuzzy_default_defers_to_service_config(spark):
 
 # ── driver-local evaluation of small requests ───────────────────────────────
 
-def _near_misses(seed: int, n: int) -> list[str]:
-    """Seeded misspelt trip texts: a dictionary variant with one typist's
-    edit (doubled, dropped or swapped letter, alef/ta-marbuta/tatweel
-    forms), an optional operational prefix and filler words around it."""
+def _near_misses(seed: int, n: int, locations: dict[str, list[str]] = LOCATIONS) -> list[str]:
+    """Seeded misspelt trip texts: a variant of ``locations`` with one
+    typist's edit (doubled, dropped or swapped letter, alef/ta-marbuta/
+    tatweel forms), an optional operational prefix and filler words around
+    it."""
     rng = random.Random(seed)
-    variants = [v for vs in LOCATIONS.values() for v in vs]
+    variants = [v for vs in locations.values() for v in vs]
     out = []
     for _ in range(n):
         w = rng.choice(variants)
@@ -293,6 +265,16 @@ def _near_misses(seed: int, n: int) -> list[str]:
             parts.append(rng.choice(["وعوده", "ذهاب وعودة", "12 ساعه"]))
         out.append(" ".join(p for p in parts if p))
     return out
+
+
+def _random_dictionary() -> dict[str, list[str]]:
+    """2,000 places, each with one random 5-12-letter Latin variant."""
+    rng = random.Random(17)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    return {
+        f"Place {i}": ["".join(rng.choice(letters) for _ in range(rng.randint(5, 12)))]
+        for i in range(2000)
+    }
 
 
 def _answers(out: dict) -> list[tuple]:
@@ -342,6 +324,16 @@ def test_local_path_matches_clean_texts_df(spark):
     ref12 = _reference(spark, svc, list(GOLDEN_TEXTS) + messy, fuzzy=False)
     got = _answers(svc.clean_batch(list(GOLDEN_TEXTS) + messy, fuzzy=False))
     assert got == [ref12[t] for t in list(GOLDEN_TEXTS) + messy]
+
+    # a dictionary that is not the built-in one: 2,000 random variants and
+    # seeded near-misses of them
+    locations = _random_dictionary()
+    big = CleaningService(spark, locations=locations)
+    texts = _near_misses(29, 200, locations) + list(GOLDEN_TEXTS[:8]) + edge
+    ref = _reference(spark, big, texts, fuzzy=True)
+    got = _answers(big.clean_batch(texts))
+    assert got == [ref[t] for t in texts]
+    assert sum(loc.startswith("Place ") for _, loc, _, _ in got) >= 50, "few near-misses resolved"
 
 
 def test_small_requests_run_no_spark_job(spark, spark_jobs):
@@ -431,12 +423,7 @@ def test_requests_make_a_fixed_number_of_round_trips(spark, monkeypatch):
         LocalCleaner,
     )
 
-    rng = random.Random(17)
-    letters = "abcdefghijklmnopqrstuvwxyz"
-    big = {
-        f"Place {i}": ["".join(rng.choice(letters) for _ in range(rng.randint(5, 12)))]
-        for i in range(2000)
-    }
+    big = _random_dictionary()
     texts = list(GOLDEN_TEXTS[:6]) + _near_misses(23, 2)
     counts, cold = {}, {}
     for name, locations in (("built-in", None), ("2,000 variants", big)):
