@@ -8,26 +8,29 @@ category parity requires keeping that quirk.
 The NLP block (locs + clean location + trip type) is built once per
 (dictionary, cutoff): :func:`local_cleaner` returns the shared
 :class:`LocalCleaner`, which holds the block's Column expressions over one
-private text column (``TEXT``), and its ``lookup.LocalTokenResolver``
-holds the token cascade's. Two paths read them:
+private text column (``TEXT``), the token cascade's included. Two paths
+read them:
 
-- :meth:`LocalCleaner.clean`, for up to ``LOCAL_MAX_TEXTS`` texts already
-  in the driver, with no Spark job: the service's small requests and
-  ``with_nlp_enrichment``'s distinct texts (up to
-  ``ENRICH_LOCAL_MAX_TEXTS``). With fuzzy on it runs two driver-local
+- :meth:`LocalCleaner.clean`, for texts already in the driver: the
+  service's requests and ``with_nlp_enrichment``'s distinct texts (up to
+  ``ENRICH_LOCAL_MAX_TEXTS``). Up to ``LOCAL_MAX_TEXTS`` distinct texts
+  run in the driver with no Spark job: with fuzzy on two driver-local
   plans (per-token cascade inputs, then hits and trip type), with fuzzy
-  off one;
+  off one. More distinct texts than that take one distributed
+  :meth:`LocalCleaner.enrich` pass over the distinct texts;
 - :meth:`LocalCleaner.enrich`, over a DataFrame of any size, as one lazy
-  plan that runs no Spark job until its caller's action:
-  ``service.clean_texts_df`` and ``with_nlp_enrichment``'s fallback, both
-  once per distinct text through :meth:`LocalCleaner.enrich_distinct`
-  (``clean_texts_df`` with fuzzy off runs per row). Its location scan is
-  either the tier-1/2 expression (``extract_all_locations_expr``:
-  zero-shuffle, whole-stage codegen, SQL-mirrorable, the oracle-checked
-  path) or, with tier-3 fuzzy, the per-token cascade with each row's
-  misses scored by one pandas UDF (operators.lookup).
+  plan that runs no Spark job until its caller's action: that batch
+  pass, and ``service.clean_texts_df`` and ``with_nlp_enrichment``'s
+  fallback, both once per distinct text through
+  :meth:`LocalCleaner.enrich_distinct` (``clean_texts_df`` with fuzzy
+  off runs per row). Its location scan is either the tier-1/2
+  expression (``extract_all_locations_expr``: zero-shuffle, whole-stage
+  codegen, SQL-mirrorable, the oracle-checked path) or, with tier-3
+  fuzzy, the per-token cascade with each row's misses scored by one
+  pandas UDF (operators.lookup).
 
-The fuzzy scans, local and distributed, share one hits expression
+Both scans read each token's two forms from ``lookup.token_forms``. The
+fuzzy scans, local and distributed, share one hits expression
 (``LocalCleaner.hits``): the tokenization (``trip_tokens_expr``), the
 token cascade and its scoring rule (``operators.lookup``) and the hit
 assembly (``hits_expr``).
@@ -48,7 +51,6 @@ from ..functions.arabic import (
     is_round_trip,
     normalize_arabic,
     scrub_round_trip,
-    strip_op_prefix,
     title_first_two_words,
     tokenize_trip,
 )
@@ -58,11 +60,13 @@ from ..sources.local import local_frame
 
 _DIGITS_ONLY = "^[0-9٠-٩]+$"
 
-# The most texts one :class:`LocalCleaner` call takes: a /clean or
-# /clean/batch request of up to this many texts runs in the driver with no
-# Spark job. Set at half the crossover with the service's distributed path
-# as it was then; the lazy distributed path meets the driver at about this
-# size (service module docstring). A benchmark workload is to re-derive it.
+# The most distinct texts :meth:`LocalCleaner.clean` cleans in the driver:
+# a /clean or /clean/batch request of up to this many distinct texts runs
+# no Spark job, a larger one is one distributed pass over its distinct
+# texts. Set at half the crossover with the service's distributed path as
+# it was then; that pass now meets the driver near 2,500-3,000 all-unique
+# texts, below this limit (service module docstring). A benchmark workload
+# is to re-derive it.
 LOCAL_MAX_TEXTS = 4096
 
 # with_nlp_enrichment enriches in the driver up to this many distinct texts,
@@ -86,26 +90,18 @@ def extract_all_locations_expr(
     ``array_distinct`` keeps first-occurrence order, matching the
     reference's ``if loc not in locations: locations.append(loc)``.
 
-    Normalization is staged through per-token structs so each candidate
-    form (token / op-prefix-stripped token) is normalized exactly once —
-    HOF lambdas are interpreted without subexpression elimination, so the
-    naive per-tier formulation would re-normalize per tier. ``m`` is
+    Each token's two forms (``lookup.token_forms``) are built in one
+    ``transform`` and resolved in the next, so each is normalized exactly
+    once — HOF lambdas are interpreted without subexpression elimination,
+    so the naive per-tier formulation would re-normalize per tier. ``m`` is
     ``index``'s map (``variant_map_expr``) when the caller already holds
     it."""
-    from .lookup import tier12_expr
+    from .lookup import tier12_expr, token_forms
 
     m = m if m is not None else variant_map_expr(index)
-    staged = F.transform(
-        trip_tokens_expr(text),
-        lambda t: F.struct(
-            normalize_arabic(t).alias("n"),
-            F.when(
-                strip_op_prefix(t) != "", normalize_arabic(strip_op_prefix(t))
-            ).alias("s"),
-        ),
-    )
+    forms = F.transform(trip_tokens_expr(text), token_forms)
     resolved = F.transform(
-        staged,
+        forms,
         lambda x: F.coalesce(tier12_expr(x["n"], index, m), tier12_expr(x["s"], index, m)),
     )
     return hits_expr(resolved)
@@ -261,34 +257,41 @@ def hits_expr(resolved: Column) -> Column:
 class LocalCleaner:
     """The NLP block (all_locations, main_location, trip_type) for one
     dictionary and cutoff. Its Column expressions (hundreds of py4j calls)
-    are built once here, over the private text column ``TEXT``, and
-    ``resolver`` (``lookup.LocalTokenResolver``) holds the token
-    cascade's. Two paths read them:
+    are built once here, over the private text column ``TEXT``, the token
+    cascade's from ``operators.lookup``'s builders: ``staged`` puts each
+    text's tokens in ``__tk``, as structs of the cascade inputs and the
+    two miss forms; ``fuzzy`` scores the misses with one pandas UDF into
+    ``__fz``, and ``hits`` applies the cascade order to both. Two paths
+    read them:
 
-    - :meth:`clean`, for texts already in the driver, with no Spark job:
-      the texts become a driver-local relation (``sources.local``) and
-      only Project steps run over it, so Catalyst evaluates all of it in
-      the driver. With fuzzy on that is two plans, one ``collect()`` each:
-      the resolver's ``staged`` returns each text's per-token cascade
-      inputs and miss forms; the driver scores the misses, and a second
-      relation of per-token tier-1/2 and fuzzy results gets the cascade
-      order, the hits, ``__norm``, main_location and trip_type. A warm
-      request costs about 80 py4j round trips (the four plans before
-      took ~180). Callers bound the input (``LOCAL_MAX_TEXTS``);
+    - :meth:`clean`, for texts already in the driver. Up to
+      ``LOCAL_MAX_TEXTS`` distinct texts it runs no Spark job: the texts
+      become a driver-local relation (``sources.local``) and only Project
+      steps run over it, so Catalyst evaluates all of it in the driver.
+      With fuzzy on that is two plans, one ``collect()`` each: ``staged``
+      returns each text's per-token cascade inputs and miss forms; the
+      driver scores the misses (``lookup.scored``), and a second relation
+      of per-token tier-1/2 and fuzzy results gets the cascade order, the
+      hits, ``__norm``, main_location and trip_type. A warm request costs
+      about 80 py4j round trips (the four plans before took ~180). More
+      distinct texts take one distributed :meth:`enrich` pass over them;
     - :meth:`enrich`, over a DataFrame of any size, the same steps as
-      one lazy projection chain, the misses scored by the resolver's
-      pandas UDF; :meth:`enrich_distinct` runs it once per distinct text.
+      one lazy projection chain, the misses scored by ``fuzzy``;
+      :meth:`enrich_distinct` runs it once per distinct text.
 
     Holds no per-call state: get one from :func:`local_cleaner` and share
     it across threads."""
 
     def __init__(self, index: dict[str, str], cutoff: float) -> None:
-        from .lookup import LocalTokenResolver
+        from .lookup import cascade_order_expr, fuzzy_lookup_udf, staged_tokens_expr
 
         t, locs = F.col(TEXT), F.col("all_locations")
         m = variant_map_expr(index)
-        self.resolver = LocalTokenResolver(index, cutoff, m, trip_tokens_expr(t))
-        self.hits = hits_expr(self.resolver.order).alias("all_locations")
+        self.index, self.cutoff = index, cutoff
+        self.staged = staged_tokens_expr(trip_tokens_expr(t), index, m).alias("__tk")
+        scores = fuzzy_lookup_udf(index, cutoff)(F.col("__tk.__kn"), F.col("__tk.__ks"))
+        self.fuzzy = scores.alias("__fz")
+        self.hits = hits_expr(cascade_order_expr()).alias("all_locations")
         self.tier12 = extract_all_locations_expr(t, index, m).alias("all_locations")
         self.norm = normalize_arabic(t).alias("__norm")
         # 1:1 Generate barrier: locs/norm feed many lazily-evaluated CASE
@@ -304,29 +307,37 @@ class LocalCleaner:
 
     def clean(self, spark, texts: list[str | None], fuzzy: bool) -> list:
         """(text, all_locations, main_location, trip_type) rows in input
-        order; at most ``LOCAL_MAX_TEXTS`` texts. Each distinct text is
-        cleaned once, and its row repeats for its repeats."""
+        order. Each distinct text is cleaned once, and its row repeats for
+        its repeats: up to ``LOCAL_MAX_TEXTS`` distinct texts in the
+        driver, more in one distributed :meth:`enrich` pass over the
+        distinct texts."""
+        from .lookup import scored
+
         distinct = list(dict.fromkeys(texts))
-        df = local_frame(spark, [{TEXT: t} for t in distinct], f"{TEXT} string")
-        if fuzzy:
-            staged = [r[0] for r in df.select(self.resolver.staged).collect()]
-            df = self.resolver.scored(spark, TEXT, distinct, staged)
-            df = df.select(TEXT, self.hits, self.norm)
+        if len(distinct) > LOCAL_MAX_TEXTS:
+            df = spark.createDataFrame([(t,) for t in distinct], f"{TEXT} string")
+            df = self.enrich(df, fuzzy).withColumnRenamed(TEXT, "text")
         else:
-            df = df.select(TEXT, self.tier12, self.norm)
-        rows = dict(zip(distinct, df.select(self.text, *self.block).collect()))
+            df = local_frame(spark, [{TEXT: t} for t in distinct], f"{TEXT} string")
+            if fuzzy:
+                staged = [r[0] for r in df.select(self.staged).collect()]
+                df = scored(spark, TEXT, distinct, staged, self.index, self.cutoff)
+                df = df.select(TEXT, self.hits, self.norm)
+            else:
+                df = df.select(TEXT, self.tier12, self.norm)
+            df = df.select(self.text, *self.block)
+        rows = dict(zip(distinct, df.collect()))
         return [rows[t] for t in texts]
 
     def enrich(self, df: DataFrame, fuzzy: bool) -> DataFrame:
         """``df``, whose text is in ``TEXT``, with all_locations,
         main_location and trip_type appended: one lazy projection chain
         per row. With fuzzy on it stages each text's tokens, scores their
-        misses in one pandas UDF and assembles the hits (the resolver's
-        ``staged``, ``fuzzy`` and ``order``)."""
+        misses in one pandas UDF and assembles the hits (``staged``,
+        ``fuzzy`` and ``hits``)."""
         keep = [F.col(f"`{c}`") for c in df.columns]
         if fuzzy:
-            r = self.resolver
-            df = df.select(*keep, r.staged).select(*keep, "__tk", r.fuzzy)
+            df = df.select(*keep, self.staged).select(*keep, "__tk", self.fuzzy)
             df = df.select(*keep, self.hits)
         else:
             df = df.select(*keep, self.tier12)

@@ -11,20 +11,25 @@ Per-token resolution cascade (cleaner_v6.py:180-208):
 
 Tiers 1-2 are pure Column expressions (map lookup + regexp_extract) — they
 run JVM-side inside codegen and vectorize for free. Tier 3 is the engine's
-only Python hot path. The cascade runs per token inside projections over
-a frame of texts, and callers run it once per *distinct* text (E4, the
-Spark idiom for the reference's ``lru_cache``): ``extract`` dedupes the
-texts, and tier 3 scores each batch's misses with one memo. Over a
-DataFrame of any size the batch is an Arrow batch of one pandas UDF in a
-lazy plan: building it runs no Spark job and collects nothing to the
-driver. For texts already in the driver (a small service request, a
-report's distinct texts) the misses are scored in the driver between two
-projections over driver-local relations — no Spark job, no Python worker,
-about 80 py4j round trips per request whatever the dictionary's size.
-Both paths read one set of cascade expressions per (dictionary, cutoff),
-built once by :class:`LocalTokenResolver` and shared through
-``extract.local_cleaner``; the inputs, miss forms, scoring rule and order
-are each defined once, below.
+only Python hot path. Each token is resolved in its two forms
+(:func:`token_forms`: the token, and the token with its operational prefix
+stripped), which both fuzzy settings read. The cascade runs per token
+inside projections over a frame of texts, and callers run it once per
+*distinct* text (E4, the Spark idiom for the reference's ``lru_cache``):
+``extract`` dedupes the texts, and tier 3 scores each batch's misses with
+one memo. Over a DataFrame of any size the batch is an Arrow batch of one
+pandas UDF in a lazy plan: building it runs no Spark job and collects
+nothing to the driver. That is the one distributed pass of a
+``/clean/batch`` of more than ``extract.LOCAL_MAX_TEXTS`` distinct texts,
+of ``service.clean_texts_df`` and of ``with_nlp_enrichment``'s fallback.
+For up to that many distinct texts already in the driver (a service
+request, a report's distinct texts) the misses are scored in the driver
+between two projections over driver-local relations (:func:`scored`) —
+no Spark job, no Python worker, about 80 py4j round trips per request
+whatever the dictionary's size. Both paths read one set of cascade
+expressions per (dictionary, cutoff), built once by
+``extract.LocalCleaner`` from the functions below, which define the
+forms, the staging, the scoring rule and the order once each.
 
 Fuzzy scoring mirrors rapidfuzz ``token_sort_ratio`` (public algorithm):
 sort whitespace tokens, then Indel similarity = 2*LCS/(len_a+len_b) * 100.
@@ -210,12 +215,13 @@ def fuzzy_best_match(
 
 
 def fuzzy_lookup_udf(index: dict[str, str] | None = None, cutoff: float = FUZZY_SCORE_CUTOFF):
-    """pandas UDF over each row's two miss-form arrays (:func:`fuzzy_misses`,
-    ``__tk.__kn`` and ``__tk.__ks``) → ``struct(__fzn, __fzs)``, two arrays
-    of the tokens' fuzzy results (:func:`miss_scorer`). One memo per Arrow
-    batch serves both arrays, mirroring the reference's lru_cache, so a
-    token seen again in the batch, or with no op prefix, is scored once;
-    cross-row dedupe of whole texts is done by the distinct before it."""
+    """pandas UDF over each row's two miss-form arrays
+    (:func:`staged_tokens_expr`, ``__tk.__kn`` and ``__tk.__ks``) →
+    ``struct(__fzn, __fzs)``, two arrays of the tokens' fuzzy results
+    (:func:`miss_scorer`). One memo per Arrow batch serves both arrays,
+    mirroring the reference's lru_cache, so a token seen again in the
+    batch, or with no op prefix, is scored once; cross-row dedupe of whole
+    texts is done by the distinct before it."""
     index = index if index is not None else build_variant_index()
     variants = list(index.keys())
 
@@ -255,130 +261,73 @@ def fuzzy_resolve(
     return index[m] if m is not None else None
 
 
-# ── The cascade, defined once for the distributed and the driver-local path ─
-#
-# Each piece is a function of a field accessor ``f`` (name → Column)
-# inside a ``transform`` over each text's tokens: a token struct's
-# ``getField``, and for ``__fzn``/``__fzs`` the token's slot in the arrays
-# of tier-3 results (:class:`LocalTokenResolver`). Both paths run the
-# cascade inputs, tier-3 scoring of the two miss forms, then the cascade
-# order.
+# ── The cascade over each token's two forms ─────────────────────────────────
 
-def cascade_inputs(index: dict[str, str], m: Column) -> list[list[tuple[str, Callable]]]:
-    """The cascade's inputs for a raw token ``__t`` as stages of (field,
-    builder) pairs, each builder a function of a field accessor that reads
-    only the token and earlier stages' fields: the normalized token and the
-    op-prefix-stripped raw token, the stripped token's normalized form, and
-    the tier-1/2 result of each normalized form (``m``: ``index``'s map)."""
-    return [
-        [("__norm", lambda f: normalize_arabic(f("__t"))),
-         ("__sraw", lambda f: strip_op_prefix(f("__t")))],
-        [("__snorm", lambda f: normalize_arabic(f("__sraw")))],
-        [
-            ("__r12", lambda f: tier12_expr(f("__norm"), index, m)),
-            ("__r12s", lambda f: tier12_expr(f("__snorm"), index, m)),
-        ],
-    ]
-
-
-def fuzzy_misses() -> list[tuple[str, Callable]]:
-    """The two forms tier 3 scores, as one stage of (field, builder) pairs
-    over the cascade inputs, each null where the cascade cannot reach its
-    fuzzy result: ``__kn`` is ``__norm`` when tiers 1-2 miss it, ``__ks``
-    is ``__snorm`` when they miss both forms and the stripped raw token is
-    non-empty."""
-    return [
-        ("__kn", lambda f: F.when(f("__r12").isNull(), f("__norm"))),
-        ("__ks", lambda f: F.when(
-            f("__r12").isNull() & f("__r12s").isNull() & (f("__sraw") != ""), f("__snorm"))),
-    ]
-
-
-def cascade_expr(f: Callable[[str], Column]) -> Column:
-    """The cascade order (cleaner_v6.py:180-208, 236-243): t1/t2 of the
-    token, t3 of the token, then — only if the raw op-prefix-stripped token
-    is non-empty — t1/t2 and t3 of the stripped form. ``__fzn``/``__fzs``
-    are the fuzzy results for the miss forms (null on a miss)."""
-    stripped = F.when(f("__sraw") != "", F.coalesce(f("__r12s"), f("__fzs")))
-    return F.coalesce(f("__r12"), f("__fzn"), stripped)
-
-
-def _staged(tokens: Column, stages: list[list[tuple[str, Callable]]]) -> Column:
-    """Each token of the array ``tokens`` as a struct of ``__t`` and the
-    stages' fields, one ``transform`` per stage (the first reads only the
-    token): HOF lambdas get no subexpression elimination, so each field is
-    computed once and later stages read it from the struct."""
-    first, *rest = stages
-    arr = F.transform(
-        tokens,
-        lambda t: F.struct(t.alias("__t"), *(b(lambda _: t).alias(n) for n, b in first)),
+def token_forms(t: Column) -> Column:
+    """The two forms the cascade resolves a raw token in (cleaner_v6.py:
+    180-208, 236-243), as ``struct(n, s)``: ``n`` is the normalized token
+    and ``s`` the normalized op-prefix-stripped token, null when stripping
+    leaves nothing (the oracle's ``token_struct``, ``plans.trips``)."""
+    stripped = strip_op_prefix(t)
+    return F.struct(
+        normalize_arabic(t).alias("n"),
+        F.when(stripped != "", normalize_arabic(stripped)).alias("s"),
     )
-    names = ["__t"] + [n for n, _ in first]
-    for stage in rest:
-        carried = list(names)
-        arr = F.transform(
-            arr,
-            lambda x: F.struct(
-                *(x[n].alias(n) for n in carried), *(b(x.getField).alias(n) for n, b in stage),
-            ),
-        )
-        names += [n for n, _ in stage]
-    return arr
 
 
-class LocalTokenResolver:
-    """The token cascade's expressions for one dictionary and cutoff, built
-    once here (each build is dozens of py4j calls) and read by both paths
-    (``extract.LocalCleaner``), which differ only in where the misses are
-    scored:
+def staged_tokens_expr(tokens: Column, index: dict[str, str], m: Column) -> Column:
+    """Each token of the array ``tokens`` as a struct of the cascade's
+    inputs: ``__r12``/``__r12s``, tiers 1-2 of its forms ``n``/``s``
+    (:func:`token_forms`; ``m`` is ``index``'s map), and the two forms
+    tier 3 scores, each null where the cascade cannot reach its fuzzy
+    result: ``__kn`` is ``n`` when ``__r12`` is null, ``__ks`` is ``s``
+    when both are. One ``transform`` per step: HOF lambdas get no
+    subexpression elimination, so each field is computed once and the
+    next step reads it from the struct."""
+    forms = F.transform(tokens, token_forms)
+    r12 = F.transform(forms, lambda x: F.struct(
+        x["n"].alias("n"), x["s"].alias("s"),
+        tier12_expr(x["n"], index, m).alias("__r12"),
+        tier12_expr(x["s"], index, m).alias("__r12s"),
+    ))
+    return F.transform(r12, lambda x: F.struct(
+        x["__r12"].alias("__r12"), x["__r12s"].alias("__r12s"),
+        F.when(x["__r12"].isNull(), x["n"]).alias("__kn"),
+        F.when(x["__r12"].isNull() & x["__r12s"].isNull(), x["s"]).alias("__ks"),
+    ))
 
-    1. ``staged``, over the texts: each text's tokens in ``__tk``, as
-       structs of the cascade inputs and the two miss forms;
-    2. in ``__fz``, a struct of two arrays aligned with ``__tk``, the
-       misses' fuzzy results. The distributed path computes them with
-       ``fuzzy``, one pandas UDF over each row's miss-form arrays. The
-       driver-local path collects ``staged``, scores the misses in the
-       driver and builds a driver-local relation of both columns
-       (:meth:`scored`). Both score through :func:`miss_scorer`;
-    3. ``order``, over ``__tk`` and ``__fz``: the cascade order per token,
-       which ``extract`` turns into the hits and the rest of the NLP block.
 
-    On the driver-local path only Project steps run over the relations
-    (``sources.local``), which Catalyst folds into the local data, so no
-    Spark job runs and no Python worker starts; a warm request costs about
-    80 py4j round trips, whatever the dictionary's size. Per-call data
-    travels in the frames, never in the expressions, so one resolver
-    serves every call, from any thread; get it from
-    ``extract.local_cleaner``."""
+def cascade_order_expr() -> Column:
+    """The cascade order (cleaner_v6.py:180-208, 236-243) per token of
+    ``__tk`` (:func:`staged_tokens_expr`): tiers 1-2 of the token, tier 3
+    of the token, then tiers 1-2 and tier 3 of its stripped form. ``__fz``
+    holds the miss forms' fuzzy results (null on a miss) in two arrays
+    aligned with ``__tk``. A stripped form that is empty is null, and so
+    are its results."""
+    fz = F.col("__fz")
+    return F.transform("__tk", lambda x, i: F.coalesce(
+        x["__r12"], fz["__fzn"][i], x["__r12s"], fz["__fzs"][i]
+    ))
 
-    def __init__(self, index: dict[str, str], cutoff: float, m: Column, tokens: Column) -> None:
-        self.index, self.cutoff = index, cutoff
-        self.variants = list(index)
-        self.staged = _staged(tokens, [*cascade_inputs(index, m), fuzzy_misses()]).alias("__tk")
-        scores = fuzzy_lookup_udf(index, cutoff)(F.col("__tk.__kn"), F.col("__tk.__ks"))
-        self.fuzzy = scores.alias("__fz")
-        self.order = F.transform("__tk", lambda x, i: cascade_expr(
-            lambda n: F.col("__fz")[n][i] if n in ("__fzn", "__fzs") else x[n]
-        ))
 
-    def scored(self, spark, text_col: str, texts: list, staged: list) -> DataFrame:
-        """The relation ``order`` reads on the driver-local path: each of
-        ``texts`` in ``text_col``, in ``__tk`` its tokens' ``__sraw``/
-        ``__r12``/``__r12s`` from ``staged`` (the collected ``staged``
-        column), and in ``__fz`` the fuzzy results of their miss forms.
-        One memo serves the whole call, as one serves an Arrow batch in
-        the distributed path's UDF."""
-        score = miss_scorer(self.index, self.variants, self.cutoff)
-        fzn = score([[x["__kn"] for x in toks] for toks in staged])
-        fzs = score([[x["__ks"] for x in toks] for toks in staged])
-        kept = ("__sraw", "__r12", "__r12s")
-        rows = [
-            {text_col: text, "__tk": [{k: x[k] for k in kept} for x in toks],
-             "__fz": {"__fzn": n, "__fzs": s}}
-            for text, toks, n, s in zip(texts, staged, fzn, fzs)
-        ]
-        tk = ", ".join(f"{k}: string" for k in kept)
-        fz = "__fzn: array<string>, __fzs: array<string>"
-        return local_frame(
-            spark, rows, f"{text_col} string, __tk array<struct<{tk}>>, __fz struct<{fz}>"
-        )
+def scored(
+    spark, text_col: str, texts: list, staged: list, index: dict[str, str], cutoff: float
+) -> DataFrame:
+    """The relation :func:`cascade_order_expr` reads on the driver-local
+    path: each of ``texts`` in ``text_col``, in ``__tk`` its tokens'
+    ``__r12``/``__r12s`` from ``staged`` (the collected
+    :func:`staged_tokens_expr` column), and in ``__fz`` the fuzzy results
+    of their miss forms. One memo serves the whole call, as one serves an
+    Arrow batch in the distributed path's UDF."""
+    score = miss_scorer(index, list(index), cutoff)
+    fzn = score([[x["__kn"] for x in toks] for toks in staged])
+    fzs = score([[x["__ks"] for x in toks] for toks in staged])
+    rows = [
+        {text_col: text, "__tk": [{"__r12": x["__r12"], "__r12s": x["__r12s"]} for x in toks],
+         "__fz": {"__fzn": n, "__fzs": s}}
+        for text, toks, n, s in zip(texts, staged, fzn, fzs)
+    ]
+    return local_frame(spark, rows, (
+        f"{text_col} string, __tk array<struct<__r12: string, __r12s: string>>, "
+        "__fz struct<__fzn: array<string>, __fzs: array<string>>"
+    ))

@@ -9,8 +9,8 @@ with /clean/batch actually one pass over the batch and /run-cycle actually
 working (landing source + enrichment instead of the broken import).
 
 /clean and /clean/batch requests of up to
-``operators.extract.LOCAL_MAX_TEXTS`` (4,096) texts run in the driver with
-no Spark job, like the reference's in-process cleaner
+``operators.extract.LOCAL_MAX_TEXTS`` (4,096) distinct texts run in the
+driver with no Spark job, like the reference's in-process cleaner
 (cleaner_v6.py:37,180), through the same shared ``extract.local_cleaner``
 that enriches each trips report's distinct texts: the texts become a
 driver-local relation, tiers 1-2 run as the engine's Column expressions
@@ -20,23 +20,25 @@ the fuzzy pandas UDF calls. No Python worker starts. With fuzzy on a
 request is two driver-local plans (per-token cascade inputs, then hits
 and trip type), with fuzzy off one; a warm request's time is their plan
 analysis and ~80 py4j round trips, whatever the dictionary's size
-(pinned by tests/test_service.py), not Spark jobs. The cascade inputs,
-miss forms and order, the per-string fuzzy rule and the hit assembly are
-shared with the distributed path, so both give the same answers (pinned
-by tests/test_service.py and tests/test_enrichment.py). A larger
-batch is one distributed :func:`clean_texts_df` pass, a lazy plan whose
-fuzzy block runs once per distinct text. Best of two warm runs, fuzzy on,
-4 vCPUs, local against distributed, measured by hand: texts whose tokens
-are all unique (the worst case for driver-side scoring) take 0.15
-against 1.00 s at 256 texts, 0.53 against 1.24 s at 1,000, 0.73 against
-1.16 s at 2,000, 1.52 against 1.39 s at 4,000 and 3.16 against 1.88 s at
-8,000; messy texts cycling through 300 distinct ones take 0.15 against
-1.20 s at 2,000 and 0.15 against 1.25 s at 8,000 (the local pass cleans
-each distinct text once). The local pass is single-threaded and grows
-~0.4 ms per all-unique text, while the distributed pass is ~1 s of fixed
-cost, so the two meet near 4,000 all-unique texts: the limit sits at
-that crossover, not at half of it, until a benchmark workload
-re-derives it.
+(pinned by tests/test_service.py), not Spark jobs. The token forms,
+cascade inputs, miss forms and order, the per-string fuzzy rule and the
+hit assembly are shared with the distributed path, so both give the same
+answers (pinned by tests/test_service.py and tests/test_enrichment.py).
+A batch of more distinct texts is one distributed pass over its
+distinct texts (``LocalCleaner.clean``, which makes the choice). Best of
+two warm runs, fuzzy on, 4 vCPUs, local against distributed, measured by
+hand (the distributed figures are the range of two later runs of today's
+pass, which no longer joins back or sorts): texts whose tokens are all
+unique (the worst case for driver-side scoring) take 0.15 against
+0.84-0.91 s at 256 texts, 0.53 against 0.75-0.85 s at 1,000, 0.73
+against 0.74-0.91 s at 2,000, 1.52 against 0.65-1.02 s at 4,000 and 3.16
+against 0.79-1.32 s at 8,000; messy texts cycling through 300 distinct
+ones take 0.15 against 0.50-0.64 s at 2,000 and 0.15 against 0.47-0.69 s
+at 8,000. The local pass is single-threaded and grows ~0.4 ms per
+all-unique text, while the distributed pass costs under 1 s, mostly
+fixed. Interleaved in the later runs, the local pass took 0.68 s against
+0.62 s at 3,000 all-unique texts: the two meet near 2,500-3,000, so the
+limit sits above the crossover until a benchmark workload re-derives it.
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import __version__
-from .operators.extract import LOCAL_MAX_TEXTS, TEXT, local_cleaner
+from .operators.extract import TEXT, local_cleaner
 from .sources import landing
 from .sources.dictionary import build_variant_index, load_locations_json
 
@@ -135,10 +137,11 @@ class CleaningService:
         self, texts: list[str | None], fuzzy: bool | None = None
     ) -> dict:
         """The whole batch in one pass, as the reference's /clean/batch
-        claims but doesn't do (api.py:301-304). Up to ``LOCAL_MAX_TEXTS``
+        claims but doesn't do (api.py:301-304), through
+        ``LocalCleaner.clean``: up to ``extract.LOCAL_MAX_TEXTS`` distinct
         texts the pass runs in the driver with no Spark job (the
-        reference's in-process serving); a larger batch is one distributed
-        DataFrame pass. Per-item ``processing_ms`` mirrors the reference's
+        reference's in-process serving); more distinct texts are one
+        distributed pass over the distinct texts. Per-item ``processing_ms`` mirrors the reference's
         response shape (api.py:301-311); because the batch is one pass,
         the per-item figure is the amortized share of the pass, not a
         per-row wall clock (which doesn't exist in a set-oriented engine)."""
@@ -150,11 +153,8 @@ class CleaningService:
         if bad:
             raise TypeError(f"texts must be str or None, got {type(bad[0]).__name__}")
         use_fuzzy = self.fuzzy_enabled if fuzzy is None else fuzzy
-        if len(texts) <= LOCAL_MAX_TEXTS:
-            cleaner = local_cleaner(self.index, self.fuzzy_cutoff)
-            collected = cleaner.clean(self.spark, texts, use_fuzzy)
-        else:
-            collected = self._clean_distributed(texts, use_fuzzy)
+        cleaner = local_cleaner(self.index, self.fuzzy_cutoff)
+        collected = cleaner.clean(self.spark, texts, use_fuzzy)
         total_ms = round((time.perf_counter() - t0) * 1000, 3)
         per_item_ms = round(total_ms / max(len(collected), 1), 3)
         results = [
@@ -168,13 +168,6 @@ class CleaningService:
             for r in collected
         ]
         return {"results": results, "total_ms": total_ms}
-
-    def _clean_distributed(self, texts: list[str | None], fuzzy: bool) -> list:
-        df = self.spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "idx int, text string"
-        )
-        out = clean_texts_df(df, "text", fuzzy, self.index, cutoff=self.fuzzy_cutoff)
-        return out.orderBy("idx").collect()
 
     def run_cycle(self, fetch_page: landing.PageFetcher, landing_dir: str) -> dict:
         """One fetch→land→enrich cycle (K4, fixed): land new pages, read the

@@ -134,8 +134,13 @@ def test_extract_all_locations_expr(spark):
 
 def test_fuzzy_pipeline_readme_string(spark):
     # README.md:103-104 manual fixture: only resolvable via tier-3 fuzzy
+    # (rows 1-3); then tokens that are only an operational prefix, whose
+    # stripped form is empty, or a prefix before an exact or a misspelt
+    # variant (rows 4-8)
     df = spark.createDataFrame(
-        [(1, "تشغيل 12 ساعه مطارررر القاهره وعوده"), (2, "الهرم + المطار و وسط البلد"), (3, None)],
+        [(1, "تشغيل 12 ساعه مطارررر القاهره وعوده"), (2, "الهرم + المطار و وسط البلد"), (3, None),
+         (4, "تشغيل"), (5, "ايجار + جولة"), (6, "جولة الهرم"), (7, "توصيلة مطاار"),
+         (8, "جولة مطارر القاهره")],
         ["id", "txt"],
     )
     out = clean_texts_df(df, "txt", fuzzy=True).orderBy("id").collect()
@@ -146,6 +151,13 @@ def test_fuzzy_pipeline_readme_string(spark):
         "Downtown Cairo",
     ]
     assert out[2]["all_locations"] == []
+    assert [(r["all_locations"], r["main_location"], r["trip_type"]) for r in out[3:]] == [
+        ([], "تشغيل", "Special Operations"),
+        ([], "ايجار +", "Special Operations"),
+        (["Pyramids of Giza"], "Pyramids of Giza", "Special Operations"),
+        (["Cairo Airport"], "Cairo Airport", "Airport Transfer"),
+        (["Cairo Airport"], "Cairo Airport", "Airport Transfer"),
+    ]
 
 
 EXPECTED_TYPES = {

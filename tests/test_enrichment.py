@@ -81,10 +81,15 @@ def test_second_distributed_build_builds_no_nlp_expression(spark, monkeypatch):
     service.clean_texts_df(df, "t", fuzzy=False)
     builders = (
         "extract_all_locations_expr", "end_location_clean_expr", "categorize_trip_type_expr",
-        "cascade_inputs", "fuzzy_misses", "cascade_expr", "fuzzy_lookup_udf",
+        "token_forms", "staged_tokens_expr", "cascade_order_expr", "tier12_expr",
+        "fuzzy_lookup_udf",
     )
+    modules = (extract, lookup, service)
+    # a listed name no module defines would be skipped below, and the test
+    # would check less than it says
+    assert [n for n in builders if not any(hasattr(m, n) for m in modules)] == []
     built = []
-    for module in (extract, lookup, service):
+    for module in modules:
         for name in builders:
             if hasattr(module, name):
                 def counted(*a, _fn=getattr(module, name), _name=name, **k):

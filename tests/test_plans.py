@@ -85,7 +85,7 @@ def test_expression_builder_memos_return_same_tree(spark):
     a1 = local_cleaner(idx, 82)
     a2 = local_cleaner(build_variant_index(), 82)
     assert a1 is a2
-    assert a1.tier12 is a2.tier12 and a1.resolver.fuzzy is a2.resolver.fuzzy
+    assert a1.tier12 is a2.tier12 and a1.fuzzy is a2.fuzzy
     assert local_cleaner(idx, 90) is not a1
     assert local_cleaner(build_variant_index({"A": ["الهرم"]}), 82) is not a1
 

@@ -9,9 +9,11 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
+from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.operators.extract import (
+    LOCAL_MAX_TEXTS,
+)
 from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.plans.trips import GOLDEN_TEXTS
 from advanced_logistics_data_engineering_arabic_nlp_pipeline_spark.service import (
-    LOCAL_MAX_TEXTS,
     CleaningService,
     clean_texts_df,
 )
@@ -183,9 +185,9 @@ def test_distributed_requests_leave_no_cached_blocks(spark, tmp_path):
     assert len(out["results"]) == 3
     assert storage_ids() <= before
 
-    # a small batch is cleaned in the driver; a batch above the local size
-    # limit (one unique number token per text) and run_cycle take the
-    # distributed path
+    # a small batch is cleaned in the driver; a batch of more distinct
+    # texts than the local limit (one unique number token per text) and
+    # run_cycle take the distributed path
     big = [f"من الهرم الى المطار {i}" for i in range(LOCAL_MAX_TEXTS)] + ["مطارر", None]
     out = svc.clean_batch(big)
     assert len(out["results"]) == len(big)
@@ -200,7 +202,8 @@ def test_distributed_requests_leave_no_cached_blocks(spark, tmp_path):
     assert cyc["records"] == 1
     assert storage_ids() <= before
 
-    # a distributed batch of a few distinct texts, each repeated
+    # a batch of more texts than the local limit but few distinct ones,
+    # each repeated, is cleaned in the driver
     golden = [t for t in GOLDEN_TEXTS if t is not None]
     repeated = (golden * (LOCAL_MAX_TEXTS // len(golden) + 2))[: LOCAL_MAX_TEXTS + 1]
     out = svc.clean_batch(repeated)
@@ -296,24 +299,30 @@ def _reference(spark, svc: CleaningService, texts, fuzzy: bool) -> dict:
 
 
 def test_local_path_matches_clean_texts_df(spark):
-    """Requests up to LOCAL_MAX_TEXTS are cleaned in the driver; every
-    answer must equal the distributed clean_texts_df over createDataFrame:
-    the golden corpus, seeded near-miss spellings, None/''/digits-only,
-    the empty batch, a batch of repeated texts, a batch of exactly the
-    limit (local) and one of the limit plus one (distributed)."""
+    """Requests of up to LOCAL_MAX_TEXTS distinct texts are cleaned in the
+    driver; every answer must equal the distributed clean_texts_df over
+    createDataFrame: the golden corpus, seeded near-miss spellings,
+    None/''/digits-only, the empty batch, a batch of repeated texts, a
+    batch of exactly the limit's distinct texts (local), one of the limit
+    plus one (distributed) and one of more texts than the limit drawn from
+    the golden corpus (local)."""
     svc = CleaningService(spark)
     edge = [None, "", "   ", "12345", "٠١٢٣", "x"]
     messy = _near_misses(7, 120)
-    at_limit = (list(GOLDEN_TEXTS) + edge + messy + _near_misses(11, LOCAL_MAX_TEXTS))[
-        :LOCAL_MAX_TEXTS
-    ]
+    pool = list(GOLDEN_TEXTS) + edge + messy + _near_misses(11, 3 * LOCAL_MAX_TEXTS)
+    at_limit = list(dict.fromkeys(pool))[:LOCAL_MAX_TEXTS]
+    assert len(set(at_limit)) == LOCAL_MAX_TEXTS
     over = at_limit + ["رايح مطاار القاهره"]
+    assert len(set(over)) == LOCAL_MAX_TEXTS + 1
+    golden = (list(GOLDEN_TEXTS) * (LOCAL_MAX_TEXTS // len(GOLDEN_TEXTS) + 2))[: LOCAL_MAX_TEXTS + 1]
     ref = _reference(spark, svc, over, fuzzy=True)
 
     assert svc.clean_batch([])["results"] == []
     with pytest.raises(TypeError):
         svc.clean_batch(["الهرم", 5])
-    for batch in (list(GOLDEN_TEXTS), edge, messy, messy[:5] * 3 + edge * 2, at_limit, over):
+    for batch in (
+        list(GOLDEN_TEXTS), edge, messy, messy[:5] * 3 + edge * 2, at_limit, over, golden
+    ):
         got = _answers(svc.clean_batch(batch))
         assert got == [ref[t] for t in batch]
     for t in list(GOLDEN_TEXTS[:4]) + edge[:4] + messy[:4]:
@@ -337,9 +346,10 @@ def test_local_path_matches_clean_texts_df(spark):
 
 
 def test_small_requests_run_no_spark_job(spark, spark_jobs):
-    """/clean and a small /clean/batch run no Spark job at all (fuzzy on:
-    the tier-3 misses are scored in the driver); a batch above the limit
-    takes the distributed path and does."""
+    """/clean, a small /clean/batch and a batch of more texts than the
+    limit but few distinct ones run no Spark job at all (fuzzy on: the
+    tier-3 misses are scored in the driver); a batch of more distinct
+    texts than the limit takes the distributed path and does."""
     svc = CleaningService(spark)
     out, jobs = spark_jobs(lambda: svc.clean_one("تشغيل 12 ساعه مطارررر القاهره وعوده"), "one")
     assert out["main_location"] == "Cairo Airport"
@@ -347,7 +357,14 @@ def test_small_requests_run_no_spark_job(spark, spark_jobs):
     out, jobs = spark_jobs(lambda: svc.clean_batch(list(GOLDEN_TEXTS[:8]) + [None, ""]), "batch")
     assert len(out["results"]) == 10
     assert jobs == 0
-    _, jobs = spark_jobs(lambda: svc.clean_batch(["الهرم"] * (LOCAL_MAX_TEXTS + 1)), "big")
+    out, jobs = spark_jobs(lambda: svc.clean_batch(["الهرم"] * (LOCAL_MAX_TEXTS + 1)), "repeated")
+    assert len(out["results"]) == LOCAL_MAX_TEXTS + 1
+    assert {r["main_location"] for r in out["results"]} == {"Pyramids of Giza"}
+    assert jobs == 0
+    big = [f"الهرم {i}" for i in range(LOCAL_MAX_TEXTS + 1)]
+    out, jobs = spark_jobs(lambda: svc.clean_batch(big), "big")
+    assert [r["original"] for r in out["results"]] == big
+    assert {r["main_location"] for r in out["results"]} == {"Pyramids of Giza"}
     assert jobs > 0
 
 
